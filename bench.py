@@ -13,10 +13,16 @@ Flags: ``--record-rows`` opts in to refreshing BENCH_ROWS.json (the
 round-record step passes it; a plain measurement run never mutates the
 committed reference, and a record run with drift outstanding writes
 BENCH_ROWS.pending.json instead so the flag persists until deliberately
-promoted). ``--warm-only`` builds every /tmp artifact (canonical table,
-kNN graph, pair tables, span table, profile, components, streaming
-sources) and exits without timing anything — run it once after a cold
-start so the first measured suite isn't an artifact-build discard.
+promoted). ``--warm-only`` builds every /tmp artifact and exits without
+timing anything — run it once after a cold start so the first measured
+suite isn't an artifact-build discard.
+
+Before the timed loop, one loop builds every artifact declared in
+``exact_spark.artifacts.ARTIFACTS`` (the canonical table, kNN graph, pair
+tables, span tables, profile, components, curation and release layers)
+and prints each one's name and build-or-serve seconds on stderr;
+``--warm-only`` also drives each streaming demo once to stage its replay
+source.
 """
 
 from __future__ import annotations
@@ -44,6 +50,10 @@ def main() -> None:
     # simply never set it.
     if os.path.isdir("/dev/shm"):
         os.environ.setdefault("SPARK_GRAFT_CKPT_DIR", "/dev/shm/exact_spark_ckpt")
+    # a crashed demo never reaches its cleanup; reclaim its leftovers
+    from exact_spark.streaming import sweep_stale_work_dirs
+
+    sweep_stale_work_dirs()
 
     # --wait-idle (VERDICT r10 item 8): block until the 1-min load average
     # drains below a threshold before doing ANY work, bounded by a timeout —
@@ -93,95 +103,24 @@ def main() -> None:
 
     spark.range(8).repartition(8).mapInPandas(_ident, "id long").count()
 
-    # warm the one-time canonical-table materialization OUTSIDE the timed
-    # loop: ~20 queries read this table, and without the warm-up its build
-    # cost lands in whichever query runs first, corrupting that query's
-    # number (the `canon_materialize` entry below then times the warm read)
-    from exact_spark.operators.timeseries import canonical_table_path
+    # build every declared per-corpus artifact OUTSIDE the timed loop, so
+    # no timed query pays for one: each artifact's build cost belongs to its
+    # registered builder query, not to whichever consumer runs first. A
+    # builder that reads another artifact builds it on demand, so the loop
+    # needs no order; the per-artifact seconds on stderr separate artifact
+    # build time from the serve time the timed loop records. The release
+    # diff also serves the manifest of the previous-release snapshot
+    # corpus, whose own artifact chain the last line builds.
+    from exact_spark import artifacts
 
-    canonical_table_path(spark, sf_dir)
+    def _warm(label: str, name: str, target: str) -> None:
+        t0 = time.perf_counter()
+        artifacts.path(name, spark, target)
+        print(f"# artifact {label}: {time.perf_counter() - t0:.3f}s", file=sys.stderr)
 
-    # same artifact discipline for the kNN graph: five serving operators
-    # read the materialized graph; construction cost is attributed to the
-    # builder query (sim_knn_graph) via this warm, not to whichever
-    # consumer happens to run first
-    from exact_spark.operators.similarity import knn_graph_path
-
-    knn_graph_path(spark, sf_dir)
-
-    # and for the near-dup pair-table artifacts: five serving operators
-    # (components, lsh_recall, winnow_recall, jaccard_sweep,
-    # method_agreement) read materialized pair tables; each method's
-    # construction cost is attributed to its builder query
-    # (dedup_minhash_lsh etc.) via this warm. Pairs warm BEFORE components:
-    # the components artifact build itself consumes the minhash pair table
-    from exact_spark.operators.dedup import _PAIR_METHODS, pair_table_path
-
-    for m in _PAIR_METHODS:
-        pair_table_path(spark, sf_dir, m)
-
-    # and the duplicated-span table: the scrub serves from it; the L-gram
-    # marking cost is attributed to the census builder query
-    # (dedup_substring_spans) via this warm
-    from exact_spark.operators.dedup import substring_span_path
-
-    substring_span_path(spark, sf_dir)
-
-    # and the contamination-span table (r10): decontaminate_scrub serves
-    # from it; the eval-gram membership-join cost is attributed to the
-    # census builder query (decontaminate_spans) via this warm
-    from exact_spark.operators.dedup import contam_span_path
-
-    contam_span_path(spark, sf_dir)
-
-    # and the document-profile artifact: three curation consumers
-    # (source_mix, quality_classifier, token_budget_select) read the
-    # materialized profile; the per-doc feature compute is attributed to
-    # the builder query (text_profile) via this warm
-    from exact_spark.operators.text import profile_table_path
-
-    profile_table_path(spark, sf_dir)
-
-    # and for the duplicate-group components artifact: three serving
-    # operators (survivorship, cluster purity, leakage-safe split) read the
-    # materialized groups; the CC fixpoint cost is attributed to the builder
-    # query (dedup_components) via this warm
-    from exact_spark.operators.dedup import components_path
-
-    components_path(spark, sf_dir)
-
-    # and the release-layer artifacts (r10): the manifest serves four reads
-    # (funnel, attribution, the dataset's ship set, tokens via the dataset)
-    # and the shipped dataset serves token accounting — derivation cost is
-    # attributed to the registered builders (corpus_release_manifest /
-    # corpus_release_dataset) via these warms. Manifest BEFORE dataset: the
-    # dataset artifact build consumes the manifest artifact
-    # and the composed curation manifest (r12): corpus_release_manifest —
-    # and through it the whole release layer — serves the quality x mix x
-    # decontamination decision from this artifact; the trio's build cost
-    # (two tokenization passes + the mix window) is attributed to the
-    # builder query (text_curation_manifest) via this warm. Curation
-    # BEFORE the release manifests: their builders consume it
-    from exact_spark.operators.dedup import curation_manifest_path
-
-    curation_manifest_path(spark, sf_dir)
-
-    from exact_spark.operators.dedup import (
-        release_dataset_path,
-        release_manifest_path,
-    )
-
-    release_manifest_path(spark, sf_dir)
-    release_dataset_path(spark, sf_dir)
-
-    # and the previous-release snapshot chain (r11): corpus_release_diff
-    # serves BOTH manifests from artifacts; the snapshot corpus is itself a
-    # per-corpus artifact whose own pair/components/span/curation/manifest
-    # chain builds once per release pair — warm it here so the timed diff
-    # measures the diff, not the snapshot pipeline build
-    from exact_spark.operators.dedup import prev_snapshot_dir
-
-    release_manifest_path(spark, prev_snapshot_dir(spark, sf_dir))
+    for name in artifacts.ARTIFACTS:
+        _warm(name, name, sf_dir)
+    _warm("relman@relsnap", "relman", artifacts.path("relsnap", spark, sf_dir))
 
     # and for the two KMeans coarse-quantizer fits (memoized driver-side
     # centers, exact_spark.artifacts.memo_put discipline): without the warm

@@ -13,6 +13,14 @@ protocol targets a shared object-store prefix instead of tempfile.
 Consumers re-read the artifact as plain parquet, so Catalyst still gets
 column pruning and predicate pushdown on every serve-side read.
 
+Every per-corpus artifact except the streaming demos' staged replay
+slices (which call :func:`materialize` directly) is DECLARED once
+(:func:`declare`, placed next to its builder, like
+``registry.register``): a name (the tag prefix), the source
+table its fingerprint is taken from, the builder, and the registered
+queries/helpers whose code salts the tag. :func:`path` and :func:`table`
+serve any declaration; :data:`ARTIFACTS` is the list a warm loop walks.
+
 Growth policy: artifact dirs live under ``tempfile.gettempdir()`` keyed
 by corpus fingerprint. A re-fingerprinted corpus (new data at the same
 path) simply abandons the old dir — this process never deletes published
@@ -34,6 +42,7 @@ import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
+from dataclasses import dataclass
 
 
 _MEMO_CAP = 32  # corpora simultaneously warm per driver process
@@ -343,3 +352,82 @@ def materialize(
         else:
             raise
     return str(base)
+
+
+# --- declared artifacts -------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Artifact:
+    name: str  # tag prefix: exact_spark_<name>_<salt>_<fp>
+    source: str  # table file under sf_dir whose fingerprint keys the artifact
+    frame: Callable | None  # (spark, sf_dir) -> DataFrame stored as plain parquet
+    build: Callable | None  # (spark, sf_dir, staging) -> None for a custom layout
+    queries: tuple[str, ...]  # registered specs folded into the salt
+    helpers: tuple  # extra functions folded into the salt
+
+
+#: name -> declaration, in declaration (import) order.
+ARTIFACTS: dict[str, Artifact] = {}
+#: name -> builder salt, computed on the first serve of each process (the
+#: transitive source walk costs 3-21 ms, too much to pay on every read).
+_SALTS: dict[str, str] = {}
+
+
+def declare(
+    name: str,
+    source: str,
+    frame: Callable | None = None,
+    *,
+    build: Callable | None = None,
+    queries: tuple[str, ...] = (),
+    helpers: tuple = (),
+) -> None:
+    """Declare the ``name`` artifact derived from ``sf_dir/source``.
+
+    Give exactly one builder: ``frame(spark, sf_dir)`` returns the
+    DataFrame to store as plain parquet; ``build(spark, sf_dir, staging)``
+    writes a custom layout (with _SUCCESS) itself. A builder that reads
+    another artifact serves it through :func:`table`, which builds it on
+    demand, so declarations carry no ordering. The tag's salt digests the
+    ``queries``' SQL and code, the ``helpers`` and the builder."""
+    if name in ARTIFACTS:
+        raise ValueError(f"duplicate artifact name {name!r}")
+    if (frame is None) == (build is None):
+        raise TypeError(f"artifact {name!r}: give exactly one of frame= or build=")
+    ARTIFACTS[name] = Artifact(
+        name, source, frame, build, tuple(queries), tuple(helpers)
+    )
+
+
+def path(name: str, spark, sf_dir: str) -> str:
+    """Path of the declared ``name`` artifact for ``sf_dir``, built on a
+    cache miss."""
+    a = ARTIFACTS[name]
+    salt = _SALTS.get(name)
+    if salt is None:
+        # helpers before the builder: a builder global patched at run time
+        # (a tracing wrapper) then cannot reorder the digest
+        salt = _SALTS[name] = builder_salt(
+            *a.queries, helpers=(*a.helpers, a.frame or a.build)
+        )
+
+    def build(staging: str) -> None:
+        if a.build is not None:
+            a.build(spark, sf_dir, staging)
+        else:
+            a.frame(spark, sf_dir).write.mode("overwrite").parquet(staging)
+
+    return materialize(
+        pathlib.Path(sf_dir).resolve() / a.source, f"{name}_{salt}", build
+    )
+
+
+def table(name: str, spark, sf_dir: str):
+    """The declared ``name`` artifact served as a (memoized, lazy) parquet
+    scan; content equals its builder's fresh output."""
+    from exact_spark.io import read_parquet_memo
+    from exact_spark.session import tune_session
+
+    tune_session(spark)
+    return read_parquet_memo(spark, path(name, spark, sf_dir))

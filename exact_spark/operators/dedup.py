@@ -16,9 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from exact_spark import io
+from exact_spark import artifacts, io
 from exact_spark.operators.text import _SQL_TOKS, tokens_col
-from exact_spark.registry import register
+from exact_spark.registry import REGISTRY, register
 from exact_spark.session import tune_session
 
 
@@ -649,7 +649,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     # near-dup edges from the per-corpus pair-table artifact (content
     # identical to the registered dedup_minhash_lsh builder — test-pinned)
-    lsh = pair_table(spark, sf_dir, "minhash_lsh")
+    lsh = artifacts.table("pairs_minhash_lsh", spark, sf_dir)
     docs = io.load(spark, sf_dir, "documents")
     norm = docs.select(
         "doc_id",
@@ -672,43 +672,19 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Three serving operators consume the duplicate groups (survivorship,
 # cluster purity, leakage-safe split). The CC fixpoint is the most
 # expensive dedup stage — O(log diameter) join-shuffle iterations — and at
-# 100 TB it is built ONCE per corpus and served for months, exactly like
-# the kNN graph (similarity.knn_graph_path) and the canonical job table
-# (timeseries.canonical_table_path). The registered dedup_components query
-# itself still constructs fresh: it IS the builder, so its bench time
-# stays honest, and consumers read the parquet artifact keyed by the
-# corpus fingerprint.
+# 100 TB it is built ONCE per corpus and served for months. The registered
+# dedup_components query itself still constructs fresh: it IS the builder,
+# so its bench time stays honest, and consumers read the parquet artifact
+# keyed by the corpus fingerprint. The salt also covers the CC kernel and
+# the minhash pair spec this builder consumes.
 
-
-def components_path(spark: SparkSession, sf_dir: str) -> str:
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    # builder-version salt (ADVICE r08): an oracle-SQL or Spark-builder
-    # change to dedup_components (or to the CC kernel / the minhash pair
-    # spec this builder consumes via pair_table) re-fingerprints the
-    # artifact so consumers can't serve stale groups
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "dupcc_"
-        + builder_salt(
-            "dedup_components",
-            _PAIR_BUILDER_QUERY["minhash_lsh"],
-            helpers=(connected_components,),
-        ),
-        lambda staging: dedup_components(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-
-
-def components_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate groups served from the materialized artifact (content is
-    identical to dedup_components — the builder — so every composed oracle
-    stays valid)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, components_path(spark, sf_dir))
+artifacts.declare(
+    "dupcc",
+    "documents.parquet",
+    dedup_components,
+    queries=("dedup_components", "dedup_minhash_lsh"),
+    helpers=(connected_components,),
+)
 
 
 # --- benchmark decontamination ----------------------------------------------
@@ -1103,38 +1079,20 @@ def text_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def curation_manifest_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the composed curation manifest ONCE per corpus
-    (VERDICT r11 item 1). text_curation_manifest composes the full trio
-    fresh — a quality tokenization pass, the language-mix window, and the
-    decontamination gram pass — and corpus_release_manifest (plus the
-    whole release layer derived from it) used to re-expand that lineage
-    per run: the single most expensive honest multi-scan left in the
-    registry (documents x5 in its r11 plan). Same artifacts.materialize
-    discipline as the kNN graph / components / pair tables: the
-    registered text_curation_manifest query remains the honest fresh
-    builder, consumers serve from the artifact, and the transitive
-    builder salt re-fingerprints on any change to the trio's code or
-    composed SQL so a stale manifest can never be served."""
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "curman_" + builder_salt("text_curation_manifest"),
-        lambda staging: text_curation_manifest(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-
-
-def curation_manifest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The curation manifest served from the per-corpus artifact (content
-    identical to text_curation_manifest — the builder — so every composed
-    oracle stays valid; pinned in tests/test_r12_ops.py)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, curation_manifest_path(spark, sf_dir))
+# The composed curation manifest, materialized ONCE per corpus (VERDICT r11
+# item 1). text_curation_manifest composes the full trio fresh — a quality
+# tokenization pass, the language-mix window, and the decontamination gram
+# pass — and corpus_release_manifest (plus the whole release layer derived
+# from it) used to re-expand that lineage per run: the single most
+# expensive honest multi-scan left in the registry (documents x5 in its r11
+# plan). The registered text_curation_manifest query remains the honest
+# fresh builder; consumers serve from the artifact.
+artifacts.declare(
+    "curman",
+    "documents.parquet",
+    text_curation_manifest,
+    queries=("text_curation_manifest",),
+)
 
 
 @register(
@@ -1177,13 +1135,15 @@ def curation_manifest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     "banding config at 100 TB, read its recall at the similarity level "
     "you care about. Both pair tables are SERVED from the per-corpus "
     "artifacts whose content is pinned identical to the registered "
-    "builder operators (see pair_table), and the SQL composes those "
+    "builder operators, and the SQL composes those "
     "same registered specs — the diagnostic cannot drift from what ships.",
 )
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    truth = pair_table(spark, sf_dir, "ngram_jaccard")
-    cand = pair_table(spark, sf_dir, "minhash_lsh").withColumn("hit", F.lit(1))
+    truth = artifacts.table("pairs_ngram_jaccard", spark, sf_dir)
+    cand = artifacts.table("pairs_minhash_lsh", spark, sf_dir).withColumn(
+        "hit", F.lit(1)
+    )
     joined = truth.join(cand, ["doc_a", "doc_b"], "left").select(
         F.floor(F.col("jaccard") * 10).cast("long").alias("jac_band"),
         F.coalesce(F.col("hit"), F.lit(0)).alias("hit"),
@@ -1480,7 +1440,7 @@ def _survivorship_sql() -> str:
     "group is degenerate), one groupBy emits a row per group.",
 )
 def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    comp = components_table(spark, sf_dir)
+    comp = artifacts.table("dupcc", spark, sf_dir)
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     j = comp.join(docs, "doc_id")
     w = Window.partitionBy("component_id").orderBy(
@@ -1655,7 +1615,7 @@ def _winnow_recall_sql() -> str:
 def dedup_winnow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.operators.text import text_winnow_pairs
 
-    truth = pair_table(spark, sf_dir, "ngram_jaccard")
+    truth = artifacts.table("pairs_ngram_jaccard", spark, sf_dir)
     cand = text_winnow_pairs(spark, sf_dir).select(
         "doc_a", "doc_b", F.lit(1).alias("hit")
     )
@@ -1721,7 +1681,7 @@ def _cluster_purity_sql() -> str:
     "LSH-capped group sizes — nothing quadratic, nothing corpus-wide.",
 )
 def dedup_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    comp = components_table(spark, sf_dir)
+    comp = artifacts.table("dupcc", spark, sf_dir)
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     j = comp.join(docs, "doc_id")
     # ONE pass: the separate language rollup and source census each
@@ -1821,7 +1781,7 @@ def _leakage_split_sql() -> str:
 )
 def dedup_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    comp = components_table(spark, sf_dir)
+    comp = artifacts.table("dupcc", spark, sf_dir)
     docs = io.load(spark, sf_dir, "documents").select("doc_id")
     rooted = docs.join(comp, "doc_id", "left").select(
         "doc_id",
@@ -2122,7 +2082,7 @@ def _jaccard_sweep_sql() -> str:
 )
 def text_jaccard_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    pr = pair_table(spark, sf_dir, "ngram_jaccard")
+    pr = artifacts.table("pairs_ngram_jaccard", spark, sf_dir)
     prd = pr.select(
         "doc_a",
         "doc_b",
@@ -2305,32 +2265,16 @@ def fuzzy_band_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_method_agreement) — without an artifact each recomputes its input
 # methods from the corpus, i.e. the MinHash-LSH pair table alone was being
 # derived four separate times per suite run. At 100 TB a pair table is
-# built ONCE per corpus snapshot and served for months, exactly like the
-# kNN graph (similarity.knn_graph_path) and the duplicate groups
-# (components_path above). Same discipline: the registered method queries
-# (dedup_minhash_lsh etc.) ARE the builders and still construct fresh —
-# their bench time stays honest — while consumers read the parquet
-# artifact keyed by the corpus fingerprint. Every method is fully
-# deterministic (md5 hash families, integer thresholds), so artifact
-# content is byte-identical to a fresh computation — pinned by
-# tests/test_r08b_ops.py::test_pair_table_artifacts_match_fresh_compute,
+# built ONCE per corpus snapshot and served for months. The registered
+# method queries (dedup_minhash_lsh etc.) ARE the builders and still
+# construct fresh — their bench time stays honest — while consumers read
+# the ``pairs_<method>`` artifact. Every method is fully deterministic (md5
+# hash families, integer thresholds), so artifact content is
+# byte-identical to a fresh computation (pinned in tests/test_artifacts.py),
 # which is also why every consumer's composed DuckDB oracle (which embeds
 # the method SQL verbatim) remains valid unchanged.
 
 _PAIR_METHODS = ("minhash_lsh", "simhash", "ngram_jaccard", "fuzzy_edit")
-
-
-def _pair_builder(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
-    if method == "minhash_lsh":
-        return dedup_minhash_lsh(spark, sf_dir)
-    if method == "simhash":
-        return dedup_simhash_pairs(spark, sf_dir)
-    if method == "ngram_jaccard":
-        return dedup_ngram_jaccard(spark, sf_dir)
-    if method == "fuzzy_edit":
-        return dedup_fuzzy_edit(spark, sf_dir)
-    raise ValueError(f"unknown pair method {method!r}")  # pragma: no cover
-
 
 _PAIR_BUILDER_QUERY = {
     "minhash_lsh": "dedup_minhash_lsh",
@@ -2339,30 +2283,13 @@ _PAIR_BUILDER_QUERY = {
     "fuzzy_edit": "dedup_fuzzy_edit",
 }
 
-
-def pair_table_path(spark: SparkSession, sf_dir: str, method: str) -> str:
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    # tag carries a builder-version salt (ADVICE r08): editing a pair
-    # builder re-fingerprints the artifact, so a warm /tmp table from the
-    # old code can never be served as the new method's pairs
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        f"pairs_{method}_{builder_salt(_PAIR_BUILDER_QUERY[method])}",
-        lambda staging: _pair_builder(spark, sf_dir, method)
-        .write.mode("overwrite")
-        .parquet(staging),
+for _method, _query in _PAIR_BUILDER_QUERY.items():
+    artifacts.declare(
+        f"pairs_{_method}",
+        "documents.parquet",
+        REGISTRY[_query].fn,
+        queries=(_query,),
     )
-
-
-def pair_table(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
-    """A method's full pair table served from the per-corpus artifact
-    (content identical to the registered builder query — see the module
-    comment above)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, pair_table_path(spark, sf_dir, method))
 
 
 # --- exact substring-span dedup (Lee et al. 2021) ----------------------------
@@ -2549,36 +2476,17 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def substring_span_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the duplicated-span table ONCE per corpus — the same
-    artifact discipline as the pair tables: at 100 TB the L-gram marking
-    pass (the expensive stage) runs once per corpus snapshot and both the
-    census (dedup_substring_spans, which stays an honest fresh builder)
-    and the scrub consume its output. Tag carries a builder-version salt
-    keyed on the registered span spec (ADVICE r08)."""
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "subspans_"
-        + builder_salt(
-            "dedup_substring_spans",
-            helpers=(_substring_span_table, _gram_table, _merge_islands),
-        ),
-        lambda staging: _substring_span_table(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-
-
-def substring_span_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The span table served from its per-corpus artifact (content
-    identical to _substring_span_table — pinned in tests/test_r09_ops.py
-    — so the composed scrub oracle stays valid)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, substring_span_path(spark, sf_dir))
+# The duplicated-span table, materialized ONCE per corpus: at 100 TB the
+# L-gram marking pass (the expensive stage) runs once per corpus snapshot
+# and both the census (dedup_substring_spans, which stays an honest fresh
+# builder) and the scrub consume the artifact.
+artifacts.declare(
+    "subspans",
+    "documents.parquet",
+    _substring_span_table,
+    queries=("dedup_substring_spans",),
+    helpers=(_gram_table, _merge_islands),
+)
 
 
 # In-row reassembly of the non-duplicated text: fold the doc's sorted span
@@ -2671,7 +2579,7 @@ def _scrub_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_survivor_corpus so the removal semantics cannot drift between
     the two. source/orig_len ride along from the one corpus scan so the
     survivor query never re-scans documents for them."""
-    spans = substring_span_table(spark, sf_dir)
+    spans = artifacts.table("subspans", spark, sf_dir)
     agg = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("sp"),
         F.count(F.lit(1)).alias("n_spans"),
@@ -2758,8 +2666,8 @@ def _agreement_sql() -> str:
     "cheaper method suffices; low agreement means the methods see "
     "different duplicate classes and a union is warranted). The four "
     "pair sets are SERVED from the per-corpus pair-table artifacts "
-    "(content pinned identical to the registered builder operators — "
-    "see pair_table) and the SQL composes those same registered specs, "
+    "(content pinned identical to the registered builder operators) "
+    "and the SQL composes those same registered specs, "
     "so the matrix cannot drift from what ships. Plan shape at 100 TB: "
     "pair tables are built once per corpus snapshot and read as parquet "
     "here; the agreement itself adds one shuffle keyed on the (doc_a, "
@@ -2770,7 +2678,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure consumer: pair sets come from the per-corpus pair-table
     # artifacts (content identical to the registered builders, test-pinned)
     parts = [
-        pair_table(spark, sf_dir, m)
+        artifacts.table(f"pairs_{m}", spark, sf_dir)
         .select("doc_a", "doc_b")
         .withColumn("method", F.lit(m))
         for m in _PAIR_METHODS
@@ -2903,7 +2811,7 @@ def dedup_method_union_components(spark: SparkSession, sf_dir: str) -> DataFrame
     tune_session(spark)
     # pure consumer of the four per-corpus pair-table artifacts
     parts = [
-        pair_table(spark, sf_dir, m).select("doc_a", "doc_b")
+        artifacts.table(f"pairs_{m}", spark, sf_dir).select("doc_a", "doc_b")
         for m in _PAIR_METHODS
     ]
     edges = parts[0]
@@ -3019,9 +2927,9 @@ def dedup_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins, and ONE conditional aggregate emits every stage cell;
     # the 4-row funnel and its raw-relative fractions expand in-row
     # (stack), so no broadcast rejoin of the raw totals either.
-    comp = components_table(spark, sf_dir).select("doc_id", "component_id")
+    comp = artifacts.table("dupcc", spark, sf_dir).select("doc_id", "component_id")
     sp = (
-        substring_span_table(spark, sf_dir)
+        artifacts.table("subspans", spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.sum(F.col("e") - F.col("s") + 1).cast("long").alias("dup_chars"))
     )
@@ -3122,7 +3030,7 @@ def dedup_survivor_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     # ONE corpus scan: the scrub frame already carries source/orig_len
     sc = _scrub_frame(spark, sf_dir)
-    comp = components_table(spark, sf_dir).select("doc_id", "component_id")
+    comp = artifacts.table("dupcc", spark, sf_dir).select("doc_id", "component_id")
     return (
         sc.join(comp, "doc_id", "left")
         .filter(
@@ -3345,7 +3253,7 @@ def _span_attribution_sql() -> str:
 def dedup_span_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     sp = (
-        substring_span_table(spark, sf_dir)
+        artifacts.table("subspans", spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.sum(F.col("e") - F.col("s") + 1).cast("long").alias("dup"))
     )
@@ -3388,29 +3296,15 @@ def dedup_span_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decontaminated corpora from it.
 
 
-def contam_span_path(spark: SparkSession, sf_dir: str) -> str:
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    # builder-version salt: the transitive walk digests _contam_span_fresh,
-    # _gram_table, _merge_islands and the semantic constants (_SUB_L,
-    # _CONTAM_EVAL_SOURCE) reached from the registered builder
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "consp_" + builder_salt("decontaminate_spans"),
-        lambda staging: _contam_span_fresh(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-
-
-def contam_span_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The contamination-span table served from its per-corpus artifact
-    (content identical to _contam_span_fresh — pinned in
-    tests/test_r10_ops.py — so the composed scrub oracle stays valid)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, contam_span_path(spark, sf_dir))
+# The transitive salt walk digests _contam_span_fresh, _gram_table,
+# _merge_islands and the semantic constants (_SUB_L, _CONTAM_EVAL_SOURCE)
+# reached from the registered builder.
+artifacts.declare(
+    "consp",
+    "documents.parquet",
+    _contam_span_fresh,
+    queries=("decontaminate_spans",),
+)
 
 
 def _decon_scrub_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3418,11 +3312,11 @@ def _decon_scrub_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     every TRAINING doc (the eval source ships nowhere) — the
     decontamination scrub's frame. Consumed by decontaminate_scrub only;
     what it SHARES with the release layer is the span spec underneath
-    (contam_span_table serves both) and the in-row reassembly fold
+    (the consp artifact serves both) and the in-row reassembly fold
     (_SUB_REASSEMBLE), so removal semantics still cannot drift — the
     manifest's own scrub accounting comes from dedup_substring_spans
     (ADVICE r10: the earlier docstring overclaimed a shared frame)."""
-    spans = contam_span_table(spark, sf_dir)
+    spans = artifacts.table("consp", spark, sf_dir)
     agg = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("sp"),
         F.count(F.lit(1)).alias("n_spans"),
@@ -3629,9 +3523,9 @@ def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             == F.min("doc_id").over(Window.partitionBy("text_hash"))
         ).alias("exact_keep"),
     )
-    comp = components_table(spark, sf_dir).select("doc_id", "component_id")
+    comp = artifacts.table("dupcc", spark, sf_dir).select("doc_id", "component_id")
     spc = (
-        substring_span_table(spark, sf_dir)
+        artifacts.table("subspans", spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.sum(F.col("e") - F.col("s") + 1).cast("long").alias("dup_chars"))
     )
@@ -3640,7 +3534,7 @@ def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the curation decision is a per-corpus derived structure, built once
     # (attributed to text_curation_manifest, the honest fresh builder)
     # and consumed as narrow parquet here
-    man = curation_manifest_table(spark, sf_dir).select(
+    man = artifacts.table("curman", spark, sf_dir).select(
         "doc_id", "quality_keep", "mix_keep", "decon_keep"
     )
     j = (
@@ -3740,7 +3634,7 @@ def _contam_attribution_sql() -> str:
 def decontaminate_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     sp = (
-        contam_span_table(spark, sf_dir)
+        artifacts.table("consp", spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.sum(F.col("e") - F.col("s") + 1).cast("long").alias("contam"))
     )
@@ -3964,7 +3858,7 @@ def corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     # served from the per-corpus manifest artifact (content pinned
     # identical to the registered builder, so the composed oracle holds)
-    man = release_manifest_table(spark, sf_dir)
+    man = artifacts.table("relman", spark, sf_dir)
     aggs = []
     conds: list = []
     for i, (stage, col) in enumerate(_RELEASE_STAGES):
@@ -3986,7 +3880,7 @@ def corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same source corpus_release_tokens reads); the 1-row x 1-row combine
     # is the accepted broadcast nested-loop pattern (a literal-key equi
     # join constant-folds back to it anyway)
-    ds_tot = release_dataset_table(spark, sf_dir).agg(
+    ds_tot = artifacts.table("reldata", spark, sf_dir).agg(
         F.count(F.lit(1)).cast("long").alias(f"n{k}"),
         F.coalesce(F.sum(F.length("final_text")), F.lit(0))
         .cast("long")
@@ -4039,13 +3933,13 @@ def corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_release_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    ship = release_manifest_table(spark, sf_dir).filter("ship").select(
+    ship = artifacts.table("relman", spark, sf_dir).filter("ship").select(
         "doc_id"
     )
     united = (
-        substring_span_table(spark, sf_dir)
+        artifacts.table("subspans", spark, sf_dir)
         .select("doc_id", "s", "e")
-        .unionByName(contam_span_table(spark, sf_dir).select("doc_id", "s", "e"))
+        .unionByName(artifacts.table("consp", spark, sf_dir).select("doc_id", "s", "e"))
     )
     w = Window.partitionBy("doc_id").orderBy("s", "e")
     pm = F.max("e").over(w.rowsBetween(Window.unboundedPreceding, -1))
@@ -4141,7 +4035,7 @@ def _release_attribution_sql() -> str:
 )
 def corpus_release_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    man = release_manifest_table(spark, sf_dir)
+    man = artifacts.table("relman", spark, sf_dir)
     aggs = [F.count(F.lit(1)).cast("long").alias("n_docs")]
     for s in _DROP_STAGES:
         aggs.append(
@@ -4214,7 +4108,7 @@ def _release_tokens_sql() -> str:
 )
 def corpus_release_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    ds = release_dataset_table(spark, sf_dir)
+    ds = artifacts.table("reldata", spark, sf_dir)
     n_toks = F.size(
         F.filter(
             F.split(F.lower(F.col("final_text")), "[^a-z0-9]+"),
@@ -4253,49 +4147,20 @@ def corpus_release_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # actually written, not a recomputation of it.
 
 
-def release_manifest_path(spark: SparkSession, sf_dir: str) -> str:
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    # transitive builder salt covers the curation/manifest helpers and the
-    # composed specs' constants reached from the registered builder
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "relman_" + builder_salt("corpus_release_manifest"),
-        lambda staging: corpus_release_manifest(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-
-
-def release_manifest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The release manifest served from its per-corpus artifact (content
-    identical to corpus_release_manifest — pinned in tests/test_r10_ops.py
-    — so every composed oracle stays valid)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, release_manifest_path(spark, sf_dir))
-
-
-def release_dataset_path(spark: SparkSession, sf_dir: str) -> str:
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "reldata_" + builder_salt("corpus_release_dataset"),
-        lambda staging: corpus_release_dataset(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-
-
-def release_dataset_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shipped dataset served from its per-corpus artifact (content
-    identical to corpus_release_dataset, the builder)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, release_dataset_path(spark, sf_dir))
+# The transitive builder salt covers the curation/manifest helpers and the
+# composed specs' constants reached from the registered builders.
+artifacts.declare(
+    "relman",
+    "documents.parquet",
+    corpus_release_manifest,
+    queries=("corpus_release_manifest",),
+)
+artifacts.declare(
+    "reldata",
+    "documents.parquet",
+    corpus_release_dataset,
+    queries=("corpus_release_dataset",),
+)
 
 
 # --- quality-aware survivor selection (r11) -------------------------------------
@@ -4377,13 +4242,11 @@ def _survivor_policy_sql() -> str:
     "work).",
 )
 def dedup_survivor_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from exact_spark.operators.text import profile_table
-
     tune_session(spark)
-    comp = components_table(spark, sf_dir).select(
+    comp = artifacts.table("dupcc", spark, sf_dir).select(
         "doc_id", "component_id", "n_members"
     )
-    prof = profile_table(spark, sf_dir).select("doc_id", "quality_score")
+    prof = artifacts.table("textprof", spark, sf_dir).select("doc_id", "quality_score")
     lens = io.load(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("n_chars")
     )
@@ -4753,7 +4616,7 @@ def corpus_release_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     b = _PACK_BUDGET
-    ds = release_dataset_table(spark, sf_dir)
+    ds = artifacts.table("reldata", spark, sf_dir)
     n_toks = F.size(
         F.filter(
             F.split(F.lower(F.col("final_text")), "[^a-z0-9]+"),
@@ -4807,26 +4670,20 @@ def _prev_snapshot_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def prev_snapshot_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the previous-release corpus as a pseudo-sf_dir artifact
-    (a directory holding documents.parquet), so every sf_dir-parameterized
-    builder in the manifest chain runs over it unchanged and keys its own
-    artifacts off the snapshot corpus's fingerprint."""
+def _build_prev_snapshot(spark: SparkSession, sf_dir: str, staging: str) -> None:
+    """Write the previous-release corpus as a pseudo-sf_dir (a directory
+    holding documents.parquet), so every sf_dir-parameterized builder in
+    the manifest chain runs over it unchanged and keys its own artifacts
+    off the snapshot corpus's fingerprint."""
     import pathlib
 
-    from exact_spark.artifacts import builder_salt, materialize
-
-    def build(staging: str) -> None:
-        _prev_snapshot_docs(spark, sf_dir).write.mode("overwrite").parquet(
-            str(pathlib.Path(staging) / "documents.parquet")
-        )
-        (pathlib.Path(staging) / "_SUCCESS").write_text("")
-
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "relsnap_" + builder_salt(helpers=(_prev_snapshot_docs,)),
-        build,
+    _prev_snapshot_docs(spark, sf_dir).write.mode("overwrite").parquet(
+        str(pathlib.Path(staging) / "documents.parquet")
     )
+    (pathlib.Path(staging) / "_SUCCESS").write_text("")
+
+
+artifacts.declare("relsnap", "documents.parquet", build=_build_prev_snapshot)
 
 
 def _release_diff_sql() -> str:
@@ -4911,8 +4768,9 @@ def corpus_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.sources.versioned import VersionedTable
 
     tune_session(spark)
-    man_prev = release_manifest_table(spark, prev_snapshot_dir(spark, sf_dir))
-    man_cur = release_manifest_table(spark, sf_dir)
+    snap_dir = artifacts.path("relsnap", spark, sf_dir)
+    man_prev = artifacts.table("relman", spark, snap_dir)
+    man_cur = artifacts.table("relman", spark, sf_dir)
     work = tempfile.mkdtemp(prefix="exact_spark_reldiff_")
     try:
         t = VersionedTable(spark, work, "release_manifest")
@@ -5000,10 +4858,8 @@ def _policy_delta_sql() -> str:
 def corpus_release_policy_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from exact_spark.operators.text import profile_table
-
     tune_session(spark)
-    man = release_manifest_table(spark, sf_dir)
+    man = artifacts.table("relman", spark, sf_dir)
     # ONE components-artifact scan: survivor_policy_id rides every member
     # row via a window (max struct(q, -doc_id) == argmax-quality with the
     # min-id tie-break — identical to the policy spec's per-component
@@ -5011,7 +4867,7 @@ def corpus_release_policy_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrive together instead of re-scanning the artifact per branch.
     # The documents scan the policy table needs for its chars accounting
     # is not needed here at all — this what-if only reads the survivor id.
-    prof = profile_table(spark, sf_dir).select("doc_id", "quality_score")
+    prof = artifacts.table("textprof", spark, sf_dir).select("doc_id", "quality_score")
     best = F.max(
         F.struct(
             F.coalesce("quality_score", F.lit(0.0)).alias("q"),
@@ -5019,7 +4875,7 @@ def corpus_release_policy_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).over(Window.partitionBy("component_id"))
     compmap = (
-        components_table(spark, sf_dir)
+        artifacts.table("dupcc", spark, sf_dir)
         .select("doc_id", "component_id")
         .join(prof, "doc_id", "left")
         .select(
@@ -5125,7 +4981,7 @@ def _release_card_sql() -> str:
 )
 def corpus_release_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    man = release_manifest_table(spark, sf_dir)
+    man = artifacts.table("relman", spark, sf_dir)
     ship = F.col("ship")
     ms = man.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs_raw"),
@@ -5148,7 +5004,7 @@ def corpus_release_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_dropped_curation"),
     )
-    ds = release_dataset_table(spark, sf_dir)
+    ds = artifacts.table("reldata", spark, sf_dir)
     n_toks = F.size(
         F.filter(
             F.split(F.lower(F.col("final_text")), "[^a-z0-9]+"),

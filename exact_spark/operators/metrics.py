@@ -918,6 +918,9 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the §52 lazy-broadcast pattern). It now rides both downstream jobs
     # as a broadcast single-row aggregate: same min-week value (coalesce
     # reproduces the old `or 0` on an empty corpus), one fewer action.
+    # Nothing caches it, so the aggregate runs once in EACH consuming job:
+    # twice per call (the cached sketch frame's job and the exact-census
+    # job), each a pass over the canonical table's (ts_epoch, user_id).
     lo_df = tagged.agg(
         F.coalesce(F.min("week"), F.lit(0)).cast("long").alias("lo")
     )

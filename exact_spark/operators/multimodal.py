@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from exact_spark import io
+from exact_spark import artifacts, io
 from exact_spark.registry import register
 from exact_spark.session import tune_session
 
@@ -687,9 +687,7 @@ def _hard_negative_sql() -> str:
     "inner joins exactly.",
 )
 def multimodal_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from exact_spark.operators.similarity import knn_graph
-
-    g = knn_graph(spark, sf_dir).filter(F.col("rank") == 1)
+    g = artifacts.table("knng", spark, sf_dir).filter(F.col("rank") == 1)
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     # in-row fan-out to (is_pos, doc_id): ONE documents scan attaches both
     # sides' n_chars (the two-join form scanned the corpus once per side —

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from exact_spark import io
+from exact_spark import artifacts, io
 from exact_spark.functions import fixed, fround, sql_fixed, sql_fround
 from exact_spark.registry import register
 from exact_spark.session import tune_session
@@ -120,40 +120,6 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _text_profile_frame(spark, sf_dir)
 
 
-def profile_table_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the per-document profile frame ONCE per corpus — the
-    canonical document-features table every curation stage keys off
-    (quality, token counts, language). Three consumers (text_source_mix,
-    text_quality_classifier, text_token_budget_select) serve from it; the
-    registered text_profile query remains the honest fresh builder. Same
-    artifacts.materialize discipline as the kNN graph / components / pair
-    tables; content pinned identical to a fresh computation in
-    tests/test_r08b_ops.py."""
-    import pathlib
-
-    from exact_spark.artifacts import builder_salt, materialize
-
-    # builder-version salt (ADVICE r08): a text_profile oracle or builder
-    # change (the content lives in _text_profile_frame, passed as a
-    # helper) re-fingerprints the artifact so consumers can't serve stale
-    # profiles
-    return materialize(
-        pathlib.Path(sf_dir).resolve() / "documents.parquet",
-        "textprof_"
-        + builder_salt("text_profile", helpers=(_text_profile_frame,)),
-        lambda staging: _text_profile_frame(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-
-
-def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The document profile served from the per-corpus artifact (content
-    identical to text_profile — every composed oracle stays valid)."""
-    tune_session(spark)
-    return io.read_parquet_memo(spark, profile_table_path(spark, sf_dir))
-
-
 def _text_profile_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
@@ -246,6 +212,19 @@ def _text_profile_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         fround(F.col("stopword_ratio"), 10_000).alias("stopword_ratio"),
         fround(score, 10_000).alias("quality_score"),
     )
+
+
+# The per-document profile, materialized ONCE per corpus — the canonical
+# document-features table every curation stage keys off (quality, token
+# counts, language). Three consumers (text_source_mix,
+# text_quality_classifier, text_token_budget_select) serve from it; the
+# registered text_profile query remains the honest fresh builder.
+artifacts.declare(
+    "textprof",
+    "documents.parquet",
+    _text_profile_frame,
+    queries=("text_profile",),
+)
 
 
 # --- keep/drop filter pipeline (the decision layer a training-data curation
@@ -670,7 +649,10 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect — a whole blocking driver job before pass 1 (VERDICT r11
     # item 7; the §52 lazy-broadcast pattern) — and now rides pass 1's job
     # as a broadcast single-row branch: a column-pruned max over the dense
-    # id, integer-exact ceil ((nd + m - 1) DIV m == -(-nd // m)).
+    # id, integer-exact ceil ((nd + m - 1) DIV m == -(-nd // m)). Nothing
+    # caches it, so the max runs once in EACH job over ``base``: twice per
+    # query (pass 1's collect and the returned frame's action), each a
+    # doc_id-only scan of the corpus.
     m = _PACK_MAX_PARTIALS
     wdf = (
         docs.agg((F.coalesce(F.max("doc_id"), F.lit(-1)) + 1).alias("nd"))
@@ -854,7 +836,7 @@ def text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    prof = profile_table(spark, sf_dir)
+    prof = artifacts.table("textprof", spark, sf_dir)
     src = io.load(spark, sf_dir, "documents").select("doc_id", "source")
     j = prof.select("doc_id", "n_tokens", "quality_score").join(src, "doc_id")
     # quality_score is an exact multiple of 1e-4 (fround 10000), so the
@@ -934,7 +916,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.functions import vector_to_array
 
     tune_session(spark)
-    prof = profile_table(spark, sf_dir).select(
+    prof = artifacts.table("textprof", spark, sf_dir).select(
         "doc_id", "n_tokens", "distinct_ratio", "stopword_ratio",
         "avg_token_len", "n_bpe_est",
     )
@@ -2513,7 +2495,7 @@ def _token_budget_sql() -> str:
 )
 def text_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
-    prof = profile_table(spark, sf_dir).select(
+    prof = artifacts.table("textprof", spark, sf_dir).select(
         "doc_id", "n_tokens", "quality_score"
     )
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "source")

@@ -28,18 +28,13 @@ oracle-checkable row_number specification the materialized ids must equal.
 
 from __future__ import annotations
 
-import hashlib
-import os
 import pathlib
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from exact_spark import io
+from exact_spark import artifacts, io
 from exact_spark.functions import (
     epoch_micros,
     epoch_seconds,
@@ -104,22 +99,6 @@ def _canonical_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DAY_PARTITION_MIN_BYTES = 64 * 1024 * 1024
 
 
-def _source_fingerprint(sf_dir: str) -> tuple[str, int]:
-    """(content key, total bytes) of the events source: file names + sizes
-    + mtimes. A regenerated source dir therefore gets a fresh canonical
-    table instead of silently serving a stale one."""
-    src = pathlib.Path(sf_dir).resolve() / "events.parquet"
-    files = sorted(src.rglob("*")) if src.is_dir() else [src]
-    parts, total = [], 0
-    for p in files:
-        if p.is_file():
-            st = p.stat()
-            parts.append(f"{p.name}:{st.st_size}:{st.st_mtime_ns}")
-            total += st.st_size
-    key = str(src) + "|" + "|".join(parts)
-    return hashlib.md5(key.encode()).hexdigest()[:12], total
-
-
 def canonical_granularity(path: str) -> str:
     """Partition granularity ('day' | 'month') of a materialized canonical
     table, recorded at write time in the ``_GRANULARITY`` marker."""
@@ -127,60 +106,58 @@ def canonical_granularity(path: str) -> str:
     return marker.read_text().strip() if marker.exists() else "day"
 
 
-def canonical_table_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the canonical job table for ``sf_dir`` once (time-
-    partitioned parquet under the system temp dir) and return its path.
+def _build_canonical_table(spark: SparkSession, sf_dir: str, staging: str) -> None:
+    """Write the canonical job table: time-partitioned parquet plus the
+    ``_GRANULARITY`` marker.
 
-    Pay the canonicalization exactly once per source dir — afterwards every
-    query gets a parallel multi-file scan with partition pruning on
-    ``__date`` and stored ids, instead of re-running the ingest transform.
-
-    - Cache key = content fingerprint (names/sizes/mtimes of the events
-      source), so regenerated testdata can't serve a stale table.
-    - Partition granularity adapts to the data: daily dirs when a day of
-      data is a real file (the 100 TB case), month dirs below
-      ``_DAY_PARTITION_MIN_BYTES`` so a small source doesn't shatter into
-      dozens of KB-sized files (partition pruning still works — bounds are
-      truncated to the granularity at read time).
-    - The write goes to a uniquely-named staging dir and is published with
-      one atomic rename: concurrent sessions can't observe a half-written
-      table, and the loser of a race just discards its staging copy.
-    """
-    fp, total_bytes = _source_fingerprint(sf_dir)
-    base = pathlib.Path(tempfile.gettempdir()) / ("exact_spark_canon_" + fp)
-    if (base / "_SUCCESS").exists():
-        return str(base)
-
+    Partition granularity adapts to the data: daily dirs when a day of data
+    is a real file (the 100 TB case), month dirs below
+    ``_DAY_PARTITION_MIN_BYTES`` so a small source doesn't shatter into
+    dozens of KB-sized files (partition pruning still works — bounds are
+    truncated to the granularity at read time)."""
+    src = pathlib.Path(sf_dir).resolve() / "events.parquet"
+    files = src.rglob("*") if src.is_dir() else [src]
+    total_bytes = sum(p.stat().st_size for p in files if p.is_file())
     granularity = "day" if total_bytes >= _DAY_PARTITION_MIN_BYTES else "month"
     part = (
         F.to_date(F.timestamp_seconds("ts_epoch"))
         if granularity == "day"
         else F.trunc(F.to_date(F.timestamp_seconds("ts_epoch")), "month")
     )
-    staging = base.with_name(base.name + "." + uuid.uuid4().hex[:8] + ".tmp")
-    df = _canonical_compute(spark, sf_dir)
     (
-        df.withColumn("__date", part)
+        _canonical_compute(spark, sf_dir)
+        .withColumn("__date", part)
         .repartition("__date")
         .write.mode("overwrite")
         .partitionBy("__date")
-        .parquet(str(staging))
+        .parquet(staging)
     )
-    (staging / "_GRANULARITY").write_text(granularity)
-    if (base / "_SUCCESS").exists():  # concurrent writer won the race
-        shutil.rmtree(staging, ignore_errors=True)
-    else:
-        shutil.rmtree(base, ignore_errors=True)  # stale partial, if any
-        os.rename(staging, base)
-    return str(base)
+    (pathlib.Path(staging) / "_GRANULARITY").write_text(granularity)
+
+
+# ingest imports CANON_SQL from this module, so bind it after that is defined
+from exact_spark.sources import ingest as _ingest  # noqa: E402
+
+artifacts.declare(
+    "canon",
+    "events.parquet",
+    build=_build_canonical_table,
+    helpers=(_canonical_compute, _ingest.with_dense_id),
+)
+
+
+def canonical_table_path(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the canonical job table for ``sf_dir``, materialized once per
+    events fingerprint: every query gets a parallel multi-file scan with
+    partition pruning on ``__date`` and stored ids, instead of re-running
+    the ingest transform."""
+    return artifacts.path("canon", spark, sf_dir)
 
 
 def canonical_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> canonical EXACT job table (P1-P5, P11), served from the
     materialized table (see ``canonical_table_path``)."""
-    tune_session(spark)
-    path = canonical_table_path(spark, sf_dir)
-    return io.read_parquet_memo(spark, path).select(*_CANON_COLS)
+    return artifacts.table("canon", spark, sf_dir).select(*_CANON_COLS)
 
 
 def canonical_events_range(

@@ -40,8 +40,8 @@ DEFAULT_CONF = {
     # already sized, and skewJoin splitting applies to SHJ too. On a
     # cluster, revisit the product (threshold x partitions) against
     # executor memory; only 3 registry plans carried SMJ before this, so
-    # reverting is cheap (tests/test_plan_shapes.py pins the affected
-    # plans' strategies).
+    # reverting is cheap (tests/test_r12_ops.py::
+    # test_shj_conf_join_strategy_pins pins the affected plans' strategies).
     "spark.sql.join.preferSortMergeJoin": "false",
     # guide §6: zstd for everything we write (catalog tables, artifacts)
     # — smaller than snappy at similar read speed

@@ -198,8 +198,8 @@ def feature_columns(df: DataFrame) -> list[str]:
 # Driver-visible ingest demo. It reads a file staged at run time, which the
 # DuckDB oracle views cannot see — but its output invariants are a pure
 # function of the canonical series, so the oracle computes the EXPECTED
-# shape from CANON_SQL (timeseries imports from this module only inside
-# functions, so the top-level import is cycle-free).
+# shape from CANON_SQL (timeseries binds this module only after defining
+# CANON_SQL, so either import order resolves).
 from exact_spark.operators.timeseries import CANON_SQL as _CANON_SQL_REF  # noqa: E402
 from exact_spark.registry import register  # noqa: E402
 

@@ -67,6 +67,34 @@ def _work_dir(prefix: str) -> pathlib.Path:
     return pathlib.Path(tempfile.mkdtemp(prefix=prefix, dir=base or None))
 
 
+# A bounded demo removes its scratch dir in its finally within seconds, so
+# a dir untouched for an hour is a crashed demo's leftover; younger dirs
+# may belong to a concurrent process and are left alone.
+_WORK_DIR_STALE_MIN_AGE_S = 3600.0
+
+
+def sweep_stale_work_dirs() -> None:
+    """Best-effort removal of ``exact_spark_*`` scratch dirs under
+    ``SPARK_GRAFT_CKPT_DIR`` whose mtime is older than
+    _WORK_DIR_STALE_MIN_AGE_S (the age-gated discipline of
+    artifacts._gc_expired_fingerprints). A tmpfs checkpoint base is RAM,
+    and no reaper clears it between runs."""
+    import os
+    import time
+
+    base = os.environ.get("SPARK_GRAFT_CKPT_DIR")
+    if not base:
+        return
+    now = time.time()
+    for d in pathlib.Path(base).glob("exact_spark_*"):
+        try:
+            age = now - d.stat().st_mtime
+        except OSError:
+            continue  # vanished concurrently
+        if age >= _WORK_DIR_STALE_MIN_AGE_S:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 @contextlib.contextmanager
 def _state_partitions(spark: SparkSession, n: int = _DEMO_STATE_PARTITIONS):
     """Temporarily size ``spark.sql.shuffle.partitions`` for a stateful

@@ -1,12 +1,17 @@
 """Per-corpus artifact materialization mechanics (exact_spark/artifacts.py):
-fingerprint sensitivity, build-once semantics, and race survival — the
-shared substrate under the kNN-graph / components / stream-staging memos."""
+fingerprint sensitivity, build-once semantics, race survival, and the
+declared artifacts' served == fresh equality."""
 
 from __future__ import annotations
 
 import pathlib
 
-from exact_spark.artifacts import materialize, source_fingerprint
+import pytest
+
+from exact_spark.artifacts import ARTIFACTS, materialize, source_fingerprint
+from exact_spark.registry import _load_all
+
+_load_all()  # fills ARTIFACTS for the parametrized served == fresh pin
 
 
 def _touch(p: pathlib.Path, data: bytes = b"x") -> None:
@@ -272,3 +277,108 @@ def test_builder_salt_sees_transitive_helpers():
     finally:
         dd._lsh_bands = orig
     assert builder_salt("dedup_minhash_lsh") == before  # restore exact
+
+
+# --- declared artifacts -------------------------------------------------------
+
+
+def test_declare_rejects_duplicates_and_ambiguous_builders(monkeypatch):
+    from exact_spark import artifacts as A
+
+    monkeypatch.setattr(A, "ARTIFACTS", {})
+    A.declare("unit", "documents.parquet", lambda spark, sf_dir: None)
+    with pytest.raises(ValueError, match="duplicate"):
+        A.declare("unit", "documents.parquet", lambda spark, sf_dir: None)
+    with pytest.raises(TypeError):
+        A.declare("neither", "documents.parquet")
+    with pytest.raises(TypeError):
+        A.declare("both", "x", lambda s, d: None, build=lambda s, d, st: None)
+
+
+def test_declared_salt_computed_once_per_process(monkeypatch, tmp_path):
+    """The transitive salt walk costs milliseconds; a served artifact (the
+    canonical table on every run-query request) must not pay it per read."""
+    from exact_spark import artifacts as A
+
+    calls = []
+    monkeypatch.setattr(A, "ARTIFACTS", {})
+    monkeypatch.setattr(A, "_SALTS", {})
+    monkeypatch.setattr(
+        A, "builder_salt", lambda *q, helpers=(): calls.append(q) or "0123abcd"
+    )
+    monkeypatch.setattr(A, "materialize", lambda source, tag, build: tag)
+    A.declare("unit", "documents.parquet", lambda spark, sf_dir: None)
+    assert A.path("unit", None, str(tmp_path)) == "unit_0123abcd"
+    assert A.path("unit", None, str(tmp_path)) == "unit_0123abcd"
+    assert len(calls) == 1
+
+
+def _fresh_and_served(name: str, spark, sf_dir: str):
+    """(fresh builder output, served artifact) as DataFrames. The two
+    custom-layout declarations store a known frame at a known place."""
+    from exact_spark import artifacts as A
+    from exact_spark.operators import dedup, timeseries
+
+    if name == "canon":
+        fresh = timeseries._canonical_compute(spark, sf_dir)
+        return fresh, A.table(name, spark, sf_dir)
+    if name == "relsnap":
+        served = spark.read.parquet(A.path(name, spark, sf_dir) + "/documents.parquet")
+        return dedup._prev_snapshot_docs(spark, sf_dir), served
+    return A.ARTIFACTS[name].frame(spark, sf_dir), A.table(name, spark, sf_dir)
+
+
+@pytest.mark.parametrize("name", sorted(ARTIFACTS))
+def test_served_artifact_equals_fresh_build(spark, sf_dir, name):
+    """Every declared artifact serves EXACTLY what its builder computes
+    fresh (every builder is deterministic, so this is equality, not
+    approximation) — the pin each consumer's composed DuckDB oracle relies
+    on. A builder that itself reads an artifact compares against a second
+    evaluation of the builder."""
+    fresh_df, served_df = _fresh_and_served(name, spark, sf_dir)
+    fresh = fresh_df.toPandas()
+    served = served_df.toPandas()
+    cols = list(fresh.columns)
+    assert list(served.columns[: len(cols)]) == cols  # canon appends __date
+    f = fresh.sort_values(cols, ignore_index=True)
+    s = served[cols].sort_values(cols, ignore_index=True)
+    assert len(f) > 0
+    assert s.equals(f)
+
+
+def test_served_canonical_table_survives_expired_fingerprint_sweep(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A cache hit on the canonical table refreshes its _SERVED stamp, so
+    another artifact's cache miss never sweeps a canonical table that is
+    still being served, however old its build."""
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    from exact_spark import artifacts as A
+    from exact_spark.operators.timeseries import canonical_table_path
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    src = tmp_path / "sf"
+    src.mkdir()
+    shutil.copy(pathlib.Path(sf_dir) / "events.parquet", src / "events.parquet")
+    canon = pathlib.Path(canonical_table_path(spark, str(src)))
+    old = time.time() - A._GC_EXPIRED_FP_MAX_IDLE_S - 60
+    for stamp in ("_SUCCESS", "_SERVED"):
+        (canon / stamp).touch()
+        os.utime(canon / stamp, (old, old))
+
+    assert canonical_table_path(spark, str(src)) == str(canon)  # served once
+
+    other = tmp_path / "o.parquet"
+    _touch(other, b"data")
+
+    def build(staging: str) -> None:
+        d = pathlib.Path(staging)
+        d.mkdir(parents=True)
+        (d / "_SUCCESS").write_text("")
+
+    materialize(other, "unit", build)  # a cache miss runs the sweep
+    assert (canon / "_SUCCESS").exists()

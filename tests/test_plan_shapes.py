@@ -8,6 +8,7 @@ collapses a window to one partition fails here before it fails at 100 TB.
 
 from __future__ import annotations
 
+from exact_spark import artifacts
 from exact_spark.operators.dedup import dedup_incremental
 from exact_spark.operators.relational import rel_shipping_priority
 from exact_spark.operators.text import (
@@ -348,13 +349,12 @@ def test_pair_consumers_read_artifacts_not_corpus(spark, sf_dir):
         dedup_lsh_recall,
         dedup_method_agreement,
         dedup_winnow_recall,
-        pair_table_path,
         text_jaccard_sweep,
     )
 
     # artifacts exist (builders run on demand)
     for m in ("minhash_lsh", "simhash", "ngram_jaccard", "fuzzy_edit"):
-        pair_table_path(spark, sf_dir, m)
+        artifacts.path(f"pairs_{m}", spark, sf_dir)
 
     plan = _plan(dedup_method_agreement(spark, sf_dir))
     assert plan.count("exact_spark_pairs_") >= 4
@@ -386,19 +386,16 @@ def test_r09_consumers_read_artifacts_not_corpus(spark, sf_dir):
     components and span artifacts (its only corpus scan is the
     lengths/hashes projection)."""
     from exact_spark.operators.dedup import (
-        components_path,
         dedup_method_union_components,
         dedup_pipeline_funnel,
         dedup_substring_scrub,
         dedup_survivor_corpus,
-        pair_table_path,
-        substring_span_path,
     )
 
     for m in ("minhash_lsh", "simhash", "ngram_jaccard", "fuzzy_edit"):
-        pair_table_path(spark, sf_dir, m)
-    substring_span_path(spark, sf_dir)
-    components_path(spark, sf_dir)
+        artifacts.path(f"pairs_{m}", spark, sf_dir)
+    artifacts.path("subspans", spark, sf_dir)
+    artifacts.path("dupcc", spark, sf_dir)
 
     plan = _plan(dedup_substring_scrub(spark, sf_dir))
     assert "exact_spark_subspans_" in plan
@@ -438,16 +435,13 @@ def test_r10_consumers_read_artifacts_not_corpus(spark, sf_dir):
     release manifest reads the components + span artifacts (never
     re-deriving either) with per-doc equi-joins only."""
     from exact_spark.operators.dedup import (
-        components_path,
-        contam_span_path,
         corpus_release_manifest,
         decontaminate_scrub,
-        substring_span_path,
     )
 
-    contam_span_path(spark, sf_dir)
-    components_path(spark, sf_dir)
-    substring_span_path(spark, sf_dir)
+    artifacts.path("consp", spark, sf_dir)
+    artifacts.path("dupcc", spark, sf_dir)
+    artifacts.path("subspans", spark, sf_dir)
 
     plan = _plan(decontaminate_scrub(spark, sf_dir))
     assert "exact_spark_consp_" in plan
@@ -474,17 +468,14 @@ def test_r10_batch2_plans(spark, sf_dir):
     BroadcastNestedLoopJoin is attribution's single-row corpus total
     (the accepted 1x1 pattern)."""
     from exact_spark.operators.dedup import (
-        components_path,
-        contam_span_path,
         corpus_release_dataset,
         corpus_release_funnel,
         decontaminate_attribution,
-        substring_span_path,
     )
 
-    contam_span_path(spark, sf_dir)
-    components_path(spark, sf_dir)
-    substring_span_path(spark, sf_dir)
+    artifacts.path("consp", spark, sf_dir)
+    artifacts.path("dupcc", spark, sf_dir)
+    artifacts.path("subspans", spark, sf_dir)
 
     plan = _plan(decontaminate_attribution(spark, sf_dir))
     # ONE span-artifact scan and ONE corpus scan (VERDICT r10 item 3: the
@@ -504,12 +495,10 @@ def test_r10_batch2_plans(spark, sf_dir):
     from exact_spark.operators.dedup import (
         corpus_release_attribution,
         corpus_release_tokens,
-        release_dataset_path,
-        release_manifest_path,
     )
 
-    release_manifest_path(spark, sf_dir)
-    release_dataset_path(spark, sf_dir)
+    artifacts.path("relman", spark, sf_dir)
+    artifacts.path("reldata", spark, sf_dir)
 
     plan = _plan(corpus_release_funnel(spark, sf_dir))
     assert plan.count("exact_spark_relman_") == 1
@@ -562,12 +551,7 @@ def test_r11_single_pass_rewrites(spark, sf_dir):
     query's plan must keep the single-pass shape (a regression that
     re-expands a shared frame per consumer re-introduces full corpus
     passes at 100 TB)."""
-    from exact_spark.operators.dedup import (
-        components_path,
-        dedup_pipeline_funnel,
-        substring_span_path,
-        text_jaccard_sweep,
-    )
+    from exact_spark.operators.dedup import dedup_pipeline_funnel, text_jaccard_sweep
     from exact_spark.operators.metrics import (
         sketch_quantile_rollup,
         ts_outlier_mad,
@@ -581,8 +565,8 @@ def test_r11_single_pass_rewrites(spark, sf_dir):
         ts_seasonal_naive,
     )
 
-    components_path(spark, sf_dir)
-    substring_span_path(spark, sf_dir)
+    artifacts.path("dupcc", spark, sf_dir)
+    artifacts.path("subspans", spark, sf_dir)
 
     try:
         # ONE corpus scan + the two artifacts; all four stage cells from
@@ -644,9 +628,9 @@ def test_r11_label_propagation_constant_plan(spark, sf_dir):
     dedup_components localCheckpoint kernel): the final plan must NOT
     re-expand earlier iterations — before the fix the plan doubled per
     iteration (2^t: 15 embeddings scans / 66 Exchanges at 3 iterations)."""
-    from exact_spark.operators.similarity import knn_graph_path, sim_label_propagation
+    from exact_spark.operators.similarity import sim_label_propagation
 
-    knn_graph_path(spark, sf_dir)
+    artifacts.path("knng", spark, sf_dir)
     plan = _plan(sim_label_propagation(spark, sf_dir))
     # all inputs arrive via the checkpointed RDDs — no parquet re-scan of
     # embeddings or the graph artifact in the final iteration's plan

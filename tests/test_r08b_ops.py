@@ -150,39 +150,3 @@ def test_agreement_bounds(spark):
         ("fuzzy_edit", "ngram_jaccard")
     ]
     assert row.jaccard > 0.5
-
-
-def test_pair_table_artifacts_match_fresh_compute(spark, sf_dir):
-    """The pair-table artifacts serve five consumers — their content must
-    be EXACTLY what the registered builder computes fresh (the methods
-    are fully deterministic, so this is equality, not approximation).
-    This is the pin every composed consumer's DuckDB oracle relies on."""
-    from exact_spark.operators.dedup import (
-        _PAIR_METHODS,
-        _pair_builder,
-        pair_table,
-    )
-
-    for m in _PAIR_METHODS:
-        fresh = _pair_builder(spark, sf_dir, m).toPandas()
-        served = pair_table(spark, sf_dir, m).toPandas()
-        assert list(served.columns) == list(fresh.columns), m
-        key = sorted(fresh.columns)
-        f = fresh.sort_values(key).reset_index(drop=True)
-        s = served.sort_values(key).reset_index(drop=True)
-        assert s.equals(f), m
-
-
-def test_profile_table_artifact_matches_fresh_compute(spark, sf_dir):
-    """The document-profile artifact serves three curation consumers —
-    content must be EXACTLY the registered text_profile builder's fresh
-    output (deterministic expressions, fround fixed-point floats, so this
-    is equality)."""
-    from exact_spark.operators.text import _text_profile_frame, profile_table
-
-    fresh = _text_profile_frame(spark, sf_dir).toPandas()
-    served = profile_table(spark, sf_dir).toPandas()
-    assert list(served.columns) == list(fresh.columns)
-    f = fresh.sort_values("doc_id").reset_index(drop=True)
-    s = served.sort_values("doc_id").reset_index(drop=True)
-    assert s.equals(f)

@@ -9,6 +9,8 @@ of the four pair sets.
 
 from __future__ import annotations
 
+from exact_spark import artifacts
+
 from tests.conftest import SF_DIR_MID
 
 from tests.test_r08b_ops import _brute_spans
@@ -72,28 +74,6 @@ def test_substring_scrub_geometry(spark):
         assert touched.loc[d, "removed_chars"] == census.loc[d, "dup_chars"]
 
 
-def test_span_artifact_matches_fresh_compute(spark, sf_dir):
-    """The scrub serves spans from the per-corpus artifact; its content
-    must be identical to a fresh _substring_span_table computation —
-    the honesty pin that keeps the composed scrub oracle valid."""
-    from exact_spark.operators.dedup import (
-        _substring_span_table,
-        substring_span_table,
-    )
-
-    fresh = (
-        _substring_span_table(spark, sf_dir)
-        .toPandas()
-        .sort_values(["doc_id", "s"], ignore_index=True)
-    )
-    served = (
-        substring_span_table(spark, sf_dir)
-        .toPandas()
-        .sort_values(["doc_id", "s"], ignore_index=True)
-    )
-    assert fresh.equals(served[fresh.columns])
-
-
 # --- union-of-methods components -----------------------------------------------
 
 
@@ -122,12 +102,15 @@ def test_union_components_match_union_find(spark, sf_dir):
     from exact_spark.operators.dedup import (
         _PAIR_METHODS,
         dedup_method_union_components,
-        pair_table,
     )
 
     edges: set[tuple[int, int]] = set()
     for m in _PAIR_METHODS:
-        pdf = pair_table(spark, sf_dir, m).select("doc_a", "doc_b").toPandas()
+        pdf = (
+            artifacts.table(f"pairs_{m}", spark, sf_dir)
+            .select("doc_a", "doc_b")
+            .toPandas()
+        )
         edges |= set(zip(pdf.doc_a, pdf.doc_b))
     want = _union_find_sizes(edges)
     got = dedup_method_union_components(spark, sf_dir).toPandas()
@@ -140,14 +123,11 @@ def test_union_components_superset_of_single_method(spark):
     doc in the minhash-only components appears in some union component,
     and union components can only merge, never split (component count at
     a fixed doc coverage is <= the single method's)."""
-    from exact_spark.operators.dedup import (
-        dedup_method_union_components,
-        pair_table,
-    )
+    from exact_spark.operators.dedup import dedup_method_union_components
 
     got = dedup_method_union_components(spark, SF_DIR_MID).toPandas()
     union_docs = int(got.n_docs.sum())
-    mh = pair_table(spark, SF_DIR_MID, "minhash_lsh").toPandas()
+    mh = artifacts.table("pairs_minhash_lsh", spark, SF_DIR_MID).toPandas()
     mh_docs = len(set(mh.doc_a) | set(mh.doc_b))
     assert union_docs >= mh_docs
     assert (got.n_members >= 2).all()  # only edge-touched docs are counted
@@ -164,11 +144,7 @@ def test_funnel_matches_literal_recompute(spark, sf_dir):
     import re
 
     from exact_spark import io
-    from exact_spark.operators.dedup import (
-        _SUB_L,
-        components_table,
-        dedup_pipeline_funnel,
-    )
+    from exact_spark.operators.dedup import _SUB_L, dedup_pipeline_funnel
 
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "text").toPandas()
     texts = dict(zip(docs.doc_id, docs.text))
@@ -181,7 +157,7 @@ def test_funnel_matches_literal_recompute(spark, sf_dir):
         keeper.setdefault(h, d)
     exact_docs = len(keeper)
     exact_chars = sum(len(texts[d]) for d in keeper.values())
-    comp = components_table(spark, sf_dir).toPandas()
+    comp = artifacts.table("dupcc", spark, sf_dir).toPandas()
     dropped = set(comp[comp.component_id != comp.doc_id].doc_id)
     kept = [d for d in texts if d not in dropped]
     spans = _brute_spans(texts, _SUB_L)
@@ -215,7 +191,6 @@ def test_survivor_corpus_composes_components_and_scrub(spark, sf_dir):
     measured."""
     from exact_spark import io
     from exact_spark.operators.dedup import (
-        components_table,
         dedup_substring_scrub,
         dedup_survivor_corpus,
     )
@@ -223,7 +198,7 @@ def test_survivor_corpus_composes_components_and_scrub(spark, sf_dir):
     scrub = (
         dedup_substring_scrub(spark, sf_dir).toPandas().set_index("doc_id")
     )
-    comp = components_table(spark, sf_dir).toPandas()
+    comp = artifacts.table("dupcc", spark, sf_dir).toPandas()
     dropped = set(comp[comp.component_id != comp.doc_id].doc_id)
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "source", "text").toPandas().set_index("doc_id")
     got = dedup_survivor_corpus(spark, sf_dir).toPandas().set_index("doc_id")

@@ -72,28 +72,6 @@ def test_decontaminate_scrub_matches_brute_force(spark, sf_dir):
         assert got.loc[d, "clean_text"] == _brute_scrub(texts[d], sp)
 
 
-def test_contam_span_artifact_matches_fresh_compute(spark, sf_dir):
-    """The scrub serves contamination spans from the per-corpus artifact;
-    its content must be identical to a fresh _contam_span_fresh
-    computation — the honesty pin that keeps the composed oracle valid."""
-    from exact_spark.operators.dedup import (
-        _contam_span_fresh,
-        contam_span_table,
-    )
-
-    fresh = (
-        _contam_span_fresh(spark, sf_dir)
-        .toPandas()
-        .sort_values(["doc_id", "s"], ignore_index=True)
-    )
-    served = (
-        contam_span_table(spark, sf_dir)
-        .toPandas()
-        .sort_values(["doc_id", "s"], ignore_index=True)
-    )
-    assert fresh.equals(served[fresh.columns])
-
-
 def test_decontaminate_scrub_geometry(spark):
     """Cross-stage consistency at sf0.01: clean length == original minus
     removed everywhere, untouched docs pass through verbatim, and the
@@ -476,42 +454,3 @@ def test_release_tokens_matches_literal_recompute(spark, sf_dir):
         ), src
         assert r.token_share == e["shipped_tokens"] / tot
     assert abs(got.token_share.sum() - 1.0) < 1e-9
-
-
-def test_release_artifacts_match_fresh_compute(spark, sf_dir):
-    """The manifest and shipped-dataset artifacts must be content-identical
-    to a fresh run of their registered builders — the honesty pin that
-    keeps every composed release oracle valid while the four consumers
-    serve from parquet."""
-    from exact_spark.operators.dedup import (
-        corpus_release_dataset,
-        corpus_release_manifest,
-        release_dataset_table,
-        release_manifest_table,
-    )
-
-    fresh = (
-        corpus_release_manifest(spark, sf_dir)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    served = (
-        release_manifest_table(spark, sf_dir)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    assert fresh.equals(served[fresh.columns])
-
-    # the dataset builder itself consumes the manifest artifact, so this
-    # compares the artifact against a SECOND evaluation of the builder
-    fresh = (
-        corpus_release_dataset(spark, sf_dir)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    served = (
-        release_dataset_table(spark, sf_dir)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    assert fresh.equals(served[fresh.columns])

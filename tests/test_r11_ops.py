@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pandas as pd
 
+from exact_spark import artifacts
 from tests.conftest import SF_DIR_MID
 
 
@@ -20,15 +21,11 @@ def test_survivor_policy_matches_brute_force(spark, sf_dir):
     doc_id, missing profiles (empty-token docs) score 0.0, and both
     survivors' char accounting is the documents table's n_chars."""
     from exact_spark import io
-    from exact_spark.operators.dedup import (
-        components_table,
-        dedup_survivor_policy,
-    )
-    from exact_spark.operators.text import profile_table
+    from exact_spark.operators.dedup import dedup_survivor_policy
 
-    comp = components_table(spark, sf_dir).toPandas()
+    comp = artifacts.table("dupcc", spark, sf_dir).toPandas()
     prof = (
-        profile_table(spark, sf_dir)
+        artifacts.table("textprof", spark, sf_dir)
         .toPandas()
         .set_index("doc_id")["quality_score"]
     )
@@ -194,12 +191,9 @@ def test_release_packed_reconciles_tokens(spark):
 
 
 def test_release_diff_of_identical_manifests_is_empty(spark, sf_dir):
-    from exact_spark.operators.dedup import (
-        _release_diff_frame,
-        release_manifest_table,
-    )
+    from exact_spark.operators.dedup import _release_diff_frame
 
-    man = release_manifest_table(spark, sf_dir)
+    man = artifacts.table("relman", spark, sf_dir)
     assert _release_diff_frame(man, man).count() == 0
 
 
@@ -212,17 +206,15 @@ def test_release_diff_respects_funnel_deltas(spark, sf_dir):
         _DIFF_SNAP_MOD,
         _DIFF_SNAP_RESIDUE,
         corpus_release_diff,
-        prev_snapshot_dir,
-        release_manifest_table,
     )
 
     man_a = (
-        release_manifest_table(spark, prev_snapshot_dir(spark, sf_dir))
+        artifacts.table("relman", spark, artifacts.path("relsnap", spark, sf_dir))
         .toPandas()
         .set_index("doc_id")
     )
     man_b = (
-        release_manifest_table(spark, sf_dir).toPandas().set_index("doc_id")
+        artifacts.table("relman", spark, sf_dir).toPandas().set_index("doc_id")
     )
     diff = corpus_release_diff(spark, sf_dir).toPandas()
     assert diff.doc_id.is_unique
@@ -269,16 +261,13 @@ def test_r11_plan_shapes(spark, sf_dir):
     and the argmax is ONE aggregate (no window, no pairwise join).
     Packed: a pure shipped-dataset-artifact consumer, zero joins."""
     from exact_spark.operators.dedup import (
-        components_path,
         corpus_release_packed,
         dedup_survivor_policy,
-        release_dataset_path,
     )
-    from exact_spark.operators.text import profile_table_path
 
-    components_path(spark, sf_dir)
-    profile_table_path(spark, sf_dir)
-    release_dataset_path(spark, sf_dir)
+    artifacts.path("dupcc", spark, sf_dir)
+    artifacts.path("textprof", spark, sf_dir)
+    artifacts.path("reldata", spark, sf_dir)
 
     plan = _plan(dedup_survivor_policy(spark, sf_dir))
     assert plan.count("exact_spark_dupcc_") == 1
@@ -309,7 +298,6 @@ def test_policy_delta_matches_manifest_recompute(spark, sf_dir):
     the component map, and the policy survivors; every per-source cell
     must match, and sources with no duplicate groups see no delta."""
     from exact_spark.operators.dedup import (
-        components_table,
         corpus_release_manifest,
         corpus_release_policy_delta,
         dedup_survivor_policy,
@@ -317,7 +305,7 @@ def test_policy_delta_matches_manifest_recompute(spark, sf_dir):
 
     man = corpus_release_manifest(spark, sf_dir).toPandas().set_index("doc_id")
     comp = (
-        components_table(spark, sf_dir)
+        artifacts.table("dupcc", spark, sf_dir)
         .toPandas()
         .set_index("doc_id")["component_id"]
     )

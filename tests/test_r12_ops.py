@@ -1,27 +1,9 @@
 """Round-12 optimization pins: curation-manifest artifact discipline,
 join-strategy pins for the preferSortMergeJoin=false session conf
 (VERDICT r11 item 8), and the streaming checkpoint-scratch env knob
-(VERDICT r11 item 5)."""
+(VERDICT r11 item 5) with its stale-dir sweep."""
 
 from __future__ import annotations
-
-
-def test_curation_manifest_artifact_matches_fresh_compute(spark, sf_dir):
-    """The curation-manifest artifact serves corpus_release_manifest (and
-    through it the whole release layer) — content must be EXACTLY the
-    registered text_curation_manifest builder's fresh output
-    (deterministic expressions, so this is equality)."""
-    from exact_spark.operators.dedup import (
-        curation_manifest_table,
-        text_curation_manifest,
-    )
-
-    fresh = text_curation_manifest(spark, sf_dir).toPandas()
-    served = curation_manifest_table(spark, sf_dir).toPandas()
-    assert list(served.columns) == list(fresh.columns)
-    f = fresh.sort_values("doc_id").reset_index(drop=True)
-    s = served.sort_values("doc_id").reset_index(drop=True)
-    assert s.equals(f)
 
 
 def test_curation_manifest_salt_tracks_builder_code():
@@ -60,25 +42,27 @@ def test_release_manifest_consumes_curation_artifact(spark, sf_dir):
 
 
 def test_shj_conf_join_strategy_pins(spark, sf_dir):
-    """preferSortMergeJoin=false (session.py): the registry plans that
-    carry shuffle joins pick shuffled-hash under the default conf, and
-    the deliberate sort-merge demo keeps its hinted strategy."""
-    from exact_spark.operators.dedup import decontaminate_fingerprint
-    from exact_spark.operators.relational import (
-        rel_join_cardinality_check,
-        rel_order_priority_smj,
+    """preferSortMergeJoin=false (session.py): the registry plans whose
+    shuffle joins meet the planner's shuffled-hash size rule (build side
+    at least 3x smaller than the probe side) pick shuffled-hash under the
+    default conf, and the deliberate sort-merge demo keeps its hinted
+    strategy. Joins of near-equal per-key sides (rel_join_cardinality_check)
+    stay sort-merge by that rule, and plans that broadcast at this scale
+    are not pinned."""
+    from exact_spark.operators.dedup import decontaminate_by_benchmark
+    from exact_spark.operators.relational import rel_order_priority_smj
+    from exact_spark.operators.similarity import (
+        sim_graph_pagerank,
+        sim_threshold_sweep,
     )
 
     smj_demo = rel_order_priority_smj(spark, sf_dir)._jdf.queryExecution().toString()
     assert "SortMergeJoin" in smj_demo  # merge hint pins the demo
 
-    # the full-outer per-key audit join: a shuffle join by construction
-    # (both sides corpus-wide aggregates); SHJ skips both sort passes
-    audit = rel_join_cardinality_check(spark, sf_dir)._jdf.queryExecution().toString()
-    assert "SortMergeJoin" not in audit
-
-    fp = decontaminate_fingerprint(spark, sf_dir)._jdf.queryExecution().toString()
-    assert "SortMergeJoin" not in fp
+    for q in (decontaminate_by_benchmark, sim_graph_pagerank, sim_threshold_sweep):
+        plan = q(spark, sf_dir)._jdf.queryExecution().toString()
+        assert "ShuffledHashJoin" in plan, q.__name__
+        assert "SortMergeJoin" not in plan, q.__name__
 
 
 def test_stream_ckpt_dir_env(monkeypatch, tmp_path):
@@ -103,3 +87,29 @@ def test_stream_ckpt_dir_env(monkeypatch, tmp_path):
 
         shutil.rmtree(d2, ignore_errors=True)
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_sweep_stale_work_dirs_is_age_gated(monkeypatch, tmp_path):
+    """A crashed demo's scratch dir under SPARK_GRAFT_CKPT_DIR is reclaimed
+    once it ages past the gate; recent dirs (a concurrent run's live
+    checkpoint) and foreign entries stay."""
+    import os
+    import time
+
+    from exact_spark import streaming
+
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path))
+    stale, live, foreign = (
+        tmp_path / "exact_spark_stream_a",
+        tmp_path / "exact_spark_stream_b",
+        tmp_path / "other",
+    )
+    for d in (stale, live, foreign):
+        (d / "offsets").mkdir(parents=True)
+    old = time.time() - streaming._WORK_DIR_STALE_MIN_AGE_S - 60
+    for d in (stale, foreign):
+        os.utime(d, (old, old))
+
+    streaming.sweep_stale_work_dirs()
+    assert not stale.exists()
+    assert live.exists() and foreign.exists()
