@@ -87,7 +87,6 @@ def main() -> None:
     spark = get_spark(
         app_name="exact-spark-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -133,10 +133,13 @@ def _fold_transitive(fn, parts: list, seen: set) -> None:
     content-equality pin happened to run. Walking ``__code__.co_names``
     (including nested code objects — lambdas, comprehensions) makes the
     digest see every reachable helper and semantic constant without call
-    sites having to enumerate them."""
+    sites having to enumerate them. ``fn`` is unwrapped first: a registered
+    query's ``register`` wrapper carries the registry's code and globals,
+    not the query's."""
     import inspect
     import types
 
+    fn = inspect.unwrap(fn)
     key = getattr(fn, "__qualname__", None), getattr(fn, "__module__", None)
     if key in seen:
         return
@@ -427,7 +430,5 @@ def table(name: str, spark, sf_dir: str):
     """The declared ``name`` artifact served as a (memoized, lazy) parquet
     scan; content equals its builder's fresh output."""
     from exact_spark.io import read_parquet_memo
-    from exact_spark.session import tune_session
 
-    tune_session(spark)
     return read_parquet_memo(spark, path(name, spark, sf_dir))

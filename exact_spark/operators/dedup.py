@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from exact_spark import artifacts, io
 from exact_spark.operators.text import _SQL_TOKS, tokens_col
 from exact_spark.registry import REGISTRY, register
-from exact_spark.session import tune_session
 
 
 @register(
@@ -39,7 +38,6 @@ from exact_spark.session import tune_session
     "canonical representative = min doc_id.",
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     norm = docs.select(
         "doc_id",
@@ -136,7 +134,6 @@ def _self_pairs(ids: str, a_name: str, b_name: str):
     "sets.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sh = _shingled(spark, sf_dir).cache()
     posting = sh.select("doc_id", F.explode("shingles").alias("sh"))
     doc_sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
@@ -262,7 +259,6 @@ def _lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     "_LSH_BUCKET_CAP); exact dedup owns mass-identical content.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     bands = _lsh_bands(spark, sf_dir)
     grouped = (
         bands.groupBy("band", "bucket")
@@ -330,7 +326,6 @@ _SQL_SIMHASH = """
     "is the scale path for candidate generation).",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     toks = docs.select("doc_id", tokens_col().alias("toks"))
     counts = (
@@ -456,7 +451,6 @@ def _simhash_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Hamming recheck prunes hash collisions.",
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sims = _simhash_df(spark, sf_dir)
 
     def flip(p: int) -> Column:
@@ -646,7 +640,6 @@ def connected_components(edges: DataFrame) -> DataFrame:
     "closure.",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     # near-dup edges from the per-corpus pair-table artifact (content
     # identical to the registered dedup_minhash_lsh builder — test-pinned)
     lsh = artifacts.table("pairs_minhash_lsh", spark, sf_dir)
@@ -732,7 +725,6 @@ _DECON_MIN_SHARED = 3
     "training doc).",
 )
 def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sh = _shingled(spark, sf_dir).cache()
     posting = sh.select("doc_id", F.explode("shingles").alias("sh"))
     eval_sizes = sh.filter(F.col("doc_id") < _EVAL_N).select(
@@ -845,7 +837,6 @@ def _contaminate_fp_sql() -> str:
 def decontaminate_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.operators.text import _winnow_selected
 
-    tune_session(spark)
     sel = _winnow_selected(spark, sf_dir).select("doc_id", "fp")
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "source")
     posting = sel.join(docs, "doc_id")
@@ -959,7 +950,6 @@ def _sql_url_raw() -> str:
     "operator under test.",
 )
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     host = F.concat(F.col("source"), F.lit(".example.com"))
     raw = F.concat(
@@ -1048,7 +1038,6 @@ def _manifest_sql() -> str:
     "specs), so the manifest cannot drift from the stages it audits.",
 )
 def text_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents").filter(F.col("doc_id") >= _EVAL_N)
     fp = text_filter_pipeline(spark, sf_dir).select("doc_id", "keep")
     mix = text_sample_stratified(spark, sf_dir).select(
@@ -1139,7 +1128,6 @@ artifacts.declare(
     "same registered specs — the diagnostic cannot drift from what ships.",
 )
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     truth = artifacts.table("pairs_ngram_jaccard", spark, sf_dir)
     cand = artifacts.table("pairs_minhash_lsh", spark, sf_dir).withColumn(
         "hit", F.lit(1)
@@ -1202,7 +1190,6 @@ _SQL_FP = (
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     f = docs.select(
         "doc_id",
@@ -1286,7 +1273,6 @@ _CHUNK_DUP_MAX = 0.3
     "comparisons at any corpus size.".format(n=_CHUNK_TOKENS, m=_CHUNK_DUP_MAX),
 )
 def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col().alias("t")).filter(
         F.size("t") >= _CHUNK_TOKENS
@@ -1360,7 +1346,6 @@ _CONTAIN_MIN = 0.9
     "attribution decisions.",
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sh = _shingled(spark, sf_dir).cache()
     posting = sh.select("doc_id", F.explode("shingles").alias("sh"))
     doc_sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
@@ -1541,7 +1526,6 @@ def _fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-pair cost is a constant, per-doc cost is w kernels.",
 )
 def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     blocked = _fuzzy_blocked(spark, sf_dir)
     wb = Window.partitionBy(
         "band", F.substring("pre", 1, _FUZZY_SUBKEY_CHARS)
@@ -1780,7 +1764,6 @@ def _leakage_split_sql() -> str:
     "near-dup-aware form a 100 TB corpus needs.",
 )
 def dedup_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     comp = artifacts.table("dupcc", spark, sf_dir)
     docs = io.load(spark, sf_dir, "documents").select("doc_id")
     rooted = docs.join(comp, "doc_id", "left").select(
@@ -1850,7 +1833,6 @@ _NOVELTY_BATCH = 50  # docs per curve point
     "column rather than doc_id.",
 )
 def text_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sh = _shingled(spark, sf_dir)
     doc_tot = sh.select("doc_id", F.size("shingles").alias("n_sh"))
     posting = sh.select("doc_id", F.explode("shingles").alias("sh"))
@@ -1942,7 +1924,6 @@ def text_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def text_chunk_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col().alias("t"))
     # ONE tokenize pass: the previous shape consumed `toks`/`chunks` three
@@ -2081,7 +2062,6 @@ def _jaccard_sweep_sql() -> str:
     "million docs); the tau expansion is a 9-row broadcast.",
 )
 def text_jaccard_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     pr = artifacts.table("pairs_ngram_jaccard", spark, sf_dir)
     prd = pr.select(
         "doc_a",
@@ -2164,7 +2144,6 @@ def text_jaccard_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact).",
 )
 def dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sh = _shingled(spark, sf_dir).cache()
     posting = sh.select("doc_id", F.explode("shingles").alias("sh"))
     dfc = posting.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
@@ -2217,7 +2196,6 @@ def hot_shingle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dropped mass of _HOT_CAP: shingles whose posting list exceeds the
     hot-shingle guard in dedup_ngram_jaccard (and the other posting-keyed
     generators), plus the posting rows excluded with them."""
-    tune_session(spark)
     posting = _shingled(spark, sf_dir).select(
         "doc_id", F.explode("shingles").alias("sh")
     )
@@ -2228,7 +2206,6 @@ def lsh_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dropped mass of _LSH_BUCKET_CAP on dedup_minhash_lsh's (band, bucket)
     key. Members keep redundant routes through the other bands; the
     measured S-curve (dedup_lsh_recall) prices the residual loss."""
-    tune_session(spark)
     return _cap_census(_lsh_bands(spark, sf_dir), ["band", "bucket"], _LSH_BUCKET_CAP)
 
 
@@ -2236,7 +2213,6 @@ def simhash_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dropped mass of _LSH_BUCKET_CAP on dedup_simhash_pairs' Hamming-ball
     probe key (each doc emits 33 probes, so one hot signature shows up as
     33 hot probe buckets — redundancy the census makes visible)."""
-    tune_session(spark)
     return _cap_census(_simhash_probes(spark, sf_dir), ["probe"], _LSH_BUCKET_CAP)
 
 
@@ -2250,7 +2226,6 @@ def fuzzy_band_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot do bands run on this corpus" (per-task cost in a hot partition is
     linear in its size), and the cap column is the historical reference
     threshold, not an enforcement bound."""
-    tune_session(spark)
     return _cap_census(
         _fuzzy_blocked(spark, sf_dir).select("doc_id", "band"),
         ["band"],
@@ -2464,7 +2439,6 @@ def _merge_islands(hits: DataFrame, keys: tuple = ("doc_id",)) -> DataFrame:
     "length.",
 )
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     spans = _substring_span_table(spark, sf_dir)
     lens = spans.select(
         "doc_id", (F.col("e") - F.col("s") + 1).alias("span_len")
@@ -2567,7 +2541,6 @@ _SUB_REASSEMBLE = """
     "and no extra shuffle beyond the join back to the corpus.",
 )
 def dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return _scrub_frame(spark, sf_dir).select(
         "doc_id", "n_spans", "removed_chars", "clean_text"
     )
@@ -2674,7 +2647,6 @@ def _agreement_sql() -> str:
     "doc_b) pair and two tiny per-method aggregates.",
 )
 def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     # pure consumer: pair sets come from the per-corpus pair-table
     # artifacts (content identical to the registered builders, test-pinned)
     parts = [
@@ -2808,7 +2780,6 @@ def _union_components_sql() -> str:
     "same composed method specs.",
 )
 def dedup_method_union_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     # pure consumer of the four per-corpus pair-table artifacts
     parts = [
         artifacts.table(f"pairs_{m}", spark, sf_dir).select("doc_a", "doc_b")
@@ -2911,7 +2882,6 @@ def _funnel_sql() -> str:
     "are built once per corpus snapshot and only READ here.",
 )
 def dedup_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents").select(
         "doc_id",
         F.length("text").cast("long").alias("len"),
@@ -3027,7 +2997,6 @@ def _survivor_sql() -> str:
     "written straight back out as the next pipeline stage's input.",
 )
 def dedup_survivor_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     # ONE corpus scan: the scrub frame already carries source/orig_len
     sc = _scrub_frame(spark, sf_dir)
     comp = artifacts.table("dupcc", spark, sf_dir).select("doc_id", "component_id")
@@ -3163,7 +3132,6 @@ def _contam_span_fresh(
     "from the output by definition.",
 )
 def decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     # with_len carries length(text) through the gram pass, so contam_frac
     # needs no third documents scan (and no join) — the length rides the
     # island-merge keys, constant per doc (guide §2.4)
@@ -3251,7 +3219,6 @@ def _span_attribution_sql() -> str:
     "artifact twice; VERDICT r10) — no pairwise work.",
 )
 def dedup_span_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sp = (
         artifacts.table("subspans", spark, sf_dir)
         .groupBy("doc_id")
@@ -3399,7 +3366,6 @@ def _decon_scrub_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the corpus.",
 )
 def decontaminate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     return _decon_scrub_frame(spark, sf_dir).select(
         "doc_id", "n_spans", "removed_chars", "clean_text"
     )
@@ -3501,7 +3467,6 @@ def _release_manifest_sql() -> str:
     "window over the corpus, no driver-side state.",
 )
 def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -3632,7 +3597,6 @@ def _contam_attribution_sql() -> str:
     "and scanned it twice; VERDICT r10) — no pairwise work.",
 )
 def decontaminate_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sp = (
         artifacts.table("consp", spark, sf_dir)
         .groupBy("doc_id")
@@ -3855,7 +3819,6 @@ def _release_funnel_sql() -> str:
     "in-row; the fraction join broadcasts a single row.",
 )
 def corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     # served from the per-corpus manifest artifact (content pinned
     # identical to the registered builder, so the composed oracle holds)
     man = artifacts.table("relman", spark, sf_dir)
@@ -3932,7 +3895,6 @@ def corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "gram re-marking, no pairwise work.",
 )
 def corpus_release_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ship = artifacts.table("relman", spark, sf_dir).filter("ship").select(
         "doc_id"
     )
@@ -4034,7 +3996,6 @@ def _release_attribution_sql() -> str:
     "sum — no corpus pass, no joins at all.",
 )
 def corpus_release_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     man = artifacts.table("relman", spark, sf_dir)
     aggs = [F.count(F.lit(1)).cast("long").alias("n_docs")]
     for s in _DROP_STAGES:
@@ -4107,7 +4068,6 @@ def _release_tokens_sql() -> str:
     "r10).",
 )
 def corpus_release_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ds = artifacts.table("reldata", spark, sf_dir)
     n_toks = F.size(
         F.filter(
@@ -4242,7 +4202,6 @@ def _survivor_policy_sql() -> str:
     "work).",
 )
 def dedup_survivor_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     comp = artifacts.table("dupcc", spark, sf_dir).select(
         "doc_id", "component_id", "n_members"
     )
@@ -4320,7 +4279,6 @@ def dedup_survivor_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reduced to a single aggregate row.",
 )
 def dedup_survivor_policy_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     pol = dedup_survivor_policy(spark, sf_dir)
     n = F.count(F.lit(1))
     # zero guards: a dup-free corpus has no components — every sum
@@ -4501,7 +4459,6 @@ def _contam_bench_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over per-benchmark source rows (<= sources per benchmark).",
 )
 def decontaminate_by_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sp = _contam_bench_spans(spark, sf_dir)
     # source arrives WITH the span frame (carried through the gram pass) —
     # no separate documents scan + join to attribute chars per source
@@ -4614,7 +4571,6 @@ def _release_packed_sql() -> str:
 def corpus_release_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.operators.text import _PACK_BUDGET
 
-    tune_session(spark)
     b = _PACK_BUDGET
     ds = artifacts.table("reldata", spark, sf_dir)
     n_toks = F.size(
@@ -4767,7 +4723,6 @@ def corpus_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from exact_spark.sources.versioned import VersionedTable
 
-    tune_session(spark)
     snap_dir = artifacts.path("relsnap", spark, sf_dir)
     man_prev = artifacts.table("relman", spark, snap_dir)
     man_cur = artifacts.table("relman", spark, sf_dir)
@@ -4858,7 +4813,6 @@ def _policy_delta_sql() -> str:
 def corpus_release_policy_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    tune_session(spark)
     man = artifacts.table("relman", spark, sf_dir)
     # ONE components-artifact scan: survivor_policy_id rides every member
     # row via a window (max struct(q, -doc_id) == argmax-quality with the
@@ -4980,7 +4934,6 @@ def _release_card_sql() -> str:
     "combinable aggregate, combined by a broadcast 1-row x 1-row join.",
 )
 def corpus_release_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     man = artifacts.table("relman", spark, sf_dir)
     ship = F.col("ship")
     ms = man.agg(

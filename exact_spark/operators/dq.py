@@ -23,7 +23,6 @@ from pyspark.sql.window import Window
 
 from exact_spark import io
 from exact_spark.registry import register
-from exact_spark.session import tune_session
 
 
 @register(
@@ -76,7 +75,6 @@ from exact_spark.session import tune_session
     "size.",
 )
 def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     orders = io.load(spark, sf_dir, "orders")
     li = io.load(spark, sf_dir, "lineitem")
     cust = io.load(spark, sf_dir, "customer").select("c_custkey").distinct()
@@ -166,7 +164,6 @@ _PROFILE_COLS = (
     "instead of Expand.",
 )
 def dq_schema_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     orders = io.load(spark, sf_dir, "orders")
     aggs = []
     for c in _PROFILE_COLS:
@@ -245,8 +242,6 @@ def dq_schema_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "conditional aggregate. Output is |edges| rows of BIGINT counts.",
 )
 def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-
     def _keys(table: str, key: str, marker: str) -> DataFrame:
         return (
             io.load(spark, sf_dir, table).select(key).distinct().withColumn(marker, F.lit(1))
@@ -333,7 +328,6 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dq_crossmodal_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents").select("doc_id", "lang")
     emb = io.load(spark, sf_dir, "embeddings").select("vec_id", "label")
     cell = (
@@ -397,7 +391,6 @@ _BENFORD_SCALE = 1_000_000_000
     "broadcast. The audit is a constant-size result at any corpus size.",
 )
 def dq_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select(
         F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("long").alias("c")
     )
@@ -474,7 +467,6 @@ _PK_SPEC = [
     "linenumber) key. Constant 10-row output at any volume.",
 )
 def dq_key_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     parts = []
     for t, ks in _PK_SPEC:
         df = io.load(spark, sf_dir, t).select(*ks)

@@ -19,7 +19,6 @@ from exact_spark import io
 from exact_spark.functions import fround, sql_fround
 from exact_spark.operators.timeseries import CANON_SQL, canonical_events
 from exact_spark.registry import register
-from exact_spark.session import tune_session
 
 _P = 0.95
 
@@ -263,7 +262,6 @@ def g6_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(XGBoost.py:327-337) — imbalance weighting input.",
 )
 def g8_class_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     counts = emb.agg(
         F.sum(F.when(F.col("label") >= 5, 1).otherwise(0)).alias("n_pos"),
@@ -286,7 +284,6 @@ def g8_class_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact columns are dropped and only the sketch pass runs.",
 )
 def sketch_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ev = io.load(spark, sf_dir, "events")
     agg = ev.agg(
         F.expr("approx_percentile(value, array(0.5, 0.95, 0.99), 10000)").alias("ap"),
@@ -401,7 +398,6 @@ def ml_per_key_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     "proving merge == direct sketch.",
 )
 def sketch_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ev = io.load(spark, sf_dir, "events")
     ev = ev.select(F.to_date("ts").alias("day"), "user_id")
     daily = ev.groupBy("day").agg(
@@ -684,7 +680,6 @@ def ml_drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cluster size. One scan, one small groupBy.",
 )
 def ts_value_k_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ev = io.load(spark, sf_dir, "events")
     ext = ev.select(
         "event_type",
@@ -766,7 +761,6 @@ def ts_value_k_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ts_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    tune_session(spark)
     ev = io.load(spark, sf_dir, "events")
     ext = ev.select(
         "event_type",

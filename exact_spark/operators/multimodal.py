@@ -22,7 +22,6 @@ from pyspark.sql import types as T
 
 from exact_spark import artifacts, io
 from exact_spark.registry import register
-from exact_spark.session import tune_session
 
 try:  # decode libs absent in this environment — plumbing stays real
     from PIL import Image  # noqa: F401
@@ -125,7 +124,6 @@ def _sql_hex_int(expr: str, n_hex: int) -> str:
     "hash — the metadata path is plain column ops, oracle-checked.",
 )
 def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
@@ -174,7 +172,6 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "itself is hash-checked against the DuckDB oracle.",
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     return decode_features(with_binary_payload(docs))
 
@@ -204,7 +201,6 @@ _FRAME_K = 6
     "mapInPandas stub path (multimodal_frame_features).",
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     return _frame_idx_explode(docs.select("doc_id", "n_chars")).select(
         "doc_id", "n_frames", "frame_idx"
@@ -310,7 +306,6 @@ def frame_features(frames_with_payload: DataFrame) -> DataFrame:
     "hash-checked against the DuckDB oracle.",
 )
 def multimodal_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     # ONE scan: the payload rides through the frame-index explode, so the
     # sampled frames arrive at the Arrow decoder without the second
@@ -436,7 +431,6 @@ _SQL_HEXV = (
     ),
 )
 def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     pay = with_binary_payload(docs, kind="audio").filter(
         # sequence(0, -1) would generate a DESCENDING range — short docs
@@ -514,7 +508,6 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    tune_session(spark)
     work = pathlib.Path(tempfile.mkdtemp(prefix="exact_spark_binf_"))
     try:
         docs = (
@@ -597,7 +590,6 @@ _IMG_W_MOD, _IMG_H_MOD = 193, 151  # synthesized dims: 64..256-ish px
     ),
 )
 def multimodal_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     width = (64 + F.col("n_chars") % _IMG_W_MOD).cast("long")
     height = (64 + (F.col("n_chars") * 7) % _IMG_H_MOD).cast("long")
@@ -812,7 +804,6 @@ def _ar_case(expr: str, vals: list[int]) -> str:
     "groupBy on a 7-value key.".format(batch=_AR_BATCH),
 )
 def multimodal_aspect_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     w = (64 + F.col("n_chars") % _IMG_W_MOD).cast("long")
     h = (64 + (F.col("n_chars") * 7) % _IMG_H_MOD).cast("long")
@@ -982,7 +973,6 @@ _SQL_PHASH = f"""
     "codec wire-in and nothing downstream changes.",
 )
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     hashes = _phash_df(spark, sf_dir)
     # Carry the HASH through the band probes (guide §8: move the decision
     # metadata with the key): the Hamming recheck reads both hashes
@@ -1053,7 +1043,6 @@ def phash_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands, and the Hamming recheck prices residual precision."""
     from exact_spark.operators.dedup import _cap_census
 
-    tune_session(spark)
     hashes = _phash_df(spark, sf_dir)
     probes = hashes.select(
         "doc_id",

@@ -25,7 +25,6 @@ from pyspark.sql.window import Window
 from exact_spark import io
 from exact_spark.functions import SCALE2, favg, fixed, fround, fsum, sql_favg, sql_fixed, sql_fround, sql_fsum
 from exact_spark.registry import register
-from exact_spark.session import tune_session
 
 
 @register(
@@ -49,7 +48,6 @@ from exact_spark.session import tune_session
     "Exercises the G1-class multi-aggregate single-pass shape.",
 )
 def rel_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     li = li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
@@ -94,7 +92,6 @@ _TOP_N = 10
     "(fixed-point revenue makes the ranking reduction-order stable).",
 )
 def rel_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     orders = io.load(spark, sf_dir, "orders")
     cust = io.load(spark, sf_dir, "customer")
@@ -145,7 +142,6 @@ def rel_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lineitem->orders join shuffles (and AQE can pick broadcast there too).",
 )
 def rel_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     orders = io.load(spark, sf_dir, "orders")
     cust = io.load(spark, sf_dir, "customer")
@@ -181,7 +177,6 @@ def rel_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "natural spreading key exists.",
 )
 def rel_distinct_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     from exact_spark.functions import fixed
@@ -214,7 +209,6 @@ def rel_distinct_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     "entirely (co-located join).",
 )
 def rel_order_priority_smj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     orders = io.load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-03-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-09-01 00:00:00").cast("timestamp"))
@@ -377,7 +371,6 @@ def write_zordered(
     "the oracle exactly.",
 )
 def rel_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     orders = io.load(spark, sf_dir, "orders")
     cust = io.load(spark, sf_dir, "customer")
@@ -439,7 +432,6 @@ _Q3_TOPK = 10
     "TakeOrderedAndProject — no global sort.",
 )
 def rel_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     cust = io.load(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == _Q3_SEGMENT
     )
@@ -503,7 +495,6 @@ _Q14_TO = "2000-07-01"
     "shuffle of fact rows beyond the partial-agg combine.",
 )
 def rel_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(f"{_Q14_FROM} 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit(f"{_Q14_TO} 00:00:00").cast("timestamp"))
@@ -556,7 +547,6 @@ _Q5_TO = "2000-01-01"
     "discipline, with the revenue sum through the fixed-point kernels.",
 )
 def rel_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     orders = io.load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit(f"{_Q5_FROM} 00:00:00").cast("timestamp"))
@@ -615,7 +605,6 @@ _Q18_TOPK = 20
     "no second full lineitem pass.",
 )
 def rel_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
@@ -673,7 +662,6 @@ _Q17_TYPE = "PROMO"
     "broadcast at 100 TB); the final aggregate is a scalar.",
 )
 def rel_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     promo = io.load(spark, sf_dir, "part").filter(F.col("p_type") == _Q17_TYPE)
     j = li.join(
@@ -748,7 +736,6 @@ def _bloom_positions(key: Column) -> tuple[Column, Column]:
     "oracle is the plain semi-join.".format(bits=_BLOOM_BITS, words=_BLOOM_WORDS),
 )
 def rel_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     build = (
         io.load(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == _BLOOM_PRIORITY)
@@ -815,7 +802,6 @@ _PIVOT_NAMES = ("urgent", "high", "medium", "not_specified", "low")
     "discovery job and no separate totals branch to join back.",
 )
 def rel_pivot_priority_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     orders = io.load(spark, sf_dir, "orders")
     base = orders.select(
         F.year("o_orderdate").cast("long").alias("order_year"),
@@ -869,7 +855,6 @@ _TOPN_PER_TYPE = 3
     "global sort, no single-partition window at any group count.",
 )
 def rel_top_parts_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     part = io.load(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = (
@@ -926,7 +911,6 @@ def rel_top_parts_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "keeps the rollup reduction-order exact.",
 )
 def rel_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     cust = io.load(spark, sf_dir, "customer")
     orders = io.load(spark, sf_dir, "orders").select("o_custkey").distinct()
     nation = io.load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -981,7 +965,6 @@ _Q7_NATION_B = "NATION_2"
     "touched once.",
 )
 def rel_bilateral_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     orders = io.load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = io.load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -1051,7 +1034,6 @@ _ROLL_DAYS = 7
     "fixed-point revenue.",
 )
 def rel_rolling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -1103,7 +1085,6 @@ def rel_rolling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cube query does.",
 )
 def rel_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     agg = (
@@ -1154,7 +1135,6 @@ _Q6_QTY = 24.0
     "must execute at raw scan speed or nothing else matters.",
 )
 def rel_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     f = li.filter(
         (F.col("l_shipdate") >= F.lit(f"{_Q6_FROM} 00:00:00").cast("timestamp"))
@@ -1211,7 +1191,6 @@ _MB_BASKET_CAP = 30  # skew guard: a basket of B items expands to B^2/2 pairs
     "logs, cross-engine exact.".format(cap=_MB_BASKET_CAP),
 )
 def rel_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     # ONE pass over the fact table (guide §1.2 / §8): the old shape
     # derived items = distinct(orderkey, partkey) FOUR times (basket
@@ -1313,7 +1292,6 @@ def rel_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded passes total, none touching raw orders twice.",
 )
 def rel_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     orders = io.load(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.floor(F.max(F.col("o_orderdate").cast("timestamp").cast("double")) / 86400.0)
@@ -1375,7 +1353,6 @@ def rel_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference analog: the engine's catalog/count rollups (SURVEY §2.4);
     the outer-join-preserving count shape has no pandas counterpart —
     positional indexing cannot express 'customers with zero orders'."""
-    tune_session(spark)
     cust = io.load(spark, sf_dir, "customer").select("c_custkey")
     per_cust = (
         io.load(spark, sf_dir, "orders")
@@ -1430,7 +1407,6 @@ _Q19_SIZE_HI = max(a[1] for a in _Q19_ARMS)
     "and both scans read everything.",
 )
 def rel_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity").between(_Q19_QTY_LO, _Q19_QTY_HI)
     )
@@ -1482,7 +1458,6 @@ _Q16_SIZES = (1, 4, 9, 16, 25, 36, 49)
     "collecting supplier sets.",
 )
 def rel_supplier_cnt_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     part = io.load(spark, sf_dir, "part").filter(
         (F.col("p_brand") != _Q16_EXCL_BRAND) & F.col("p_size").isin(*_Q16_SIZES)
@@ -1523,7 +1498,6 @@ def rel_supplier_cnt_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     "integer-exact (no float share in the predicate).",
 )
 def rel_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     val_fx = F.floor(
         F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0 + F.lit(0.5)
@@ -1580,7 +1554,6 @@ _Q15_FROM, _Q15_TO = "2000-01-01", "2000-04-01"
     "the supplier dimension broadcasts for the name attach.",
 )
 def rel_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(f"{_Q15_FROM} 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit(f"{_Q15_TO} 00:00:00").cast("timestamp"))
@@ -1641,7 +1614,6 @@ _Q8_PTYPE = "PROMO"
     "out of ONE pass (no self-join of per-year totals).",
 )
 def rel_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -1724,7 +1696,6 @@ def rel_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcasts for the final census.",
 )
 def rel_sole_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_returnflag")
     per_pair = li.groupBy("l_orderkey", "l_suppkey").agg(
         F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias("has_r")
@@ -1795,7 +1766,6 @@ _Q2_REGION = "EUROPE"
     "ordering.",
 )
 def rel_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     supp = io.load(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
     nat = io.load(spark, sf_dir, "nation")
     reg = io.load(spark, sf_dir, "region").filter(F.col("r_name") == _Q2_REGION)
@@ -1871,7 +1841,6 @@ _Q4_DISC = 0.08
     "in rel_order_priority_smj.",
 )
 def rel_priority_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     orders = io.load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit(f"{_Q4_FROM} 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit(f"{_Q4_TO} 00:00:00").cast("timestamp"))
@@ -1922,7 +1891,6 @@ _Q10_TOPK = 20
     "custkey tie-break.",
 )
 def rel_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -2009,8 +1977,6 @@ def _sql_bloom_pos(salt: str, key: str) -> str:
     ),
 )
 def sketch_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-
     def pos(salt: str, key: Column) -> Column:
         h = F.md5(F.concat(F.lit(f"{salt}:"), key.cast("string")))
         return F.pmod(
@@ -2112,7 +2078,6 @@ def sketch_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from column stats instead).",
 )
 def rel_join_cardinality_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select("l_orderkey")
     orders = io.load(spark, sf_dir, "orders").select("o_orderkey")
     # ONE pass per table: collapse each side to per-key counts (map-side
@@ -2183,7 +2148,6 @@ def rel_join_cardinality_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "year rather than a fake 0.",
 )
 def rel_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -2248,7 +2212,6 @@ _Q9_NAME_TOKEN = "red"
     "and cross-engine exact — one divide at emit.",
 )
 def rel_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice", "l_discount"
     )
@@ -2311,7 +2274,6 @@ _Q12_LAG_DAYS = 60
     "exactly |flags| cells.",
 )
 def rel_ship_lag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = (
         io.load(spark, sf_dir, "lineitem")
         .filter(
@@ -2382,7 +2344,6 @@ _Q20_REGION = "ASIA"
     "quantities — no float compare.",
 )
 def rel_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     part = (
         io.load(spark, sf_dir, "part")
         .filter(F.col("p_name").like(f"{_Q20_PREFIX}%"))
@@ -2447,7 +2408,6 @@ def rel_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on the fixed-point revenue are cross-engine identical.",
 )
 def rel_customer_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     cust = io.load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nat = io.load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     orders = io.load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
@@ -2500,7 +2460,6 @@ _SLA_PCTS = (0.5, 0.9, 0.99)
     "inputs make every interpolated cut cross-engine exact.",
 )
 def rel_ship_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     orders = io.load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
@@ -2578,7 +2537,6 @@ def rel_ship_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one bucket by construction (boundaries are value cut points).",
 )
 def rel_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     rev_fx = F.floor(
         F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100.0 + F.lit(0.5)
@@ -2658,7 +2616,6 @@ def basket_cap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     real data, the fuzzy-edit SNM precedent applies)."""
     from exact_spark.operators.dedup import _cap_census
 
-    tune_session(spark)
     li = io.load(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey").distinct()
     return _cap_census(items, ["l_orderkey"], _MB_BASKET_CAP)

@@ -21,7 +21,6 @@ from exact_spark import artifacts, io
 from exact_spark.artifacts import memo_put
 from exact_spark.functions import favg, sql_fround
 from exact_spark.registry import register
-from exact_spark.session import tune_session
 
 _SCALE9 = 1_000_000_000
 _N_QUERIES = 10
@@ -90,7 +89,6 @@ def cosine_from_fixed(dot_fx: Column, na_fx: Column, nb_fx: Column) -> Column:
     "dot/norm kernels.",
 )
 def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     norms = emb.select(
         "vec_id", "embedding", "label", dot_fixed(F.col("embedding"), F.col("embedding")).alias("norm_fx")
@@ -249,7 +247,6 @@ def _emb_bands(sigs: DataFrame) -> DataFrame:
     "as the text LSH variants).",
 )
 def sim_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     sigs = _emb_sigs(spark, sf_dir).cache()
     # the signature table feeds both band sides and both cosine sides; at
     # scale this is the materialized signature table
@@ -349,7 +346,6 @@ _N_PROBE = 4  # cells probed per query
     "instead of seed rows.",
 )
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     norms = emb.select(
         "vec_id", "embedding", "label",
@@ -525,7 +521,6 @@ def _tuned_nprobe(norms: DataFrame, cent: DataFrame, target: float) -> int:
     "regression test pins it >= the seed-row index.",
 )
 def sim_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     cent = _kmeans_centroids(spark, sf_dir, _N_CELLS, exclude_queries=True)
     norms = emb.select(
@@ -660,7 +655,6 @@ def _kmeans_centroids(
     "search consumer path); deterministic tie-breaks.",
 )
 def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     norms = emb.select(
         "vec_id", "embedding", "label", dot_fixed(F.col("embedding"), F.col("embedding")).alias("norm_fx")
@@ -747,7 +741,6 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scale.",
 )
 def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     xd = lambda x: x.cast("double")  # noqa: E731
     scale = F.array_max(F.transform(F.col("embedding"), lambda x: F.abs(xd(x)))) / 127.0
@@ -1101,7 +1094,6 @@ def _semantic_dropped(
     "quantizer at scale.",
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     k = _sem_k(_sem_corpus_n(spark, sf_dir))
     norms = emb.select(
@@ -1129,7 +1121,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ceil(N/64)) sizing the trained quantizer).",
 )
 def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     cent = _kmeans_centroids(spark, sf_dir, _sem_k(_sem_corpus_n(spark, sf_dir)))
     norms = emb.select(
@@ -1287,7 +1278,6 @@ _SQL_PQ_CODES = f"""
     "column a pipeline monitors.",
 )
 def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     cb = _pq_codebook(spark, sf_dir)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     staged = emb.select(
@@ -1342,7 +1332,6 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "256-byte embeddings (plus the final per-query top-k shuffle).",
 )
 def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     cb = _pq_codebook(spark, sf_dir)
     codes = emb_pq_encode(spark, sf_dir)
     emb = io.load(spark, sf_dir, "embeddings")
@@ -1465,7 +1454,6 @@ def _sql_ivfpq_topk() -> str:
     "final per-query top-k window.",
 )
 def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     cb = _pq_codebook(spark, sf_dir)
     emb = io.load(spark, sf_dir, "embeddings")
     norms = emb.select(
@@ -1615,7 +1603,6 @@ _RANGE_MIN_COS = 0.30  # radius for the range-search demo
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.functions import fround
 
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     norms = emb.select(
         "vec_id", "embedding",
@@ -1693,7 +1680,6 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fixed-point kernels so the profile is partition-order exact.",
 )
 def sim_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     norms = emb.select(
         "vec_id", "label", "embedding",
@@ -1829,7 +1815,6 @@ def _pca_whitening_model(
     "mean after (== 0) — through the fixed-point kernels.",
 )
 def emb_pca_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     mu, comps, evals = _pca_whitening_model(spark, sf_dir, _PCA_DIMS)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     mu_arr = F.array(*[F.lit(v) for v in mu])
@@ -2069,7 +2054,6 @@ def _pagerank_sql() -> str:
     "Output: the top-{k} hubs.".format(it=_PR_ITERS, k=_PR_TOPK),
 )
 def sim_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     edges = (
         artifacts.table("knng", spark, sf_dir)
         .select(F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst"))
@@ -2322,7 +2306,6 @@ def sim_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never splits into per-batch scans.",
 )
 def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     dims = emb.select(
         (F.col("vec_id") % 2).alias("batch"),
@@ -2423,7 +2406,6 @@ def _mrl_sql() -> str:
     "key and every per-k statistic reduces in one pass.".format(d=_MRL_DIMS),
 )
 def emb_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     pairs = sim_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id", "cosine")
     emb = io.load(spark, sf_dir, "embeddings")
     eq = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
@@ -2695,7 +2677,6 @@ artifacts.declare(
     "label in one scan + one tiny groupBy.",
 )
 def emb_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     nsq = dot_fixed(F.col("embedding"), F.col("embedding"))
     norms = emb.select("label", nsq.alias("nsq_fx"))
@@ -2878,7 +2859,6 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "all-integer (n*s2 - s1^2) divided once.",
 )
 def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     el = emb.select(
         F.posexplode("embedding").alias("dim", "e")
@@ -2959,7 +2939,6 @@ def _index_manifest_sql() -> str:
     "pass over the corpus.",
 )
 def emb_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     nz = emb.select(
         "vec_id",
@@ -3018,7 +2997,6 @@ def emb_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "until the final per-cell divides.",
 )
 def emb_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     cb = _pq_codebook(spark, sf_dir)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     staged = emb.select(
@@ -3097,7 +3075,6 @@ def _kcore_sql() -> str:
     "dedup_components.".format(k=_KCORE_K, r=_KCORE_ROUNDS),
 )
 def sim_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     g = artifacts.table("knng", spark, sf_dir)
     e = (
         g.select(F.col("vec_id").alias("a"), F.col("neighbor_id").alias("b"))
@@ -3203,7 +3180,6 @@ def _rp_sql_proj() -> str:
     ),
 )
 def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _RP_SAMPLE)
 
     def proj_component(j: int):
@@ -3370,7 +3346,6 @@ def _mmr_pool_sql() -> str:
     "not the corpus.".format(k=_MMR_K, p=_MMR_POOL),
 )
 def sim_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     rows = _mmr_greedy_rows(spark, sf_dir)
     return spark.createDataFrame(
         rows,
@@ -3577,7 +3552,6 @@ _SQL_HAM_CODES = f"""
     "memory when the float table cannot — 16 GB per billion vectors.",
 )
 def emb_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     codes = emb.select(
         "vec_id", _sign_word(1, 32).alias("w_lo"), _sign_word(33, 64).alias("w_hi")
@@ -3632,7 +3606,6 @@ def _hamming_recall_sql() -> str:
     ),
 )
 def emb_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ham = emb_hamming_topk(spark, sf_dir).select("query_id", "neighbor_id")
     exact = sim_topk_cosine(spark, sf_dir).select(
         F.col("query_id").alias("e_qid"), F.col("neighbor_id").alias("e_nid")
@@ -3711,7 +3684,6 @@ def _diversity_gain_sql() -> str:
     "any corpus size.",
 )
 def sim_diversity_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings")
     norms = emb.select(
         "vec_id",
@@ -3794,7 +3766,6 @@ def emb_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     band; the measured recall diagnostics price the residual loss."""
     from exact_spark.operators.dedup import _cap_census
 
-    tune_session(spark)
     bands = _emb_bands(_emb_sigs(spark, sf_dir))
     return _cap_census(bands, ["band", "bucket"], _EMB_BUCKET_CAP)
 
@@ -3815,7 +3786,6 @@ def sem_chunk_census(
     reports the occupancy-driven k and the corpus size, so a cross-SF read
     shows max cluster size staying ~flat while N grows (the scale property
     tests/test_cap_diagnostics.py pins)."""
-    tune_session(spark)
     emb = io.load(spark, sf_dir, "embeddings", spread=True)
     n_corpus = _sem_corpus_n(spark, sf_dir)
     k = _sem_k(n_corpus)

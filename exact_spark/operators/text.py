@@ -19,7 +19,6 @@ from pyspark.sql.window import Window
 from exact_spark import artifacts, io
 from exact_spark.functions import fixed, fround, sql_fixed, sql_fround
 from exact_spark.registry import register
-from exact_spark.session import tune_session
 
 # Shared token spec.
 _SQL_TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
@@ -121,7 +120,6 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_profile_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
@@ -294,7 +292,6 @@ _MIN_QUALITY = 0.45  # compared on the 1e-4-rounded score in BOTH engines
 def text_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens_col().alias("toks"))
     n_tokens = F.size("toks")
@@ -396,7 +393,6 @@ _MIX_DEFAULT_RATE = 1.0
 def text_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     rate = F.lit(_MIX_DEFAULT_RATE)
     for k, v in reversed(_MIX_RATES.items()):
@@ -455,7 +451,6 @@ _VOCAB_K = 200
 def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     toks = docs.select("doc_id", F.explode(tokens_col()).alias("tok"))
     counts = toks.groupBy("tok").agg(
@@ -556,7 +551,6 @@ def _max_run_count(sorted_arr: Column) -> Column:
     "parallel at any corpus size.",
 )
 def text_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     base = docs.select("doc_id", tokens_col().alias("t")).filter(
         F.size("t") >= _REP_MIN_WORDS
@@ -641,7 +635,6 @@ _PACK_MAX_PARTIALS = 10_000  # cap on driver-held bucket partials (see below)
     "corpus size; the oracle is the equivalent single ORDER BY cumsum.",
 )
 def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     # ADAPTIVE bucket width: the driver holds one partial per bucket, so
     # the width widens with the corpus to keep at most _PACK_MAX_PARTIALS
@@ -726,7 +719,6 @@ _N_SHARDS = 8
     "write.partitionBy(shard).",
 )
 def text_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     shard = (
         F.expr(
@@ -792,7 +784,6 @@ def text_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in-row sort of (pos, id) structs.",
 )
 def text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     vocab = text_vocab_topk(spark, sf_dir).select("tok", "rank")
     docs = io.load(spark, sf_dir, "documents", spread=True)
     base = docs.select("doc_id", tokens_col().alias("t")).filter(F.size("t") >= 1)
@@ -835,7 +826,6 @@ def text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcastable over-() normalization window.",
 )
 def text_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     prof = artifacts.table("textprof", spark, sf_dir)
     src = io.load(spark, sf_dir, "documents").select("doc_id", "source")
     j = prof.select("doc_id", "n_tokens", "quality_score").join(src, "doc_id")
@@ -915,7 +905,6 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.functions import vector_to_array
 
-    tune_session(spark)
     prof = artifacts.table("textprof", spark, sf_dir).select(
         "doc_id", "n_tokens", "distinct_ratio", "stopword_ratio",
         "avg_token_len", "n_bpe_est",
@@ -1015,7 +1004,6 @@ def _cms_idx(r: int, tok: Column) -> Column:
     "the shard — the fixed-size-state property that makes it streamable.",
 )
 def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     toks = docs.select(
         (F.col("doc_id") / _CMS_BUCKET).cast("long").alias("part"),
@@ -1107,7 +1095,6 @@ _LM_SURPRISE_P = 0.001  # transition-probability floor for "surprising"
     "shape that holds when the bigram table is billions of rows.",
 )
 def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     base = docs.select("doc_id", tokens_col().alias("t"))
     bi = (
@@ -1208,7 +1195,6 @@ _WS_BUCKETS = 256  # md5 first-byte prefix buckets for the prefix sum
     "parallel; sum(n_picks) == k by construction at any corpus size.",
 )
 def text_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     base = (
         docs.select("doc_id", F.size(tokens_col()).cast("long").alias("w"))
@@ -1291,7 +1277,6 @@ _IDF_TOPK = 3
     "no skew, no global sort, at any corpus size.".format(k=_IDF_TOPK),
 )
 def text_idf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     toks = docs.select("doc_id", F.explode(tokens_col()).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
@@ -1346,7 +1331,6 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
 
     schema = T.StructType(
@@ -1433,7 +1417,6 @@ _FH_BUCKETS = 32
     "vocabulary broadcast text_tokenize_ids ships.".format(b=_FH_BUCKETS),
 )
 def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     toks = docs.select("doc_id", F.explode(tokens_col()).alias("token"))
     h = F.md5(F.col("token"))
@@ -1506,7 +1489,6 @@ _PMI_TOPK = 50
     "linear, never quadratic.".format(w=_PMI_WINDOW),
 )
 def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     toks = docs.select("doc_id", tokens_col().alias("t"))
     pos = toks.select(
@@ -1603,7 +1585,6 @@ def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "needs DECIMAL at that scale.)",
 )
 def text_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     counts = (
         docs.select("source", F.explode(tokens_col()).alias("w"))
@@ -1651,7 +1632,6 @@ _CHUNK_STRIDE = 150  # 50-char overlap
     "duplicating text.".format(s=_CHUNK_SIZE, t=_CHUNK_STRIDE, o=_CHUNK_SIZE - _CHUNK_STRIDE),
 )
 def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     n_chunks = F.ceil(F.col("n_chars") / float(_CHUNK_STRIDE)).cast("long")
     chunk = F.substring(
@@ -1713,7 +1693,6 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "measure, same rationale as dedup_containment).",
 )
 def text_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     t = docs.select("source", tokens_col().alias("toks")).filter(F.size("toks") >= 3)
     tri = F.transform(
@@ -1802,7 +1781,6 @@ _VOCAB_KS = (10, 100, 1000)
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     tf = (
         docs.select(F.explode(tokens_col()).alias("w"))
@@ -2029,7 +2007,6 @@ def _bpe_sql() -> str:
     "— not just application — is oracle-hash-checked.",
 )
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     state = _bpe_word_freq(spark, sf_dir).select(
         "word",
         "freq",
@@ -2080,7 +2057,6 @@ def _bpe_apply_sql() -> str:
     "all-integer subtraction divided once by the exact token count.",
 )
 def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     state = _bpe_word_freq(spark, sf_dir).select(
         "word",
         "freq",
@@ -2158,7 +2134,6 @@ _SQL_WINNOW_SELECTED = f"""
 
 def _winnow_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fp, c): distinct winnow-selected fingerprints per doc."""
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     t = docs.select("doc_id", tokens_col().alias("toks")).filter(F.size("toks") >= 3)
     tri = F.transform(
@@ -2322,7 +2297,6 @@ _ZIPF_K = 30
 def text_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents", spread=True)
     counts = (
         docs.select(F.explode(tokens_col()).alias("tok"))
@@ -2404,7 +2378,6 @@ _TMIX_SEED = "tmix:"
 def text_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    tune_session(spark)
     docs = io.load(spark, sf_dir, "documents")
     # The language census is a handful of rows — collect it and do the
     # fixed-point share math on the driver (the text_weighted_sample
@@ -2494,7 +2467,6 @@ def _token_budget_sql() -> str:
     "downstream — the shuffle carries (id, tokens, score), never text.",
 )
 def text_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     prof = artifacts.table("textprof", spark, sf_dir).select(
         "doc_id", "n_tokens", "quality_score"
     )

@@ -46,7 +46,6 @@ from exact_spark.functions import (
     sql_fsum,
 )
 from exact_spark.registry import register
-from exact_spark.session import tune_session
 
 # Canonicalization shared by many queries (Spark + oracle mirror).
 CANON_SQL = """
@@ -168,7 +167,6 @@ def canonical_events_range(
     recorded granularity) keep directories outside the span from even
     being listed — at 100 TB a 2-day span touches 2 date dirs, not the
     table. The exact epoch bounds then push into the surviving scans."""
-    tune_session(spark)
     path = canonical_table_path(spark, sf_dir)
     df = io.read_parquet_memo(spark, path)
     lo = F.to_date(F.timestamp_seconds(F.lit(float(t0))))
@@ -242,7 +240,6 @@ _T1 = 1705708800.0  # 2024-01-20 00:00:00 UTC
     "exact ts_epoch bounds push into the parquet scan of the survivors.",
 )
 def ts_time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     path = canonical_table_path(spark, sf_dir)
     df = io.read_parquet_memo(spark, path)
     lo = F.to_date(F.timestamp_seconds(F.lit(_T0)))
@@ -404,7 +401,6 @@ def ts_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ties at equal timestamps match the inclusive as-of contract exactly.",
 )
 def ts_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ev = io.load(spark, sf_dir, "events")
     ev = ev.withColumn("__us", epoch_micros(ev, "ts"))
     w = (
@@ -888,7 +884,6 @@ def ts_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a low-cardinality key; all aggregates are integer-exact.",
 )
 def ts_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
     ev = io.load(spark, sf_dir, "events")
     ext = ev.select(
         "event_type",

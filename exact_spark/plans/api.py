@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.plans.batch import BatchJob, run_batch
+from exact_spark.session import tune_session
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import get_file_columns
 
@@ -30,7 +31,7 @@ INJECTION_METHODS = ("spike", "step", "lowered", "offline", "custom")
 class EngineAPI:
     def __init__(self, spark: SparkSession, warehouse_dir: str, output_dir: str,
                  datasets_dir: str | None = None, analytics_dir: str | None = None):
-        self.spark = spark
+        self.spark = tune_session(spark)
         self.catalog = JobCatalog(spark, warehouse_dir)
         self.output_dir = pathlib.Path(output_dir)
         self.datasets_dir = pathlib.Path(datasets_dir) if datasets_dir else None
@@ -93,9 +94,7 @@ class EngineAPI:
         if target is None:
             raise ValueError("no sf_dir configured for run-sql")
         from exact_spark import io as _io
-        from exact_spark.session import tune_session
 
-        tune_session(self.spark)
         for t in _io.TABLES:
             _io.load(self.spark, target, t).createOrReplaceTempView(t)
         df = self.spark.sql(sql).limit(int(limit))

@@ -41,6 +41,7 @@ import pandas as pd
 
 from exact_spark.plans.api import EngineAPI
 from exact_spark.plans.batch import BatchJob
+from exact_spark.sources.catalog import BATCH_PREFIX, STREAM_PREFIX
 
 _RECV_CHUNK = 4096
 
@@ -49,7 +50,7 @@ def _strip_job_prefix(name: str) -> str:
     """The reference client pre-prefixes names (api.py:28 sends
     ``job_batch_<name>``); the engine-side catalog prefixes again, so
     normalize to the bare job name."""
-    for p in ("job_batch_", "job_stream_"):
+    for p in (BATCH_PREFIX, STREAM_PREFIX):
         if name.startswith(p):
             return name[len(p):]
     return name
@@ -154,6 +155,18 @@ class EngineServer:
                 conn.close()
 
     # -- dispatch (engine.py:158-404) ----------------------------------------
+    def _job_from_request(self, data: dict) -> BatchJob:
+        """The job a ``run-batch`` or ``run-stream`` request describes."""
+        return BatchJob(
+            job_name=_strip_job_prefix(data["name"]),
+            filepath=str((self.api.datasets_dir or pathlib.Path(".")) / data["dataset"]),
+            time_col=data.get("time_column") or "timestamp",
+            label_col=data.get("label_column"),
+            anomaly_settings=_parse_settings(data.get("inj_params")),
+            model=data.get("model", "threshold"),
+            model_params=data.get("model_params") or {},
+        )
+
     def _handle(self, conn: socket.socket, data: dict) -> None:
         method = data["METHOD"]
         send = lambda obj: conn.sendall(json.dumps(obj).encode("utf-8"))  # noqa: E731
@@ -167,7 +180,7 @@ class EngineServer:
                     else None
                 )
                 name = _strip_job_prefix(data["job_name"])
-                stream = data["job_name"].startswith("job_stream_")
+                stream = data["job_name"].startswith(STREAM_PREFIX)
                 payload = self.api.get_data(
                     name, from_dt, to_dt, stream=stream,
                     limit=data.get("limit"), offset=int(data.get("offset", 0)),
@@ -186,17 +199,7 @@ class EngineServer:
                 send({"error": f"Invalid timestamp format: {e}", "data": None})
 
         elif method == "run-batch":
-            job = BatchJob(
-                job_name=_strip_job_prefix(data["name"]),
-                filepath=str(
-                    (self.api.datasets_dir or pathlib.Path(".")) / data["dataset"]
-                ),
-                time_col=data.get("time_column") or "timestamp",
-                label_col=data.get("label_column"),
-                anomaly_settings=_parse_settings(data.get("inj_params")),
-                model=data.get("model", "threshold"),
-                model_params=data.get("model_params") or {},
-            )
+            job = self._job_from_request(data)
             t = threading.Thread(
                 target=self._run_job,
                 args=(job.job_name, self.api.run_batch, job),
@@ -208,17 +211,7 @@ class EngineServer:
         elif method == "run-stream":
             from exact_spark.plans.stream import run_stream
 
-            job = BatchJob(
-                job_name=_strip_job_prefix(data["name"]),
-                filepath=str(
-                    (self.api.datasets_dir or pathlib.Path(".")) / data["dataset"]
-                ),
-                time_col=data.get("time_column") or "timestamp",
-                label_col=data.get("label_column"),
-                anomaly_settings=_parse_settings(data.get("inj_params")),
-                model=data.get("model", "threshold"),
-                model_params=data.get("model_params") or {},
-            )
+            job = self._job_from_request(data)
             t = threading.Thread(
                 target=self._run_job,
                 args=(job.job_name, run_stream,

@@ -7,10 +7,13 @@ parquet tables. ``__spark_entry__.py`` exposes this registry to the driver.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from exact_spark.session import tune_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -27,13 +30,20 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, sql: str | None, doc: str = ""):
-    """Decorator registering a query + its oracle SQL."""
+    """Decorator registering a query + its oracle SQL. The registered (and
+    returned) callable tunes the session it is handed before the query body
+    runs, whoever calls it: the driver, ``REGISTRY`` or a direct import."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, sql=sql, doc=doc or (fn.__doc__ or ""))
-        return fn
+
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            return fn(tune_session(spark), *args, **kwargs)
+
+        REGISTRY[name] = QuerySpec(name=name, fn=tuned, sql=sql, doc=doc or (fn.__doc__ or ""))
+        return tuned
 
     return deco
 

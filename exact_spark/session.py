@@ -1,11 +1,21 @@
-"""SparkSession factory with scale-oriented defaults.
+"""One engine session policy for every Spark session the engine runs on.
 
-Designed for a multi-executor cluster reading ~100 TB:
-- AQE on (runtime coalescing, skew-join splitting, dynamic join strategy)
-- Arrow for any pandas-UDF exchange
-- UTC session timezone (all EXACT semantics are UTC; SURVEY §1.3)
-- broadcast threshold raised: dimension tables (region/nation/supplier/part,
-  prediction-id sides of flag writebacks) are tiny relative to fact tables.
+Invariant: before any engine code plans a query, its session carries
+``DEFAULT_CONF`` plus ``spark.sql.shuffle.partitions =
+max(defaultParallelism, 8)``. ``tune_session`` applies that policy, and it
+has exactly three call sites, which together cover every way in:
+
+- ``get_spark`` tunes the session it builds (bench, tests, tools);
+- ``registry.register`` wraps every registered query so it tunes the
+  session it is handed before its body runs (the driver's vanilla
+  session, ``REGISTRY``, direct imports);
+- ``EngineAPI.__init__`` tunes the session the control plane serves on
+  (batch jobs, streams, get-data, run-sql).
+
+The policy: AQE on (runtime coalescing, skew-join splitting, dynamic join
+strategy), Arrow for pandas exchange, a UTC session zone (all EXACT
+semantics are UTC; SURVEY §1.3), and a raised broadcast threshold, since
+dimension tables and flag-writeback id sides are tiny next to fact tables.
 """
 
 from __future__ import annotations
@@ -23,25 +33,18 @@ DEFAULT_CONF = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.parquet.filterPushdown": "true",
-    # guide §3.1/§9: let the planner pick shuffled-hash over sort-merge
-    # when its size conditions hold — skips both sort passes on joins
-    # whose per-partition build side fits (results unaffected; the one
-    # deliberate sort-merge demo, rel_order_priority_smj, pins its
-    # strategy with an explicit merge hint).
-    # Scale-safety sizing (VERDICT r11 item 8): the planner only picks SHJ
-    # when canBuildLocalHashMap holds — build-side ESTIMATE below
-    # autoBroadcastJoinThreshold (64 MiB here) x shuffle.partitions, AND
-    # the build side at least 3x smaller than the probe side. Per-task
-    # build memory is therefore bounded by ~64 MiB x (actual rows landing
-    # in one partition / estimate accuracy); a build side that
-    # misestimates cannot sort-spill the way SMJ can, but every SHJ in
-    # this registry builds on a grouped/aggregated side (per-key counts,
-    # distinct fingerprint sets) whose post-shuffle partitions AQE has
-    # already sized, and skewJoin splitting applies to SHJ too. On a
-    # cluster, revisit the product (threshold x partitions) against
-    # executor memory; only 3 registry plans carried SMJ before this, so
-    # reverting is cheap (tests/test_r12_ops.py::
-    # test_shj_conf_join_strategy_pins pins the affected plans' strategies).
+    # Let the planner pick shuffled-hash over sort-merge when its size
+    # conditions hold: it skips both sort passes (results are unaffected;
+    # rel_order_priority_smj pins sort-merge with an explicit hint). The
+    # planner picks SHJ only when the build side's ESTIMATE is below
+    # autoBroadcastJoinThreshold x shuffle.partitions and at least 3x
+    # smaller than the probe side, so per-task build memory is bounded by
+    # about the threshold. An SHJ build side cannot sort-spill the way SMJ
+    # can; every SHJ in this registry builds on an aggregated side whose
+    # post-shuffle partitions AQE has sized, and skew-join splitting
+    # applies to SHJ too. On a cluster, check threshold x partitions
+    # against executor memory. tests/test_plan_shapes.py::
+    # test_shj_conf_join_strategy_pins pins the affected plans' strategies.
     "spark.sql.join.preferSortMergeJoin": "false",
     # guide §6: zstd for everything we write (catalog tables, artifacts)
     # — smaller than snappy at similar read speed
@@ -51,7 +54,6 @@ DEFAULT_CONF = {
     # rejects NANOS otherwise); micros arrive as TIMESTAMP_NTZ. Both are
     # handled dtype-driven in functions.epoch_micros.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.ui.enabled": "false",
 }
 
 # Static (JVM-start-only) confs — effective for sessions WE build
@@ -59,59 +61,48 @@ DEFAULT_CONF = {
 # runs every task in the driver JVM, whose 1g default heap GC-thrashes a
 # 32-thread suite (the observed multi-second bimodal query spikes), and
 # 65 queries of unique whole-stage codegen fill the default JIT code
-# cache. On a real cluster these become executor JVM sizing.
+# cache. On a real cluster these become executor JVM sizing. The web UI
+# stays off: runs report through local files and open no port.
 STATIC_CONF = {
     "spark.driver.memory": "16g",
     "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=512m",
+    "spark.ui.enabled": "false",
 }
 
 
 def get_spark(
     app_name: str = "exact-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's tuned defaults."""
+    """Build (or reuse) a SparkSession and tune it."""
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = builder.master(master)
-    conf = {**DEFAULT_CONF, **STATIC_CONF}
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    else:
-        conf.setdefault("spark.sql.shuffle.partitions", "32")
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in {**STATIC_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return tune_session(builder.getOrCreate())
 
 
-#: applicationIds already tuned — tune_session is called at the top of
-#: every registered query (and again by every helper it composes), and
-#: each call is ~a dozen py4j conf.set round-trips; across a 266-query
-#: suite that is seconds of pure driver chatter for settings that never
-#: change within a session. The set makes repeat calls free.
+#: applicationIds already tuned. Each tuning is about a dozen py4j
+#: ``conf.set`` round-trips, and a registered query tunes on every call, so
+#: a repeat call on a tuned session costs one set lookup instead. The key
+#: is the one ``io._SCAN_MEMO`` uses.
 _TUNED_APPS: set[str] = set()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-created
-    session (the driver hands us one); safe and idempotent.
+    """Apply the engine's runtime conf policy to ``spark`` and return it.
 
-    Every key in DEFAULT_CONF is runtime-settable (none are static
-    SparkContext confs). The one addition is sizing
-    ``spark.sql.shuffle.partitions`` to the session's actual parallelism:
-    an untuned session defaults to 200, which turns every small shuffle
-    into 200 near-empty tasks locally, while on a big cluster the
-    defaultParallelism-based value scales up with the executor count (AQE
-    coalescing then trims per-query). Applied once per session
-    (memoized on applicationId); the streaming demos' temporary
-    shuffle-partition override restores the tuned value itself, so
-    skipping repeat calls cannot serve a stale partition count.
+    Sets every ``DEFAULT_CONF`` key (all runtime-settable) and sizes
+    ``spark.sql.shuffle.partitions`` to ``max(defaultParallelism, 8)``:
+    Spark's default of 200 turns each small local shuffle into 200
+    near-empty tasks, while on a cluster the count grows with the executors
+    and AQE coalescing trims it per query. Idempotent, and applied once per
+    application (memoized on applicationId); code that overrides a key
+    temporarily, like the streaming demos' partition override, restores it.
     """
     try:
         app = spark.sparkContext.applicationId
@@ -120,8 +111,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
     if app is not None and app in _TUNED_APPS:
         return spark
     for k, v in DEFAULT_CONF.items():
-        if k == "spark.ui.enabled":  # static conf; only settable at build
-            continue
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf may be static in some envs

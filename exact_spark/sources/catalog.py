@@ -565,9 +565,7 @@ def catalog_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pathlib
 
     from exact_spark.operators.timeseries import canonical_table_path
-    from exact_spark.session import tune_session
 
-    tune_session(spark)
     target_file_bytes = 128 * 1024 * 1024  # compact_table's default
     base = pathlib.Path(canonical_table_path(spark, sf_dir))
 

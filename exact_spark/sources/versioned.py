@@ -271,9 +271,7 @@ def catalog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from exact_spark import io
     from exact_spark.functions import epoch_micros
-    from exact_spark.session import tune_session
 
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="exact_spark_vt_")
     try:
         ev = io.load(spark, sf_dir, "events")
@@ -381,9 +379,7 @@ def catalog_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from exact_spark import io
     from exact_spark.functions import epoch_micros
-    from exact_spark.session import tune_session
 
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="exact_spark_vdiff_")
     try:
         ev = io.load(spark, sf_dir, "events")
@@ -466,9 +462,7 @@ def catalog_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from exact_spark import io
     from exact_spark.functions import epoch_micros
-    from exact_spark.session import tune_session
 
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="exact_spark_mu_")
     try:
         ev = io.load(spark, sf_dir, "events")
@@ -569,9 +563,7 @@ def catalog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from exact_spark import io
-    from exact_spark.session import tune_session
 
-    tune_session(spark)
     work = tempfile.mkdtemp(prefix="exact_spark_se_")
     try:
         ev = (

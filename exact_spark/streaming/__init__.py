@@ -155,9 +155,7 @@ def _bounded_events(
     generation (dtype-driven epoch handling)."""
     from exact_spark import io
     from exact_spark.functions import epoch_micros
-    from exact_spark.session import tune_session
 
-    tune_session(spark)
     ev = io.load(spark, sf_dir, "events")
     ev = ev.withColumn("__ep_us", epoch_micros(ev, "ts"))
     lo = ev.agg(F.min("__ep_us")).collect()[0][0] or 0

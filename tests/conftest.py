@@ -15,7 +15,7 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="exact-spark-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(app_name="exact-spark-tests", master="local[4]")
     yield s
     s.stop()
 

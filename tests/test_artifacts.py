@@ -279,6 +279,41 @@ def test_builder_salt_sees_transitive_helpers():
     assert builder_salt("dedup_minhash_lsh") == before  # restore exact
 
 
+def test_curation_manifest_salt_tracks_builder_code():
+    """A change anywhere in the composed trio (filter pipeline, mix
+    sampler, decontaminate_ngram — reached transitively from the
+    registered builder) must re-fingerprint the artifact tag so consumers
+    can never serve a stale manifest."""
+    from exact_spark.artifacts import builder_salt
+    from exact_spark.operators import text as text_mod
+
+    base = builder_salt("text_curation_manifest")
+    # builder_salt folds module-level semantic constants transitively;
+    # perturb one that lives two hops away (text_filter_pipeline's
+    # quality threshold) and confirm the digest moves
+    old = text_mod._MIN_QUALITY
+    text_mod._MIN_QUALITY = old + 0.001
+    try:
+        assert builder_salt("text_curation_manifest") != base
+    finally:
+        text_mod._MIN_QUALITY = old
+    assert builder_salt("text_curation_manifest") == base
+
+
+def test_release_manifest_consumes_curation_artifact(spark, sf_dir):
+    """corpus_release_manifest's plan must read the curation manifest
+    from the per-corpus artifact (one narrow parquet scan) instead of
+    re-expanding the trio's lineage — the r11 plan carried documents x5;
+    the composed-fresh floor is now documents x1 (the manifest's own
+    md5-normalize pass)."""
+    from exact_spark.operators.dedup import corpus_release_manifest
+
+    plan = corpus_release_manifest(spark, sf_dir)._jdf.queryExecution().toString()
+    assert "curman_" in plan  # the artifact scan
+    # exactly one scan of the raw corpus: the md5-normalize keeper pass
+    assert plan.count("documents.parquet") == 1
+
+
 # --- declared artifacts -------------------------------------------------------
 
 

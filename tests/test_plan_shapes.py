@@ -728,3 +728,27 @@ def test_r11d_min_cost_supplier_single_dim_pass(spark, sf_dir):
         assert _plan(df).count("InMemoryTableScan") >= 2
     finally:
         spark.catalog.clearCache()
+
+
+def test_shj_conf_join_strategy_pins(spark, sf_dir):
+    """preferSortMergeJoin=false (session.py): the registry plans whose
+    shuffle joins meet the planner's shuffled-hash size rule (build side
+    at least 3x smaller than the probe side) pick shuffled-hash under the
+    default conf, and the deliberate sort-merge demo keeps its hinted
+    strategy. Joins of near-equal per-key sides (rel_join_cardinality_check)
+    stay sort-merge by that rule, and plans that broadcast at this scale
+    are not pinned."""
+    from exact_spark.operators.dedup import decontaminate_by_benchmark
+    from exact_spark.operators.relational import rel_order_priority_smj
+    from exact_spark.operators.similarity import (
+        sim_graph_pagerank,
+        sim_threshold_sweep,
+    )
+
+    smj_demo = rel_order_priority_smj(spark, sf_dir)._jdf.queryExecution().toString()
+    assert "SortMergeJoin" in smj_demo  # merge hint pins the demo
+
+    for q in (decontaminate_by_benchmark, sim_graph_pagerank, sim_threshold_sweep):
+        plan = q(spark, sf_dir)._jdf.queryExecution().toString()
+        assert "ShuffledHashJoin" in plan, q.__name__
+        assert "SortMergeJoin" not in plan, q.__name__

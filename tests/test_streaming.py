@@ -464,3 +464,53 @@ def test_stream_stream_join_matches_across_chunks_near_horizon(
     q.awaitTermination(60)
     out = spark.sql(f"SELECT purchase_id, view_id FROM sje_t_{chunks}").collect()
     assert any(r["purchase_id"] == 200 and r["view_id"] == 100 for r in out), out
+
+
+def test_stream_ckpt_dir_env(monkeypatch, tmp_path):
+    """SPARK_GRAFT_CKPT_DIR points the streaming demos' per-run scratch
+    (checkpoint dirs) at a caller-chosen filesystem; unset, tempfile's
+    default is used unchanged."""
+    from exact_spark.streaming import _work_dir
+
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path / "ck"))
+    d = _work_dir("exact_spark_test_")
+    assert d.parent == tmp_path / "ck"
+    assert d.is_dir()
+
+    monkeypatch.delenv("SPARK_GRAFT_CKPT_DIR")
+    import tempfile
+
+    d2 = _work_dir("exact_spark_test_")
+    try:
+        assert str(d2.parent) == tempfile.gettempdir()
+    finally:
+        import shutil
+
+        shutil.rmtree(d2, ignore_errors=True)
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_sweep_stale_work_dirs_is_age_gated(monkeypatch, tmp_path):
+    """A crashed demo's scratch dir under SPARK_GRAFT_CKPT_DIR is reclaimed
+    once it ages past the gate; recent dirs (a concurrent run's live
+    checkpoint) and foreign entries stay."""
+    import os
+    import time
+
+    from exact_spark import streaming
+
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path))
+    stale, live, foreign = (
+        tmp_path / "exact_spark_stream_a",
+        tmp_path / "exact_spark_stream_b",
+        tmp_path / "other",
+    )
+    for d in (stale, live, foreign):
+        (d / "offsets").mkdir(parents=True)
+    old = time.time() - streaming._WORK_DIR_STALE_MIN_AGE_S - 60
+    for d in (stale, foreign):
+        os.utime(d, (old, old))
+
+    streaming.sweep_stale_work_dirs()
+    assert not stale.exists()
+    assert live.exists() and foreign.exists()

@@ -98,7 +98,7 @@ def main() -> int:
     from exact_spark.session import get_spark
 
     _load_all()
-    spark = get_spark(app_name="plan-dump", master="local[4]", shuffle_partitions=4)
+    spark = get_spark(app_name="plan-dump", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = "/root/testdata/sf0.001"
 

@@ -28,7 +28,6 @@ def main() -> None:
     spark = get_spark(
         app_name="exact-spark-explain",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = Path(__file__).resolve().parents[1] / "plans" / tag

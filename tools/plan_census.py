@@ -33,7 +33,6 @@ def main() -> None:
     spark = get_spark(
         app_name="exact-spark-plan-census",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -35,7 +35,6 @@ def main() -> None:
     spark = get_spark(
         app_name="exact-spark-profile",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{sf_dir}/region.parquet").count()

@@ -27,7 +27,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    # vanilla session, like the driver: queries must tune_session themselves
+    # vanilla session, like the driver: every registered query tunes the
+    # session it is handed (registry.register)
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("record-correctness")
