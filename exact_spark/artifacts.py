@@ -40,6 +40,7 @@ import os
 import pathlib
 import shutil
 import tempfile
+import threading
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -51,6 +52,9 @@ _MEMO_CAP = 32  # corpora simultaneously warm per driver process
 # the per-put membership check O(1).
 _ALL_MEMOS: list[dict] = []
 _ALL_MEMO_IDS: set[int] = set()
+# one check-evict-insert at a time: two threads at cap would otherwise
+# evict the same oldest key, or iterate a memo another thread resizes
+_MEMO_LOCK = threading.Lock()
 
 
 def memo_put(memo: dict, key, value, cap: int = _MEMO_CAP):
@@ -59,12 +63,13 @@ def memo_put(memo: dict, key, value, cap: int = _MEMO_CAP):
     corpus (the memo is a warm cache, not state), so evicting the oldest
     corpus is always safe; without a bound a long-lived shared driver
     serving many corpus versions grows these dicts monotonically."""
-    if id(memo) not in _ALL_MEMO_IDS:
-        _ALL_MEMO_IDS.add(id(memo))
-        _ALL_MEMOS.append(memo)
-    if key not in memo and len(memo) >= cap:
-        memo.pop(next(iter(memo)))
-    memo[key] = value
+    with _MEMO_LOCK:
+        if id(memo) not in _ALL_MEMO_IDS:
+            _ALL_MEMO_IDS.add(id(memo))
+            _ALL_MEMOS.append(memo)
+        if key not in memo and len(memo) >= cap:
+            memo.pop(next(iter(memo)), None)
+        memo[key] = value
     return value
 
 

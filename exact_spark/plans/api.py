@@ -9,6 +9,7 @@ from __future__ import annotations
 import pathlib
 import re
 import shutil
+import threading
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -26,6 +27,8 @@ MODELS = ("threshold", "pca_autoencoder", "mlp_autoencoder", "rnn_autoencoder",
           "logistic_regression", "linear_svc", "gbt", "xgboost",
           "calibrated_svc")
 INJECTION_METHODS = ("spike", "step", "lowered", "offline", "custom")
+
+_SQL_VIEWS_LOCK = threading.Lock()
 
 
 class EngineAPI:
@@ -95,9 +98,13 @@ class EngineAPI:
             raise ValueError("no sf_dir configured for run-sql")
         from exact_spark import io as _io
 
-        for t in _io.TABLES:
-            _io.load(self.spark, target, t).createOrReplaceTempView(t)
-        df = self.spark.sql(sql).limit(int(limit))
+        # the views are session-wide: register and analyze under one lock
+        # so a concurrent request for another sf_dir cannot swap them
+        # before this statement has resolved them into its plan
+        with _SQL_VIEWS_LOCK:
+            for t in _io.TABLES:
+                _io.load(self.spark, target, t).createOrReplaceTempView(t)
+            df = self.spark.sql(sql).limit(int(limit))
         rows = df.collect()
         return {
             "columns": list(df.columns),

@@ -25,6 +25,24 @@ Protocol parity, method by method:
   time column renamed ``timestamp`` and moved first
   (engine.py:361-371, execute_calls.py:1029-1044).
 - unknown METHOD -> ``{"error": "method-error-response"}``.
+
+Concurrency contract:
+
+- Every connection is served on its own thread, so a slow request (a
+  whole-table ``get-data``, a ``run-query``) never holds up another
+  client's. One SparkSession takes every thread's jobs; Spark's task
+  scheduler shares the executor slots between them.
+- ``run-batch`` / ``run-stream`` jobs run on their own daemon threads,
+  outliving the connection that submitted them.
+- Session state a request changes is serialized: ``run-sql``'s temp views
+  (``EngineAPI.run_sql``) and the streaming demos' shuffle-partition
+  override (``streaming._state_partitions``) each sit under one
+  module-level lock. The override is session-wide while it is held, so a
+  request planned meanwhile runs its shuffles at that partition count.
+- Tables are plain parquet with no snapshot isolation: a ``get-data`` that
+  races a ``cancel-job`` or a writeback's partition swap may answer with a
+  JSON error instead of rows (the caveat on ``JobCatalog.compact_table``);
+  the client retries.
 """
 
 from __future__ import annotations
@@ -33,6 +51,7 @@ import datetime as _dt
 import json
 import pathlib
 import socket
+import socketserver
 import tempfile
 import threading
 import time
@@ -76,17 +95,45 @@ def _parse_settings(inj_params) -> list:
     return out
 
 
+class _Connection(socketserver.BaseRequestHandler):
+    """One wire connection, on its own thread: read the request, dispatch
+    it through ``EngineServer._handle`` (looked up at call time, so a
+    wrapper patched onto the class sees every request), close."""
+
+    def handle(self) -> None:
+        conn = self.request
+        try:
+            raw = conn.recv(_RECV_CHUNK).decode("utf-8")
+            self.server.engine._handle(conn, json.loads(raw))
+        except Exception as e:  # engine.py:152-155: log and keep serving
+            try:
+                conn.sendall(json.dumps({"error": str(e)}).encode("utf-8"))
+            except OSError:
+                pass
+        finally:
+            try:
+                conn.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass
+            conn.close()
+
+
+class _Server(socketserver.ThreadingTCPServer):
+    daemon_threads = True
+    allow_reuse_address = True
+    engine: EngineServer
+
+
 class EngineServer:
-    """Threaded TCP front-end over :class:`EngineAPI` speaking the
-    reference's protocol. ``port=0`` binds an ephemeral port (tests)."""
+    """TCP front-end over :class:`EngineAPI` speaking the reference's
+    protocol, one thread per connection (see the module docstring for the
+    concurrency contract). ``port=0`` binds an ephemeral port (tests)."""
 
     def __init__(self, api: EngineAPI, host: str = "127.0.0.1", port: int = 0):
         self.api = api
         self.host = host
         self.port = port
-        self._sock: socket.socket | None = None
-        self._thread: threading.Thread | None = None
-        self._stop = threading.Event()
+        self._server: _Server | None = None
         self.job_threads: dict[str, threading.Thread] = {}
         # job-name -> "ExcType: msg" for fire-and-forget jobs that failed;
         # surfaced instead of letting a worker thread die unhandled
@@ -94,14 +141,10 @@ class EngineServer:
 
     # -- lifecycle -----------------------------------------------------------
     def start(self) -> tuple[str, int]:
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((self.host, self.port))
-        self._sock.listen()
-        self._sock.settimeout(0.2)  # engine.py:140's 1s poll, tightened
-        self.port = self._sock.getsockname()[1]
-        self._thread = threading.Thread(target=self._serve, daemon=True)
-        self._thread.start()
+        self._server = _Server((self.host, self.port), _Connection)
+        self._server.engine = self
+        self.port = self._server.server_address[1]
+        threading.Thread(target=self._server.serve_forever, daemon=True).start()
         return self.host, self.port
 
     def stop(self, drain_s: float = 120.0) -> None:
@@ -113,11 +156,9 @@ class EngineServer:
         deadline = time.time() + drain_s
         for t in list(self.job_threads.values()):
             t.join(timeout=max(0.0, deadline - time.time()))
-        self._stop.set()
-        if self._thread:
-            self._thread.join(timeout=5.0)
-        if self._sock:
-            self._sock.close()
+        if self._server:
+            self._server.shutdown()
+            self._server.server_close()
 
     def _run_job(self, name: str, fn, *args, **kwargs) -> None:
         """Worker-thread entry: record failures on the server instead of
@@ -130,29 +171,6 @@ class EngineServer:
             fn(*args, **kwargs)
         except Exception as exc:  # noqa: BLE001 — boundary: worker thread top
             self.job_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    def _serve(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _addr = self._sock.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            try:
-                raw = conn.recv(_RECV_CHUNK).decode("utf-8")
-                self._handle(conn, json.loads(raw))
-            except Exception as e:  # engine.py:152-155: log and keep serving
-                try:
-                    conn.sendall(json.dumps({"error": str(e)}).encode("utf-8"))
-                except OSError:
-                    pass
-            finally:
-                try:
-                    conn.shutdown(socket.SHUT_RDWR)
-                except OSError:
-                    pass
-                conn.close()
 
     # -- dispatch (engine.py:158-404) ----------------------------------------
     def _job_from_request(self, data: dict) -> BatchJob:
@@ -231,7 +249,7 @@ class EngineServer:
         elif method == "get-running":
             running = [
                 {"name": n, "type": "batch"}
-                for n, t in self.job_threads.items()
+                for n, t in list(self.job_threads.items())
                 if t.is_alive()
             ]
             send({"running": running})

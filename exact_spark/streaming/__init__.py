@@ -23,6 +23,7 @@ import math
 import pathlib
 import shutil
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,17 +96,23 @@ def sweep_stale_work_dirs() -> None:
             shutil.rmtree(d, ignore_errors=True)
 
 
+_STATE_PARTITIONS_LOCK = threading.RLock()
+
+
 @contextlib.contextmanager
 def _state_partitions(spark: SparkSession, n: int = _DEMO_STATE_PARTITIONS):
     """Temporarily size ``spark.sql.shuffle.partitions`` for a stateful
     streaming query start (the partition count is baked into the state
-    store layout at first start). Restores the session value on exit."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    store layout at first start). Restores the session value on exit.
+    Held under one lock: two threads interleaving save/set/restore would
+    leave the session at ``n`` for good."""
+    with _STATE_PARTITIONS_LOCK:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _staged_source(spark: SparkSession, sf_dir: str, tag: str, build_df, chunks: int = 2) -> str:

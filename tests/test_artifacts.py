@@ -155,6 +155,39 @@ def test_memo_put_fifo_eviction():
     assert len(memo) == 32 and memo["k39"] == 99
 
 
+def test_memo_put_concurrent_eviction():
+    """Threads at cap at once: each check-evict-insert is atomic, so no
+    two evict the same oldest key and the cap holds."""
+    import sys
+    import threading
+
+    from exact_spark.artifacts import memo_put
+
+    memo: dict = {}
+    errors: list[BaseException] = []
+
+    def put(t: int) -> None:
+        try:
+            for i in range(200):
+                memo_put(memo, (t, i), i, cap=4)
+        except BaseException as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        threads = [threading.Thread(target=put, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(memo) <= 4
+
+
 def _done(d: pathlib.Path, age_s: float = 0.0) -> pathlib.Path:
     import os
     import time

@@ -314,6 +314,45 @@ def test_state_partitions_restores_on_error(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def test_state_partitions_restores_under_concurrency(spark):
+    """Two threads in the sizing context at once: if B saved A's override
+    and restored it after A had restored the real value, the session would
+    stay at 4 partitions for good. B waits to leave until A has left, so
+    only a lock around save/set/restore keeps the value."""
+    import threading
+
+    from exact_spark.streaming import _state_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "4"
+    a_in, release_a, a_out, b_in = (threading.Event() for _ in range(4))
+
+    def a():
+        with _state_partitions(spark, 4):
+            a_in.set()
+            release_a.wait(10)
+        a_out.set()
+
+    def b():
+        a_in.wait(10)
+        with _state_partitions(spark, 4):
+            b_in.set()
+            a_out.wait(10)
+
+    threads = [threading.Thread(target=f) for f in (a, b)]
+    for t in threads:
+        t.start()
+    b_in.wait(0.5)
+    release_a.set()
+    for t in threads:
+        t.join(30)
+    after = spark.conf.get(key)
+    spark.conf.set(key, before)
+    assert not any(t.is_alive() for t in threads)
+    assert after == before
+
+
 @pytest.mark.parametrize("chunks", [1, 2, 3])
 def test_session_window_emits_at_exact_watermark_equality(spark, tmp_path, chunks):
     """The stream_session_window_native oracle's emission rule is

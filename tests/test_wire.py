@@ -6,6 +6,7 @@ from __future__ import annotations
 import io
 import json
 import socket
+import threading
 import time
 
 import pandas as pd
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 from exact_spark.plans.api import EngineAPI
 from exact_spark.plans.wire import EngineServer
+from tests.conftest import SF_DIR, SF_DIR_MID
 
 
 @pytest.fixture()
@@ -39,7 +41,8 @@ def server(spark, tmp_path):
     srv.stop()
 
 
-def _request(srv, payload: dict, response: bool = True, second_message: bytes | None = None):
+def _request(srv, payload: dict, response: bool = True, second_message: bytes | None = None,
+             timeout: float = 10):
     """The reference client's __send_data (api.py:160-199): one JSON dict
     per connection; get-data reads until EOF."""
     sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
@@ -54,7 +57,7 @@ def _request(srv, payload: dict, response: bool = True, second_message: bytes | 
         sock.close()
         return None
     chunks = []
-    sock.settimeout(10)
+    sock.settimeout(timeout)
     while True:
         b = sock.recv(1024 * 100)
         if not b:
@@ -327,3 +330,57 @@ def test_run_sql_over_the_wire(server):
         "sf_dir": "/root/testdata/sf0.001",
     })
     assert "error" in broken
+
+
+def test_concurrent_run_sql_answers_from_its_own_dir(server):
+    """run-sql's testdata views are session-wide: concurrent requests for
+    different sf_dirs must each count their own dir's lineitem."""
+    want = {SF_DIR: 6000, SF_DIR_MID: 60000}
+    dirs = list(want)
+    got: list[tuple[str, object]] = []
+
+    def client(idx: int) -> None:
+        for k in range(10):
+            sf = dirs[(idx + k) % 2]
+            out = _request(server, {
+                "METHOD": "run-sql", "sql": "SELECT COUNT(*) AS n FROM lineitem",
+                "sf_dir": sf,
+            }, timeout=120)
+            got.append((sf, out["data"][0][0] if "data" in out else out))
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert len(got) == 40
+    wrong = [(sf, n) for sf, n in got if n != want[sf]]
+    assert wrong == []
+
+
+def test_slow_request_does_not_block_others(server, monkeypatch):
+    """A request still being handled does not hold up another client's:
+    each connection is served on its own thread."""
+    entered, release = threading.Event(), threading.Event()
+    models = server.api.get_models()
+
+    def slow_get_models():
+        entered.set()
+        release.wait(30)
+        return models
+
+    monkeypatch.setattr(server.api, "get_models", slow_get_models)
+    slow: list[dict] = []
+    t = threading.Thread(
+        target=lambda: slow.append(_request(server, {"METHOD": "get-models"}, timeout=60))
+    )
+    t.start()
+    try:
+        assert entered.wait(10)
+        fast = _request(server, {"METHOD": "get-injection-methods"}, timeout=5)
+        assert "spike" in fast["injection_methods"]
+        assert t.is_alive() and not slow
+    finally:
+        release.set()
+        t.join(60)
+    assert slow == [{"models": models}]
