@@ -14,6 +14,12 @@ any partitioning:
   ``md5(seed || id)`` — a deterministic pseudorandom order identical in any
   engine — and keeps the first ``floor(n * pct/100)``.
 
+A setting selects rows by ``id`` and timestamp only (A1 span + A3 rank).
+Both are protected columns no setting changes, so every setting's selection
+is computed in one pass over the input; the value updates (A4-A9) and the
+step/lowered stats (A10) stay sequential, each setting reading the values
+the settings before it left.
+
 Injected rows get ``injected_anomaly=1, label=1`` (A9,
 anomalyinjector.py:163-167).
 
@@ -27,7 +33,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -74,61 +80,58 @@ def inject_anomalies(
     seed: int = 42,
     ts_col: str = "timestamp",
 ) -> DataFrame:
-    """Generalized A1-A10 transform: applies each setting sequentially
+    """Generalized A1-A10 transform: applies each setting in order
     (batchimport.py:147-169), flags affected rows (A9).
 
-    ``df`` must carry ``id`` and a timestamp column; selection randomness is
-    the partition-stable md5-rank scheme (module docstring). Scalar draws
-    come from one seeded generator, in setting order, like the reference's
-    per-injector ``default_rng(seed)``.
+    ``df`` must carry ``id`` and a timestamp column. A setting selects rows
+    by those two alone (A1 span, A3 md5 rank); both are protected, so no
+    setting's updates change what a later one selects, and every setting's
+    selection comes from ONE pass over ``df``, joined back once: one join
+    and two scans of ``df`` however many settings there are. The value
+    updates (A4-A9) stay sequential, one projection per setting over the
+    values the settings before it left, and so do the eager A10 stats of
+    step/lowered. Scalar draws come from one seeded generator, in setting
+    order, like the reference's per-injector ``default_rng(seed)``.
     """
     rng = np.random.default_rng(seed)
     ts_epoch = epoch_seconds_any(df, ts_col)
+    # (enumerate index, setting, target columns); a skipped setting keeps its index
+    active = [(i, s, c) for i, s in enumerate(settings) if (c := resolve_target_columns(df, s))]
     out = df
-    for i, s in enumerate(settings):
-        t0 = start_epoch + s.timestamp
-        t1 = t0 + s.duration
-        in_span = (ts_epoch >= F.lit(t0)) & (ts_epoch < F.lit(t1))  # A1
-        cols = resolve_target_columns(df, s)
-        if not cols:
-            continue
-
-        # A3: percentage subsample, deterministic md5 rank within the span.
-        # Rank only span rows (small) and broadcast the selected-id set back
-        # — the window never touches the full table.
-        rk = F.md5(F.concat(F.lit(f"{seed}:{i}:"), F.col("id").cast("string")))
-        span_ids = out.filter(in_span).select("id").withColumn("rk_tmp", rk)
-        w = Window.orderBy("rk_tmp", "id")
-        w_cnt = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        # k = floor(span_count * pct/100) computed INSIDE the rank job (a
-        # full-frame count window over the already-small span frame) — no
-        # separate driver-side count action per setting
-        selected_ids = (
-            span_ids.withColumn("rn", F.row_number().over(w))
-            .withColumn("__cnt", F.count(F.lit(1)).over(w_cnt))
-            .filter(
-                F.col("rn")
-                <= F.floor(F.col("__cnt") * F.lit(float(s.percentage)) / 100.0)
-            )
-            .select(F.col("id").alias("__sel_id"))
+    if active:
+        hits = []
+        for i, s, _ in active:
+            t0 = start_epoch + s.timestamp
+            in_span = (ts_epoch >= F.lit(t0)) & (ts_epoch < F.lit(t0 + s.duration))  # A1
+            hit = F.struct(F.lit(i).alias("i"), F.lit(f"{seed}:{i}:").alias("prefix"),
+                           F.lit(float(s.percentage)).alias("pct"))
+            hits.append(F.when(in_span, hit))
+        # A3: one row per (row, setting whose span holds it), ranked by md5
+        # within its setting; a setting keeps its first floor(n * pct/100)
+        hits = F.filter(F.array(*hits), lambda h: h.isNotNull())
+        span = df.select("id", F.explode(hits).alias("h"))
+        by_setting = Window.partitionBy("h.i")
+        selected = (
+            span.withColumn("rk", F.md5(F.concat("h.prefix", F.col("id").cast("string"))))
+            .withColumn("rn", F.row_number().over(by_setting.orderBy("rk", "id")))
+            .withColumn("cnt", F.count(F.lit(1)).over(by_setting))
+            .filter(F.col("rn") <= F.floor(F.col("cnt") * F.col("h.pct") / 100.0))
+            .groupBy(F.col("id").alias("__sel_id"))
+            .agg(F.collect_set("h.i").alias("__sel"))
         )
-        ranked = out.join(
-            F.broadcast(selected_ids), out.id == F.col("__sel_id"), "left"
-        ).withColumn("sel_tmp", F.col("__sel_id").isNotNull())
+        out = df.join(F.broadcast(selected), df.id == F.col("__sel_id"), "left")
 
-        # A10: per-column stats over selected rows (or setting overrides)
-        sel = F.col("sel_tmp")
+    for i, s, cols in active:
+        sel = F.coalesce(F.array_contains("__sel", i), F.lit(False))
+        # A10: per-column stats over selected rows (or setting overrides),
+        # over the values the earlier settings left
         stats_row = None
         if s.anomaly_type in ("step", "lowered") and (s.mean is None or s.data_range is None):
             aggs = []
             for c in cols:
-                aggs += [
-                    favg(F.when(sel, F.col(c))).alias(f"mean_{c}"),
-                    (F.max(F.when(sel, F.col(c))) - F.min(F.when(sel, F.col(c)))).alias(
-                        f"range_{c}"
-                    ),
-                ]
-            stats_row = ranked.agg(*aggs).collect()[0]
+                v = F.when(sel, F.col(c))
+                aggs += [favg(v).alias(f"mean_{c}"), (F.max(v) - F.min(v)).alias(f"range_{c}")]
+            stats_row = out.agg(*aggs).collect()[0]
 
         # scalar seeded draws (one per call, like anomalyinjector)
         if s.anomaly_type == "spike":
@@ -149,15 +152,11 @@ def inject_anomalies(
             elif s.anomaly_type == "lowered":  # A6
                 drange = s.data_range if s.data_range is not None else stats_row[f"range_{c}"]
                 if drange is None or drange == 0:
-                    # lowered.py:9-22 zero-range fallback: max(x - mean*factor, 0)
-                    # with zeros replaced by x*factor — same shape as the
-                    # range branch, substituting mean for range.
-                    mean = s.mean if s.mean is not None else 0.0
-                    low = F.greatest(x - F.lit(float(mean) * factor), F.lit(0.0))
-                    new = F.when(low == 0.0, x * F.lit(factor)).otherwise(low)
-                else:
-                    low = F.greatest(x - F.lit(float(drange) * factor), F.lit(0.0))
-                    new = F.when(low == 0.0, x * F.lit(factor)).otherwise(low)
+                    # lowered.py:9-22 zero-range fallback: the same shape,
+                    # substituting mean for range
+                    drange = s.mean if s.mean is not None else 0.0
+                low = F.greatest(x - F.lit(float(drange) * factor), F.lit(0.0))
+                new = F.when(low == 0.0, x * F.lit(factor)).otherwise(low)
             elif s.anomaly_type == "offline":  # A7 (evident intent)
                 new = F.lit(0.0)
             elif s.anomaly_type == "custom":  # A8
@@ -166,20 +165,14 @@ def inject_anomalies(
                 raise KeyError(f"unknown anomaly_type {s.anomaly_type!r}")
             updates[c] = F.when(sel, new).otherwise(x)
 
-        select_exprs = []
-        for name in ranked.columns:
-            if name in ("rk_tmp", "sel_tmp", "__sel_id"):
-                continue
-            if name in updates:
-                select_exprs.append(updates[name].alias(name))
-            elif name == "injected_anomaly":
-                select_exprs.append((F.col(name) | sel).alias(name))  # A9
-            elif name == "label":
-                select_exprs.append(F.when(sel, F.lit(1)).otherwise(F.col(name)).alias(name))
-            else:
-                select_exprs.append(F.col(name))
-        out = ranked.select(*select_exprs)
+        updates["injected_anomaly"] = F.col("injected_anomaly") | sel  # A9
+        updates["label"] = F.when(sel, F.lit(1)).otherwise(F.col("label"))
+        # one projection per setting, not one composed expression: lowered
+        # reads its column four times, so composing n settings on a column
+        # would grow the expression as 4^n
+        out = out.select(*[updates[n].alias(n) if n in updates else n for n in out.columns])
 
+    out = out.drop("__sel_id", "__sel")
     # batchimport.py:383-388: is_anomaly |= injected_anomaly
     if "is_anomaly" in out.columns:
         out = out.withColumn("is_anomaly", F.col("is_anomaly") | F.col("injected_anomaly"))

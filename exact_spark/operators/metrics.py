@@ -915,6 +915,9 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Nothing caches it, so the aggregate runs once in EACH consuming job:
     # twice per call (the cached sketch frame's job and the exact-census
     # job), each a pass over the canonical table's (ts_epoch, user_id).
+    # Returning lo with the sketches to run it once measured no faster
+    # (build + noop sink, sf0.1, local[4]: median 1.49 s vs 1.63 s over
+    # 14 warm runs each, inside the runs' 0.27 s interquartile spread).
     lo_df = tagged.agg(
         F.coalesce(F.min("week"), F.lit(0)).cast("long").alias("lo")
     )

@@ -19,11 +19,12 @@ import datetime as _dt
 import json
 import pathlib
 import time
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.ml.models import UNSUPERVISED, get_model
@@ -70,15 +71,25 @@ def save_run_summary(summary: dict, job_name: str, output_dir: str) -> str:
     return str(path)
 
 
-def evaluate_classification(df: DataFrame, actual: str = "label", predicted: str = "predicted") -> dict:
-    """G1+G2 in one aggregate pass (execute_calls.py:354-381,811-839)."""
-    row = df.agg(
-        F.sum(F.when((F.col(predicted) == 1) & (F.col(actual) == 1), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when((F.col(predicted) == 0) & (F.col(actual) == 0), 1).otherwise(0)).alias("tn"),
-        F.sum(F.when((F.col(predicted) == 1) & (F.col(actual) == 0), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when((F.col(predicted) == 0) & (F.col(actual) == 1), 1).otherwise(0)).alias("fn"),
-    ).collect()[0]
-    tp, tn, fp, fn = row["tp"] or 0, row["tn"] or 0, row["fp"] or 0, row["fn"] or 0
+_CONFUSION = {"tp": (1, 1), "tn": (0, 0), "fp": (1, 0), "fn": (0, 1)}  # (predicted, actual)
+
+
+def _confusion_sums(
+    actual: str, predicted: str, where: Column | None = None, prefix: str = ""
+) -> list[Column]:
+    """G1 confusion counts as aggregate columns, over the rows ``where`` holds."""
+    sums = []
+    for name, (p, a) in _CONFUSION.items():
+        hit = (F.col(predicted) == p) & (F.col(actual) == a)
+        if where is not None:
+            hit = hit & where
+        sums.append(F.sum(F.when(hit, 1).otherwise(0)).alias(prefix + name))
+    return sums
+
+
+def _classification_metrics(row, prefix: str = "") -> dict:
+    """G2 from the confusion counts ``_confusion_sums`` aggregated."""
+    tp, tn, fp, fn = (row[prefix + k] or 0 for k in _CONFUSION)
     total = tp + tn + fp + fn
     prec = tp / (tp + fp) if tp + fp else 0.0
     rec = tp / (tp + fn) if tp + fn else 0.0
@@ -95,6 +106,23 @@ def evaluate_classification(df: DataFrame, actual: str = "label", predicted: str
     }
 
 
+def evaluate_classification(df: DataFrame, actual: str = "label", predicted: str = "predicted") -> dict:
+    """G1+G2 in one aggregate pass (execute_calls.py:354-381,811-839)."""
+    return _classification_metrics(df.agg(*_confusion_sums(actual, predicted)).collect()[0])
+
+
+def evaluate_classification_split(
+    df: DataFrame, test: Column, actual: str = "label", predicted: str = "predicted"
+) -> tuple[dict, dict]:
+    """G1+G2 over all rows and over the rows ``test`` holds, in one
+    aggregate pass."""
+    row = df.agg(
+        *_confusion_sums(actual, predicted),
+        *_confusion_sums(actual, predicted, test, "test_"),
+    ).collect()[0]
+    return _classification_metrics(row), _classification_metrics(row, "test_")
+
+
 def run_batch(
     spark: SparkSession,
     catalog: JobCatalog,
@@ -103,95 +131,103 @@ def run_batch(
 ) -> dict:
     t_total = time.perf_counter()
     table = catalog.table_name(job.job_name)
+    # every frame the job caches is released on every exit path, a failed
+    # job included: an engine process outlives its jobs
+    with ExitStack() as release:
+        # 1. simulate/ingest --------------------------------------------------
+        # cache: the canonical frame has five consumers (the start-epoch
+        # agg, inject's selection pass and its join, inject's step/lowered
+        # stats aggregates, the create_table write); uncached, each re-runs
+        # the file read and canonicalization. Released once the table is
+        # written.
+        t0 = time.perf_counter()
+        raw = read_file(spark, job.filepath)
+        canon = canonicalize(raw, time_col=job.time_col, label_col=job.label_col).cache()
+        release.callback(canon.unpersist)
+        start_epoch = canon.agg(F.min(F.col("timestamp").cast("double"))).collect()[0][0]
+        injected = inject_anomalies(canon, job.anomaly_settings, start_epoch, seed=job.seed)
+        catalog.create_table(table, injected)
+        canon.unpersist()
+        t_sim = time.perf_counter() - t0
 
-    # 1. simulate/ingest ------------------------------------------------------
-    t0 = time.perf_counter()
-    raw = read_file(spark, job.filepath)
-    canon = canonicalize(raw, time_col=job.time_col, label_col=job.label_col)
-    start_epoch = canon.agg(F.min(F.col("timestamp").cast("double")).alias("s")).collect()[0]["s"]
-    injected = inject_anomalies(canon, job.anomaly_settings, start_epoch, seed=job.seed)
-    catalog.create_table(table, injected)
-    t_sim = time.perf_counter() - t0
+        # 2. read back (S7 from epoch 0) -------------------------------------
+        df = catalog.read_data(table).cache()
+        release.callback(df.unpersist)
+        n_rows = df.count()
+        assert "id" in df.columns  # PK presence (execute_calls.py:509-510)
 
-    # 2. read back (S7 from epoch 0) -----------------------------------------
-    df = catalog.read_data(table).cache()
-    n_rows = df.count()
-    assert "id" in df.columns  # PK presence (execute_calls.py:509-510)
+        # 3. prepare ----------------------------------------------------------
+        feats = feature_columns(df)
+        cut = int(0.85 * n_rows)  # P9 (execute_calls.py:333-346)
+        train = df.filter(F.col("id") <= cut)
+        test = df.filter(F.col("id") > cut)
+        # P7: train-fitted mean imputation (fixing the reference's per-slice leakage)
+        means = train.agg(*[F.avg(c).alias(c) for c in feats]).collect()[0].asDict()
+        fill = {c: (means[c] if means[c] is not None else 0.0) for c in feats}
+        train, test, df_all = train.fillna(fill), test.fillna(fill), df.fillna(fill)
+        df_all = df_all.withColumn("label", F.col("label").cast("int"))
 
-    # 3. prepare --------------------------------------------------------------
-    feats = feature_columns(df)
-    cut = int(0.85 * n_rows)  # P9 (execute_calls.py:333-346)
-    train = df.filter(F.col("id") <= cut)
-    test = df.filter(F.col("id") > cut)
-    # P7: train-fitted mean imputation (fixing the reference's per-slice leakage)
-    means = train.agg(*[F.avg(c).alias(c) for c in feats]).collect()[0].asDict()
-    fill = {c: (means[c] if means[c] is not None else 0.0) for c in feats}
-    train, test, df_all = train.fillna(fill), test.fillna(fill), df.fillna(fill)
-    df_all = df_all.withColumn("label", F.col("label").cast("int"))
+        # 4. train ------------------------------------------------------------
+        t0 = time.perf_counter()
+        model = get_model(job.model, **job.model_params)
+        model.run(train, feats)  # unsupervised models read features only
+        t_train = time.perf_counter() - t0
 
-    # 4. train ----------------------------------------------------------------
-    t0 = time.perf_counter()
-    model = get_model(job.model, **job.model_params)
-    model.run(train, feats)  # unsupervised models read features only
-    t_train = time.perf_counter() - t0
+        # 5. detect -----------------------------------------------------------
+        t0 = time.perf_counter()
+        det_all = model.detect(df_all, feats).cache()
+        release.callback(det_all.unpersist)
+        pred_ids = det_all.filter(F.col("predicted") == 1).select("id")
 
-    # 5. detect ---------------------------------------------------------------
-    t0 = time.perf_counter()
-    det_all = model.detect(df_all, feats).cache()
-    pred_ids = det_all.filter(F.col("predicted") == 1).select("id")
+        # 6. evaluate BEFORE the writeback: update_anomalies swaps the table
+        # directory the cached frames' lineage points at, so any lost cache
+        # block would recompute from a deleted path. Forcing the aggregate
+        # here fully materializes everything we still need.
+        joined = det_all.join(df_all.select("id", "label"), "id")
+        t_eval0 = time.perf_counter()
+        metrics_all, metrics_test = evaluate_classification_split(joined, F.col("id") > cut)
+        t_eval = time.perf_counter() - t_eval0
+        # what the DETECTOR flagged — not the table's total is_anomaly count,
+        # which also includes injected ground-truth rows
+        n_flagged = metrics_all["tp"] + metrics_all["fp"]
 
-    # 6. evaluate BEFORE the writeback: update_anomalies swaps the table
-    # directory the cached frames' lineage points at, so any lost cache block
-    # would recompute from a deleted path. Forcing the aggregates here fully
-    # materializes everything we still need.
-    joined = det_all.join(df_all.select("id", "label"), "id")
-    t_eval0 = time.perf_counter()
-    metrics_all = evaluate_classification(joined)
-    metrics_test = evaluate_classification(joined.filter(F.col("id") > cut))
-    t_eval = time.perf_counter() - t_eval0
-    # what the DETECTOR flagged — not the table's total is_anomaly count,
-    # which also includes injected ground-truth rows
-    n_flagged = metrics_all["tp"] + metrics_all["fp"]
+        # 7. S8 flag writeback (MERGE-style partition-scoped rewrite) ---------
+        catalog.update_anomalies(table, pred_ids)
+        # t_detect keeps its documented detect+writeback meaning: the
+        # evaluation interval (which must run pre-swap, see above) is carved
+        # out and reported under its own key
+        t_detect = time.perf_counter() - t0 - t_eval
 
-    # 7. S8 flag writeback (MERGE-style partition-scoped rewrite) -------------
-    catalog.update_anomalies(table, pred_ids)
-    # t_detect keeps its documented detect+writeback meaning: the evaluation
-    # interval (which must run pre-swap, see above) is carved out and
-    # reported under its own key
-    t_detect = time.perf_counter() - t0 - t_eval
-
-    summary = {
-        "job_name": job.job_name,
-        "table_name": table,
-        "model": job.model,
-        "rows": n_rows,
-        "feature_columns": feats,
-        "train_rows": cut,
-        "test_rows": n_rows - cut,
-        "anomalies_flagged": n_flagged,
-        "metrics_all": metrics_all,
-        "metrics_test": metrics_test,
-        "anomaly_settings": [s.__dict__ for s in job.anomaly_settings],
-        "execution_time_simulation_seconds": round(t_sim, 3),
-        "execution_time_training_seconds": round(t_train, 3),
-        "execution_time_detection_seconds": round(t_detect, 3),
-        "execution_time_evaluation_seconds": round(t_eval, 3),
-        "execution_time_total_seconds": round(time.perf_counter() - t_total, 3),
-        "timestamp": _dt.datetime.now(_dt.timezone.utc),
-    }
-    # 8. X7 visual artifact: the job page's detection timeline as native
-    # SVG (job_page_callbacks.py:1000's plot; matplotlib/plotly absent —
-    # XML is not). The polyline goes through the M4 visual envelope so the
-    # driver collects <= 4 points per screen bucket at ANY table size
-    # (the frontend's 1000-point budget, engine-side), and anomaly
-    # markers carry the reference's 500-marker cap
-    # (job_page_callbacks.py:1038).
-    summary["timeline_svg"] = _write_timeline_svg(
-        df_all, det_all, feats[0], job.job_name, output_dir
-    )
-    summary["logfile"] = save_run_summary(summary, job.job_name, output_dir)
-    df.unpersist()
-    det_all.unpersist()
+        summary = {
+            "job_name": job.job_name,
+            "table_name": table,
+            "model": job.model,
+            "rows": n_rows,
+            "feature_columns": feats,
+            "train_rows": cut,
+            "test_rows": n_rows - cut,
+            "anomalies_flagged": n_flagged,
+            "metrics_all": metrics_all,
+            "metrics_test": metrics_test,
+            "anomaly_settings": [s.__dict__ for s in job.anomaly_settings],
+            "execution_time_simulation_seconds": round(t_sim, 3),
+            "execution_time_training_seconds": round(t_train, 3),
+            "execution_time_detection_seconds": round(t_detect, 3),
+            "execution_time_evaluation_seconds": round(t_eval, 3),
+            "execution_time_total_seconds": round(time.perf_counter() - t_total, 3),
+            "timestamp": _dt.datetime.now(_dt.timezone.utc),
+        }
+        # 8. X7 visual artifact: the job page's detection timeline as native
+        # SVG (job_page_callbacks.py:1000's plot; matplotlib/plotly absent —
+        # XML is not). The polyline goes through the M4 visual envelope so
+        # the driver collects <= 4 points per screen bucket at ANY table
+        # size (the frontend's 1000-point budget, engine-side), and anomaly
+        # markers carry the reference's 500-marker cap
+        # (job_page_callbacks.py:1038).
+        summary["timeline_svg"] = _write_timeline_svg(
+            df_all, det_all, feats[0], job.job_name, output_dir
+        )
+        summary["logfile"] = save_run_summary(summary, job.job_name, output_dir)
     return summary
 
 

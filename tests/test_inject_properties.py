@@ -3,6 +3,10 @@ item 3): identities, exact shifts, and flag/value consistency."""
 
 from __future__ import annotations
 
+import hashlib
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,3 +109,95 @@ def test_duration_parser_roundtrips():
     assert parse_duration("1h") == 3600.0
     assert parse_duration("1h30m") == parse_duration("90m")
     assert parse_duration("2days") == 2 * parse_duration("1days")
+
+
+# -- equivalence pin: the Spark operator against a plain-Python model -------
+
+
+def _model_inject(rows, settings, start, seed=42):
+    """Driver-side reference of inject_anomalies: settings applied in order,
+    each selecting by span + md5 rank (hashlib) and, for step/lowered, taking
+    its A10 stats over the values the settings before it left."""
+    rows = {i: dict(r) for i, r in rows.items()}
+    rng = np.random.default_rng(seed)
+    numeric = ["v1", "v2"]
+    for i, s in enumerate(settings):
+        cols = [c for c in s.columns if c in numeric] if s.columns else numeric
+        if not cols:
+            continue
+        t0 = start + s.timestamp
+        t1 = t0 + s.duration
+        span = [k for k, r in rows.items() if t0 <= r["ts"] < t1]
+        span.sort(key=lambda k: (hashlib.md5(f"{seed}:{i}:{k}".encode()).hexdigest(), k))
+        sel = span[: math.floor(len(span) * float(s.percentage) / 100.0)]
+        stats = {}
+        for c in cols:
+            xs = [rows[k][c] for k in sel]
+            mean = (
+                sum(math.floor(x * 1e6 + 0.5) for x in xs) / (1e6 * len(xs)) if xs else None
+            )
+            stats[c] = (mean, max(xs) - min(xs) if xs else None)
+        if s.anomaly_type == "spike":
+            factor = float(rng.uniform(1.0, s.magnitude))
+        elif s.anomaly_type == "lowered":
+            factor = float(rng.uniform(0.3, 0.4))
+        for k in sel:
+            r = rows[k]
+            for c in cols:
+                x = r[c]
+                if s.anomaly_type == "spike":
+                    r[c] = x * factor
+                elif s.anomaly_type == "step":
+                    mean = s.mean if s.mean is not None else stats[c][0]
+                    r[c] = x + float(mean or 0.0) * s.magnitude
+                elif s.anomaly_type == "lowered":
+                    d = s.data_range if s.data_range is not None else stats[c][1]
+                    if d is None or d == 0:
+                        d = s.mean if s.mean is not None else 0.0
+                    low = max(x - float(d) * factor, 0.0)
+                    r[c] = x * factor if low == 0.0 else low
+                elif s.anomaly_type == "offline":
+                    r[c] = 0.0
+                else:
+                    r[c] = x * s.magnitude
+            r["injected_anomaly"] = True
+            r["label"] = 1
+    for r in rows.values():
+        r["is_anomaly"] = r["is_anomaly"] or r["injected_anomaly"]
+    return rows
+
+
+def test_multi_setting_matches_python_model(spark, base):
+    minute = 60.0
+    settings = [
+        AnomalySetting("spike", 100 * minute, 100 * minute, magnitude=4.0,
+                       percentage=70.0, columns=["v1"]),
+        # step and lowered after the spike on the same column: their A10
+        # stats read the spiked values
+        AnomalySetting("step", 150 * minute, 110 * minute, magnitude=2.0,
+                       percentage=50.0, columns=["v1"]),
+        AnomalySetting("lowered", 180 * minute, 120 * minute, percentage=60.0,
+                       columns=["v1", "v2"]),
+        AnomalySetting("custom", 50 * minute, 350 * minute, magnitude=1.5,
+                       percentage=30.0, columns=[]),  # all numeric columns
+        AnomalySetting("spike", 0.0, 500 * minute, magnitude=9.0,
+                       columns=["no_such_column"]),  # skipped: no draw
+        AnomalySetting("spike", 120 * minute, 100 * minute, magnitude=3.0,
+                       columns=["v2"]),
+        AnomalySetting("offline", 300 * minute, 50 * minute, percentage=20.0,
+                       columns=["v2"]),
+        AnomalySetting("lowered", 200 * minute, 100 * minute, percentage=80.0,
+                       columns=["v2"], data_range=0.5),
+    ]
+    start = START + 60
+    got = _collect(inject_anomalies(base, settings, start))
+    rows = {
+        r["id"]: r.asDict()
+        for r in base.withColumn("ts", F.col("timestamp").cast("double")).collect()
+    }
+    want = _model_inject(rows, settings, start)
+    assert sum(r["injected_anomaly"] for r in want.values()) > 100
+    assert got.keys() == want.keys()
+    for k, r in got.items():
+        for c in ("v1", "v2", "label", "injected_anomaly", "is_anomaly"):
+            assert r[c] == want[k][c], (k, c, r[c], want[k][c])

@@ -752,3 +752,35 @@ def test_shj_conf_join_strategy_pins(spark, sf_dir):
         plan = q(spark, sf_dir)._jdf.queryExecution().toString()
         assert "ShuffledHashJoin" in plan, q.__name__
         assert "SortMergeJoin" not in plan, q.__name__
+
+
+def test_inject_anomalies_one_selection_join(spark):
+    """Every setting's row selection comes from one pass over the input,
+    joined back once: the plan keeps one join and at most two scans of
+    the input however many settings there are (a selection built from
+    the previous setting's output re-expands every earlier one: 31 joins
+    over these 5 settings)."""
+    from pyspark.sql import functions as F
+
+    from exact_spark.operators.inject import AnomalySetting, inject_anomalies
+
+    start = 1_700_000_000.0
+    base = spark.range(1, 2001).select(
+        "id",
+        F.timestamp_seconds(F.lit(start) + F.col("id") * 5).alias("timestamp"),
+        *[(F.col("id") % (k + 7)).cast("double").alias(f"V{k}") for k in range(1, 6)],
+        F.lit(0).alias("label"),
+        F.lit(False).alias("injected_anomaly"),
+        F.lit(False).alias("is_anomaly"),
+    )
+    settings = [
+        AnomalySetting("spike", 600, 120, 3.0, 100.0, ["V1"]),
+        AnomalySetting("step", 1800, 300, 2.0, 50.0, ["V2", "V4"]),
+        AnomalySetting("lowered", 3600, 3600, 1.0, 100.0, ["V1"]),
+        AnomalySetting("custom", 7200, 90, 0.0, 25.0, []),
+        AnomalySetting("offline", 9000, 30, 1.0, 100.0, ["V5"]),
+    ]
+    out = inject_anomalies(base, settings, start)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert sum("Join " in line for line in plan.splitlines()) == 1
+    assert plan.count("Range (") <= 2

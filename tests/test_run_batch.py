@@ -91,3 +91,14 @@ def test_run_batch_end_to_end(spark, api, csv_path):
 def test_job_name_validation(api, csv_path):
     with pytest.raises(ValueError):
         api.run_batch(BatchJob(job_name="Bad Name!", filepath=csv_path))
+
+
+def test_failed_job_releases_cached_frames(spark, api, csv_path):
+    # the model lookup fails after the job has cached its frames
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(KeyError):
+        api.run_batch(BatchJob(job_name="leak", filepath=csv_path, time_col="t",
+                               label_col="lab", model="no_such_model"))
+    assert persistent().size() == before
+    api.cancel_job("leak")
