@@ -20,6 +20,12 @@ is computed in one pass over the input; the value updates (A4-A9) and the
 step/lowered stats (A10) stay sequential, each setting reading the values
 the settings before it left.
 
+Batch and stream share one per-setting transform (``_inject_settings``:
+seeded draw, A4-A8 value, A9 flags; ``inject_methods`` reuses the draw and
+value). They differ only in selection: a stream cannot take A3's global
+rank, so it keeps a span row by its md5 bucket, and takes step/lowered
+stats from setting overrides only.
+
 Injected rows get ``injected_anomaly=1, label=1`` (A9,
 anomalyinjector.py:163-167).
 
@@ -33,7 +39,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -73,6 +79,86 @@ def resolve_target_columns(df: DataFrame, setting: AnomalySetting) -> list[str]:
     return sorted(numeric)
 
 
+def _draw(rng: np.random.Generator, kind: str, magnitude: float) -> float | None:
+    """A setting's scalar seeded draw, one per call like anomalyinjector:
+    spike U(1, magnitude) (spike.py:7-9), lowered U(0.3, 0.4)
+    (lowered.py:9-22); the other methods draw nothing."""
+    if kind == "spike":
+        return float(rng.uniform(1.0, magnitude))
+    if kind == "lowered":
+        return float(rng.uniform(0.3, 0.4))
+    return None
+
+
+def _injected_value(kind: str, x: Column, factor, magnitude, mean, spread) -> Column:
+    """A4-A8 value of column ``x``; the A10 ``mean``/``spread`` are floats or Columns."""
+    if kind == "spike":  # A4
+        return x * factor
+    if kind == "step":  # A5
+        return x + mean * magnitude
+    if kind == "lowered":  # A6: max(x - spread*factor, 0), zeros -> x*factor
+        low = F.greatest(x - spread * factor, F.lit(0.0))
+        return F.when(low == 0.0, x * factor).otherwise(low)
+    if kind == "offline":  # A7 (evident intent)
+        return F.lit(0.0)
+    if kind == "custom":  # A8
+        return x * magnitude
+    raise KeyError(f"unknown anomaly_type {kind!r}")
+
+
+def _in_span(ts_epoch: Column, s: AnomalySetting, start_epoch: float) -> Column:  # A1
+    t0 = start_epoch + s.timestamp
+    return (ts_epoch >= F.lit(t0)) & (ts_epoch < F.lit(t0 + s.duration))
+
+
+def _active(df: DataFrame, settings: list[AnomalySetting]) -> list:
+    """(index, setting, target columns) of each setting with a target column;
+    one without is skipped (no flags, no draw) and the indexes stay."""
+    return [(i, s, c) for i, s in enumerate(settings) if (c := resolve_target_columns(df, s))]
+
+
+def _inject_settings(out: DataFrame, active: list, seed: int, selected, with_stats: bool):
+    """A4-A10 of each active setting in order, over the values the settings
+    before it left, scalar draws from one seeded generator in setting order
+    (the reference's per-injector ``default_rng(seed)``). ``selected(i, s)``
+    is a setting's row selection. Step/lowered stats are the setting's
+    overrides, else (``with_stats``) an eager aggregate over its selected
+    rows; a zero or missing range spreads by the mean (lowered.py:9-22)."""
+    rng = np.random.default_rng(seed)
+    for i, s, cols in active:
+        sel = selected(i, s)
+        stats = {}
+        if with_stats and s.anomaly_type in ("step", "lowered") and (
+            s.mean is None or s.data_range is None
+        ):
+            aggs = []
+            for c in cols:
+                v = F.when(sel, F.col(c))
+                aggs += [favg(v).alias(f"mean_{c}"), (F.max(v) - F.min(v)).alias(f"range_{c}")]
+            stats = out.agg(*aggs).collect()[0].asDict()
+
+        factor = _draw(rng, s.anomaly_type, s.magnitude)
+        updates = {}
+        for c in cols:
+            mean = s.mean if s.mean is not None else stats.get(f"mean_{c}")
+            spread = s.data_range if s.data_range is not None else stats.get(f"range_{c}")
+            if not spread:
+                spread = s.mean if s.mean is not None else 0.0
+            new = _injected_value(s.anomaly_type, F.col(c), factor, s.magnitude,
+                                  float(mean or 0.0), float(spread))
+            updates[c] = F.when(sel, new).otherwise(F.col(c))
+        updates["injected_anomaly"] = F.col("injected_anomaly") | sel  # A9
+        updates["label"] = F.when(sel, F.lit(1)).otherwise(F.col("label"))
+        # one projection per setting, not one composed expression: lowered
+        # reads its column four times, so composing n settings on a column
+        # would grow the expression as 4^n
+        out = out.select(*[updates[n].alias(n) if n in updates else n for n in out.columns])
+    # batchimport.py:383-388: is_anomaly |= injected_anomaly
+    if "is_anomaly" in out.columns:
+        out = out.withColumn("is_anomaly", F.col("is_anomaly") | F.col("injected_anomaly"))
+    return out
+
+
 def inject_anomalies(
     df: DataFrame,
     settings: list[AnomalySetting],
@@ -87,25 +173,17 @@ def inject_anomalies(
     by those two alone (A1 span, A3 md5 rank); both are protected, so no
     setting's updates change what a later one selects, and every setting's
     selection comes from ONE pass over ``df``, joined back once: one join
-    and two scans of ``df`` however many settings there are. The value
-    updates (A4-A9) stay sequential, one projection per setting over the
-    values the settings before it left, and so do the eager A10 stats of
-    step/lowered. Scalar draws come from one seeded generator, in setting
-    order, like the reference's per-injector ``default_rng(seed)``.
+    and two scans of ``df`` however many settings there are.
     """
-    rng = np.random.default_rng(seed)
     ts_epoch = epoch_seconds_any(df, ts_col)
-    # (enumerate index, setting, target columns); a skipped setting keeps its index
-    active = [(i, s, c) for i, s in enumerate(settings) if (c := resolve_target_columns(df, s))]
+    active = _active(df, settings)
     out = df
     if active:
         hits = []
         for i, s, _ in active:
-            t0 = start_epoch + s.timestamp
-            in_span = (ts_epoch >= F.lit(t0)) & (ts_epoch < F.lit(t0 + s.duration))  # A1
             hit = F.struct(F.lit(i).alias("i"), F.lit(f"{seed}:{i}:").alias("prefix"),
                            F.lit(float(s.percentage)).alias("pct"))
-            hits.append(F.when(in_span, hit))
+            hits.append(F.when(_in_span(ts_epoch, s, start_epoch), hit))
         # A3: one row per (row, setting whose span holds it), ranked by md5
         # within its setting; a setting keeps its first floor(n * pct/100)
         hits = F.filter(F.array(*hits), lambda h: h.isNotNull())
@@ -121,68 +199,40 @@ def inject_anomalies(
         )
         out = df.join(F.broadcast(selected), df.id == F.col("__sel_id"), "left")
 
-    for i, s, cols in active:
-        sel = F.coalesce(F.array_contains("__sel", i), F.lit(False))
-        # A10: per-column stats over selected rows (or setting overrides),
-        # over the values the earlier settings left
-        stats_row = None
-        if s.anomaly_type in ("step", "lowered") and (s.mean is None or s.data_range is None):
-            aggs = []
-            for c in cols:
-                v = F.when(sel, F.col(c))
-                aggs += [favg(v).alias(f"mean_{c}"), (F.max(v) - F.min(v)).alias(f"range_{c}")]
-            stats_row = out.agg(*aggs).collect()[0]
+    def sel(i: int, s: AnomalySetting) -> Column:
+        return F.coalesce(F.array_contains("__sel", i), F.lit(False))
 
-        # scalar seeded draws (one per call, like anomalyinjector)
-        if s.anomaly_type == "spike":
-            factor = float(rng.uniform(1.0, s.magnitude))
-        elif s.anomaly_type == "lowered":
-            factor = float(rng.uniform(0.3, 0.4))
-        else:
-            factor = None
+    return _inject_settings(out, active, seed, sel, with_stats=True).drop("__sel_id", "__sel")
 
-        updates = {}
-        for c in cols:
-            x = F.col(c)
-            if s.anomaly_type == "spike":  # A4
-                new = x * F.lit(factor)
-            elif s.anomaly_type == "step":  # A5
-                mean = s.mean if s.mean is not None else stats_row[f"mean_{c}"]
-                new = x + F.lit(float(mean or 0.0) * s.magnitude)
-            elif s.anomaly_type == "lowered":  # A6
-                drange = s.data_range if s.data_range is not None else stats_row[f"range_{c}"]
-                if drange is None or drange == 0:
-                    # lowered.py:9-22 zero-range fallback: the same shape,
-                    # substituting mean for range
-                    drange = s.mean if s.mean is not None else 0.0
-                low = F.greatest(x - F.lit(float(drange) * factor), F.lit(0.0))
-                new = F.when(low == 0.0, x * F.lit(factor)).otherwise(low)
-            elif s.anomaly_type == "offline":  # A7 (evident intent)
-                new = F.lit(0.0)
-            elif s.anomaly_type == "custom":  # A8
-                new = x * F.lit(s.magnitude)
-            else:
-                raise KeyError(f"unknown anomaly_type {s.anomaly_type!r}")
-            updates[c] = F.when(sel, new).otherwise(x)
 
-        updates["injected_anomaly"] = F.col("injected_anomaly") | sel  # A9
-        updates["label"] = F.when(sel, F.lit(1)).otherwise(F.col("label"))
-        # one projection per setting, not one composed expression: lowered
-        # reads its column four times, so composing n settings on a column
-        # would grow the expression as 4^n
-        out = out.select(*[updates[n].alias(n) if n in updates else n for n in out.columns])
+def streaming_injection(
+    df: DataFrame,
+    settings: list[AnomalySetting],
+    start_epoch: float,
+    seed: int = 42,
+    ts_col: str = "timestamp",
+) -> DataFrame:
+    """T2: ``inject_anomalies``' per-setting transform as row-local
+    expressions for a stream. A span row is selected when
+    ``md5(seed:i:id) mod 100 < pct``: independent of partitioning and
+    arrival order, equal to the batch rank at 100%. Step/lowered take the
+    setting's ``mean``/``data_range`` overrides only (the reference's
+    stream path pre-computes them from the file: simulator.py:173-183)."""
+    ts_epoch = epoch_seconds_any(df, ts_col)
 
-    out = out.drop("__sel_id", "__sel")
-    # batchimport.py:383-388: is_anomaly |= injected_anomaly
-    if "is_anomaly" in out.columns:
-        out = out.withColumn("is_anomaly", F.col("is_anomaly") | F.col("injected_anomaly"))
-    return out
+    def sel(i: int, s: AnomalySetting) -> Column:
+        rk = F.md5(F.concat(F.lit(f"{seed}:{i}:"), F.col("id").cast("string")))
+        bucket = F.conv(F.substring(rk, 1, 8), 16, 10).cast("long") % 100
+        return _in_span(ts_epoch, s, start_epoch) & (bucket < F.lit(int(s.percentage)))
+
+    return _inject_settings(df, _active(df, settings), seed, sel, with_stats=False)
+
 
 # --- seeded scalar draws (mirrors anomalyinjector.py:20-21) -----------------
 _rng = np.random.default_rng(42)
 SPIKE_MAGNITUDE = 3.0
-SPIKE_FACTOR = float(_rng.uniform(1.0, SPIKE_MAGNITUDE))  # spike.py:7-9
-LOWERED_FACTOR = float(_rng.uniform(0.3, 0.4))  # lowered.py:9-22
+SPIKE_FACTOR = _draw(_rng, "spike", SPIKE_MAGNITUDE)
+LOWERED_FACTOR = _draw(_rng, "lowered", 1.0)
 STEP_MAGNITUDE = 2.0  # step.py:7-9
 CUSTOM_MAGNITUDE = 2.5  # custom.py:6-9
 
@@ -287,27 +337,25 @@ def inject_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly (same sum(fixed)/count arithmetic, order-independent).
     from exact_spark.functions import SCALE6, fixed
 
-    _sel = F.col("selected") == 1
+    sel = F.col("selected") == 1
     wall = Window.partitionBy()
     df = df.withColumn(
         "mean_sel",
-        F.sum(F.when(_sel, fixed(F.col("value")))).over(wall)
-        / (F.lit(float(SCALE6)) * F.count(F.when(_sel, F.col("value"))).over(wall)),
+        F.sum(F.when(sel, fixed(F.col("value")))).over(wall)
+        / (F.lit(float(SCALE6)) * F.count(F.when(sel, F.col("value"))).over(wall)),
     ).withColumn(
         "rng_sel",
-        F.max(F.when(_sel, F.col("value"))).over(wall)
-        - F.min(F.when(_sel, F.col("value"))).over(wall),
+        F.max(F.when(sel, F.col("value"))).over(wall)
+        - F.min(F.when(sel, F.col("value"))).over(wall),
     )
+    factor = {"spike": SPIKE_FACTOR, "lowered": LOWERED_FACTOR}
+    magnitude = {"step": STEP_MAGNITUDE, "custom": CUSTOM_MAGNITUDE}
     x = F.col("value")
-    low = F.greatest(x - F.col("rng_sel") * F.lit(LOWERED_FACTOR), F.lit(0.0))
     branches = {
-        "spike": x * F.lit(SPIKE_FACTOR),
-        "step": x + F.col("mean_sel") * F.lit(STEP_MAGNITUDE),
-        "lowered": F.when(low == 0.0, x * F.lit(LOWERED_FACTOR)).otherwise(low),
-        "offline": F.lit(0.0),
-        "custom": x * F.lit(CUSTOM_MAGNITUDE),
+        m: _injected_value(m, x, factor.get(m), magnitude.get(m),
+                           F.col("mean_sel"), F.col("rng_sel"))
+        for m in _METHOD_SQL
     }
-    sel = F.col("selected") == 1
     mv = F.explode(
         F.array(
             *[

@@ -16,6 +16,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.plans.batch import BatchJob, run_batch
+from exact_spark.plans.stream import run_stream
 from exact_spark.session import tune_session
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import get_file_columns
@@ -130,11 +131,23 @@ class EngineAPI:
         )
         return {"name": name, "plan": plan}
 
-    # -- run-batch (engine.py:161-205) ---------------------------------------
+    # -- run-batch / run-stream (engine.py:161-255) -------------------------
+    def _job_dir(self, job_name: str, stream: bool) -> pathlib.Path:
+        """A job's output dir: run summary and plots, or the stream's staged
+        source and checkpoint. A name outside ``JOB_NAME_RE`` (``a/b``,
+        ``..``) would leave the catalog's flat namespace and is rejected."""
+        if not JOB_NAME_RE.match(job_name):
+            raise ValueError(f"invalid job name {job_name!r}")
+        return self.output_dir / (f"stream_{job_name}" if stream else job_name)
+
     def run_batch(self, job: BatchJob) -> dict:
-        if not JOB_NAME_RE.match(job.job_name):
-            raise ValueError(f"invalid job name {job.job_name!r}")
+        self._job_dir(job.job_name, stream=False)  # checks the name run_batch writes under
         return run_batch(self.spark, self.catalog, job, str(self.output_dir))
+
+    def run_stream(self, job: BatchJob, speedup: float = 1000.0, chunks: int = 20) -> dict:
+        work = self._job_dir(job.job_name, stream=True)
+        return run_stream(self.spark, self.catalog, job, str(work),
+                          speedup=speedup, chunks=chunks)
 
     # -- get-data (engine.py:257-316): split-oriented frame, epoch ts --------
     #: rows returned per call unless the caller overrides — the unbounded
@@ -168,9 +181,6 @@ class EngineAPI:
     # -- catalog/list methods -------------------------------------------------
     def get_all_jobs(self) -> list[str]:
         return self.catalog.list_all_tables()
-
-    def get_running(self) -> list[str]:
-        return []  # batch jobs are synchronous here; streams report via streaming.*
 
     def get_columns(self, job_name: str, stream: bool = False) -> list[str]:
         return self.catalog.get_columns(self.catalog.table_name(job_name, stream))
@@ -226,8 +236,8 @@ class EngineAPI:
 
     # -- cancel-job (engine.py:408-450): drop table + delete output dir ------
     def cancel_job(self, job_name: str, stream: bool = False) -> bool:
+        out = self._job_dir(job_name, stream)
         dropped = self.catalog.drop_table(self.catalog.table_name(job_name, stream))
-        out = self.output_dir / job_name
         if out.exists():
             shutil.rmtree(out)
         return dropped

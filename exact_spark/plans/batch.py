@@ -123,6 +123,17 @@ def evaluate_classification_split(
     return _classification_metrics(row), _classification_metrics(row, "test_")
 
 
+def job_input(spark: SparkSession, job: BatchJob, release: ExitStack) -> tuple[DataFrame, float]:
+    """Batch and stream jobs' ingest: ``(canonical frame, start epoch)``.
+    The frame is cached, as every job reads it several times, and
+    ``release`` unpersists it on every exit path."""
+    raw = read_file(spark, job.filepath)
+    canon = canonicalize(raw, time_col=job.time_col, label_col=job.label_col).cache()
+    release.callback(canon.unpersist)
+    start_epoch = canon.agg(F.min(F.col("timestamp").cast("double"))).collect()[0][0]
+    return canon, start_epoch
+
+
 def run_batch(
     spark: SparkSession,
     catalog: JobCatalog,
@@ -135,16 +146,12 @@ def run_batch(
     # job included: an engine process outlives its jobs
     with ExitStack() as release:
         # 1. simulate/ingest --------------------------------------------------
-        # cache: the canonical frame has five consumers (the start-epoch
-        # agg, inject's selection pass and its join, inject's step/lowered
-        # stats aggregates, the create_table write); uncached, each re-runs
-        # the file read and canonicalization. Released once the table is
+        # the canonical frame's consumers here: the start-epoch agg,
+        # inject's selection pass and its join, inject's step/lowered stats
+        # aggregates, the create_table write. Released once the table is
         # written.
         t0 = time.perf_counter()
-        raw = read_file(spark, job.filepath)
-        canon = canonicalize(raw, time_col=job.time_col, label_col=job.label_col).cache()
-        release.callback(canon.unpersist)
-        start_epoch = canon.agg(F.min(F.col("timestamp").cast("double"))).collect()[0][0]
+        canon, start_epoch = job_input(spark, job, release)
         injected = inject_anomalies(canon, job.anomaly_settings, start_epoch, seed=job.seed)
         catalog.create_table(table, injected)
         canon.unpersist()

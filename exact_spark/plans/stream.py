@@ -4,26 +4,30 @@ engine.py:207-255 + execute_calls.py:910-970, rebuilt working: stage the
 canonicalized file as a time-ordered chunked stream source, pre-train the
 model on the raw file (T3's contract), replay with inline injection (T2),
 score each micro-batch and append to the ``job_stream_`` table.
+
+The job core is shared with ``run_batch``: ingest (``batch.job_input``)
+and the per-setting injection transform (``operators.inject``).
 """
 
 from __future__ import annotations
 
 import pathlib
+from contextlib import ExitStack
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.ml.models import get_model
-from exact_spark.plans.batch import BatchJob, evaluate_classification
+from exact_spark.operators.inject import streaming_injection
+from exact_spark.plans.batch import BatchJob, evaluate_classification, job_input
 from exact_spark.sources.catalog import JobCatalog
-from exact_spark.sources.ingest import canonicalize, feature_columns, read_file
+from exact_spark.sources.ingest import feature_columns
 from exact_spark.streaming.replay import (
     await_stream,
     read_replay_stream,
     replay_rate,
     score_stream,
     stage_stream_source,
-    streaming_injection,
 )
 
 
@@ -41,22 +45,17 @@ def run_stream(
     src_dir = str(work / "source")
     ckpt_dir = str(work / "checkpoint")
 
-    # ingest + canonicalize (batch side), stage as replay source (T1).
-    # cache: four consumers (start-epoch agg, staging write, replay-rate
-    # agg, model fit) would otherwise each re-run the file read +
-    # canonicalization lineage
-    canon = canonicalize(
-        read_file(spark, job.filepath), time_col=job.time_col, label_col=job.label_col
-    ).cache()
-    start_epoch = canon.agg(F.min(F.col("timestamp").cast("double"))).collect()[0][0]
-    stage_stream_source(canon, src_dir, chunks=chunks)
-    rate = replay_rate(canon, speedup)
+    with ExitStack() as release:
+        # the canonical frame's consumers here: the start-epoch agg, the
+        # staging write (T1), the replay-rate agg, the model fit
+        canon, start_epoch = job_input(spark, job, release)
+        stage_stream_source(canon, src_dir, chunks=chunks)
+        rate = replay_rate(canon, speedup)
 
-    # pre-train on the raw (un-injected) file — T3 (execute_calls.py:952-956)
-    feats = feature_columns(canon)
-    model = get_model(job.model, **job.model_params)
-    model.run(canon, feats)
-    canon.unpersist()
+        # pre-train on the raw (un-injected) file — T3 (execute_calls.py:952-956)
+        feats = feature_columns(canon)
+        model = get_model(job.model, **job.model_params)
+        model.run(canon, feats)
 
     # replay -> inline injection -> foreachBatch scoring -> append table
     stream = read_replay_stream(spark, src_dir, files_per_trigger=1)

@@ -15,7 +15,10 @@ Protocol parity, method by method:
   ``EngineAPI.get_data`` (bounded collect) and the response is streamed
   with ``sendall`` — the client's read-until-EOF loop reassembles it.
 - ``run-batch`` / ``run-stream`` -> fire-and-forget: the job runs on a
-  daemon thread, no response bytes (engine.py:161-255).
+  daemon thread through ``EngineAPI.run_batch`` / ``run_stream``, no
+  response bytes (engine.py:161-255).
+- ``get-data`` / ``get-columns`` / ``cancel-job``: a ``job_stream_`` name
+  means the stream job's table, any other the batch job's.
 - ``get-models`` / ``get-xai-methods`` / ``get-injection-methods`` /
   ``get-datasets`` / ``get-all-jobs`` / ``get-columns`` /
   ``get-dataset-columns`` / ``get-running`` -> the reference's exact
@@ -65,14 +68,14 @@ from exact_spark.sources.catalog import BATCH_PREFIX, STREAM_PREFIX
 _RECV_CHUNK = 4096
 
 
-def _strip_job_prefix(name: str) -> str:
-    """The reference client pre-prefixes names (api.py:28 sends
-    ``job_batch_<name>``); the engine-side catalog prefixes again, so
-    normalize to the bare job name."""
-    for p in (BATCH_PREFIX, STREAM_PREFIX):
-        if name.startswith(p):
-            return name[len(p):]
-    return name
+def _job_ref(name: str) -> tuple[str, bool]:
+    """``(bare job name, stream)``: the reference client pre-prefixes names
+    (api.py:28 sends ``job_batch_<name>``), the catalog prefixes again."""
+    if name.startswith(STREAM_PREFIX):
+        return name[len(STREAM_PREFIX):], True
+    if name.startswith(BATCH_PREFIX):
+        return name[len(BATCH_PREFIX):], False
+    return name, False
 
 
 def _parse_settings(inj_params) -> list:
@@ -135,6 +138,8 @@ class EngineServer:
         self.port = port
         self._server: _Server | None = None
         self.job_threads: dict[str, threading.Thread] = {}
+        # job-name -> "batch" | "stream", recorded when the job's thread starts
+        self.job_kinds: dict[str, str] = {}
         # job-name -> "ExcType: msg" for fire-and-forget jobs that failed;
         # surfaced instead of letting a worker thread die unhandled
         self.job_errors: dict[str, str] = {}
@@ -172,11 +177,19 @@ class EngineServer:
         except Exception as exc:  # noqa: BLE001 — boundary: worker thread top
             self.job_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
 
+    def _start_job(self, kind: str, job: BatchJob, fn, **kwargs) -> None:
+        """Run ``fn(job, **kwargs)`` on a daemon thread that outlives the connection."""
+        t = threading.Thread(target=self._run_job, args=(job.job_name, fn, job),
+                             kwargs=kwargs, daemon=True)
+        self.job_kinds[job.job_name] = kind
+        self.job_threads[job.job_name] = t
+        t.start()
+
     # -- dispatch (engine.py:158-404) ----------------------------------------
     def _job_from_request(self, data: dict) -> BatchJob:
         """The job a ``run-batch`` or ``run-stream`` request describes."""
         return BatchJob(
-            job_name=_strip_job_prefix(data["name"]),
+            job_name=_job_ref(data["name"])[0],
             filepath=str((self.api.datasets_dir or pathlib.Path(".")) / data["dataset"]),
             time_col=data.get("time_column") or "timestamp",
             label_col=data.get("label_column"),
@@ -197,8 +210,7 @@ class EngineServer:
                     if data.get("to_timestamp") is not None
                     else None
                 )
-                name = _strip_job_prefix(data["job_name"])
-                stream = data["job_name"].startswith(STREAM_PREFIX)
+                name, stream = _job_ref(data["job_name"])
                 payload = self.api.get_data(
                     name, from_dt, to_dt, stream=stream,
                     limit=data.get("limit"), offset=int(data.get("offset", 0)),
@@ -217,44 +229,25 @@ class EngineServer:
                 send({"error": f"Invalid timestamp format: {e}", "data": None})
 
         elif method == "run-batch":
-            job = self._job_from_request(data)
-            t = threading.Thread(
-                target=self._run_job,
-                args=(job.job_name, self.api.run_batch, job),
-                daemon=True,
-            )
-            t.start()
-            self.job_threads[job.job_name] = t  # fire-and-forget, no response
-
+            self._start_job("batch", self._job_from_request(data), self.api.run_batch)
         elif method == "run-stream":
-            from exact_spark.plans.stream import run_stream
-
-            job = self._job_from_request(data)
-            t = threading.Thread(
-                target=self._run_job,
-                args=(job.job_name, run_stream,
-                      self.api.spark, self.api.catalog, job,
-                      str(self.api.output_dir / f"stream_{job.job_name}")),
-                kwargs={
-                    # engine.py:211's speedup knob; chunks is ours (bounds
-                    # the micro-batch count of a finite replay)
-                    "speedup": float(data.get("speedup", 1000.0)),
-                    "chunks": int(data.get("chunks", 20)),
-                },
-                daemon=True,
+            # engine.py:211's speedup knob; chunks is ours (bounds the
+            # micro-batch count of a finite replay)
+            self._start_job(
+                "stream", self._job_from_request(data), self.api.run_stream,
+                speedup=float(data.get("speedup", 1000.0)),
+                chunks=int(data.get("chunks", 20)),
             )
-            t.start()
-            self.job_threads[job.job_name] = t
-
         elif method == "get-running":
             running = [
-                {"name": n, "type": "batch"}
+                {"name": n, "type": self.job_kinds[n]}
                 for n, t in list(self.job_threads.items())
                 if t.is_alive()
             ]
             send({"running": running})
         elif method == "cancel-job":
-            self.api.cancel_job(_strip_job_prefix(data["job_name"]))
+            name, stream = _job_ref(data["job_name"])
+            self.api.cancel_job(name, stream=stream)
         elif method == "get-models":
             send({"models": self.api.get_models()})
         elif method == "get-xai-methods":
@@ -266,7 +259,8 @@ class EngineServer:
         elif method == "get-all-jobs":
             send({"jobs": self.api.get_all_jobs()})
         elif method == "get-columns":
-            send({"columns": self.api.get_columns(_strip_job_prefix(data["name"]))})
+            name, stream = _job_ref(data["name"])
+            send({"columns": self.api.get_columns(name, stream=stream)})
         elif method == "get-dataset-columns":
             send({"columns": self.api.get_dataset_columns(data["dataset"])})
 

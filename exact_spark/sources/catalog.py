@@ -421,17 +421,11 @@ class JobCatalog:
                 return False
             return not (part.startswith("_") and "=" not in part)
 
-        return (
-            next(
-                (
-                    f
-                    for f in p.rglob("*.parquet")
-                    if all(_visible(part) for part in f.relative_to(p).parts)
-                ),
-                None,
-            )
-            is not None
-        )
+        try:
+            files = p.rglob("*.parquet")
+            return any(all(_visible(part) for part in f.relative_to(p).parts) for f in files)
+        except FileNotFoundError:  # a concurrent drop_table is deleting it
+            return False
 
     # -- S11: columns minus flags (timescaledb_api.py:232-233) ---------------
     def get_columns(self, table_name: str) -> list[str]:

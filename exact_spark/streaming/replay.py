@@ -9,11 +9,14 @@ the intended semantics rebuilt Spark-first:
   pacing contract (rows/sec = speedup / mean_interarrival) is exposed by
   ``replay_rate`` and applied via ``maxFilesPerTrigger``-chunked staging or
   a rate-source join.
-- T2 inline injection: the batch injectors as streaming-safe expressions.
-  Delta from batch: the exact-k percentage subsample needs a global rank,
-  which a stream cannot do — selection becomes a deterministic per-row
-  md5 percentage test (same expectation, per-row independent). Documented
-  intentional difference.
+- T2 inline injection: ``operators.inject.streaming_injection`` applies
+  the batch injectors' own per-setting transform (seeded draws, A4-A8
+  value expressions, A9 flags) inside the streaming select. The one
+  selection difference: the exact-k percentage subsample needs a global
+  rank, which a stream cannot take, so a row is selected by a
+  deterministic per-row md5 bucket test (same expectation, per-row
+  independent; equal to the batch selection at 100%). Step/lowered stats
+  come from the setting's overrides only.
 - T3 detection: the reference re-reads and re-scores the WHOLE table every
   second (execute_calls.py:941-970). Here ``foreachBatch`` scores only the
   new micro-batch with the pre-trained broadcast model and appends —
@@ -32,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.functions import epoch_seconds_any
-from exact_spark.operators.inject import AnomalySetting, resolve_target_columns
 
 
 def mean_interarrival_seconds(df: DataFrame, ts_col: str = "timestamp") -> float:
@@ -69,71 +71,6 @@ def read_replay_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(path)
     )
-
-
-def streaming_injection(
-    df: DataFrame,
-    settings: list[AnomalySetting],
-    start_epoch: float,
-    seed: int = 42,
-    ts_col: str = "timestamp",
-) -> DataFrame:
-    """T2: A1-A10 as pure row-local streaming expressions.
-
-    Per-row deterministic percentage selection:
-    ``md5(seed:i:id) mod 100 < pct`` — independent of partitioning and
-    arrival order, so a replayed stream injects identically every run.
-    Stats-dependent methods (step/lowered) require setting-level ``mean`` /
-    ``data_range`` overrides in streaming (the reference's stream path
-    pre-computes them from the file: simulator.py:173-183).
-    """
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    ts_epoch = epoch_seconds_any(df, ts_col)
-    out = df
-    for i, s in enumerate(settings):
-        t0, t1 = start_epoch + s.timestamp, start_epoch + s.timestamp + s.duration
-        in_span = (ts_epoch >= F.lit(t0)) & (ts_epoch < F.lit(t1))
-        bucket = (
-            F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed}:{i}:"), F.col("id").cast("string"))), 1, 8), 16, 10)
-            .cast("long") % 100
-        )
-        sel = in_span & (bucket < F.lit(int(s.percentage)))
-        cols = resolve_target_columns(df, s)
-
-        if s.anomaly_type == "spike":
-            factor = float(rng.uniform(1.0, s.magnitude))
-        elif s.anomaly_type == "lowered":
-            factor = float(rng.uniform(0.3, 0.4))
-        else:
-            factor = None
-
-        for c in cols:
-            x = F.col(c)
-            if s.anomaly_type == "spike":
-                new = x * F.lit(factor)
-            elif s.anomaly_type == "step":
-                new = x + F.lit(float(s.mean or 0.0) * s.magnitude)
-            elif s.anomaly_type == "lowered":
-                drange = float(s.data_range or 0.0)
-                # lowered.py:9-22: max(x - spread*factor, 0) with zeros
-                # replaced by x*factor; zero-range falls back to the mean as
-                # the spread (same contract as inject_anomalies).
-                spread = drange if drange != 0.0 else float(s.mean or 0.0)
-                low = F.greatest(x - F.lit(spread * factor), F.lit(0.0))
-                new = F.when(low == 0.0, x * F.lit(factor)).otherwise(low)
-            elif s.anomaly_type == "offline":
-                new = F.lit(0.0)
-            elif s.anomaly_type == "custom":
-                new = x * F.lit(s.magnitude)
-            else:
-                raise KeyError(f"unknown anomaly_type {s.anomaly_type!r}")
-            out = out.withColumn(c, F.when(sel, new).otherwise(x))
-        out = out.withColumn(
-            "injected_anomaly", F.col("injected_anomaly") | sel
-        ).withColumn("label", F.when(sel, F.lit(1)).otherwise(F.col("label")))
-    return out.withColumn("is_anomaly", F.col("is_anomaly") | F.col("injected_anomaly"))
 
 
 def score_stream(

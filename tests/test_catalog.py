@@ -335,3 +335,25 @@ def test_expire_partitions_retention(spark, catalog):
     assert catalog.expire_partitions(name, cutoff)["partitions_dropped"] == 0
     p = catalog._path(name)
     assert not list(p.glob(".__date=*.expired"))
+
+
+def test_list_all_tables_during_concurrent_drop(catalog):
+    """get-all-jobs may run while cancel-job drops a table: a table half
+    deleted is simply not listed, the scan does not raise."""
+    import shutil
+    import threading
+
+    for trial in range(20):
+        table = catalog.warehouse / "job_batch_x"
+        for d in range(20):
+            (table / f"__date={d}").mkdir(parents=True)
+            for k in range(5):
+                (table / f"__date={d}" / f"part-{k}.parquet").write_text("x")
+        drop = threading.Thread(target=shutil.rmtree, args=(table,))
+        drop.start()
+        try:
+            while drop.is_alive():
+                assert catalog.list_all_tables() in ([], ["job_batch_x"])
+        finally:
+            drop.join(30)
+        assert not drop.is_alive()

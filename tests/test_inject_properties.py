@@ -201,3 +201,33 @@ def test_multi_setting_matches_python_model(spark, base):
     for k, r in got.items():
         for c in ("v1", "v2", "label", "injected_anomaly", "is_anomaly"):
             assert r[c] == want[k][c], (k, c, r[c], want[k][c])
+
+
+def test_stream_injection_matches_batch_at_full_percentage(spark, base):
+    """At 100% the stream's md5-bucket selection keeps every span row, as
+    the batch's rank does, so the shared per-setting transform must give
+    the same rows. The leading setting has no target column: it is skipped
+    on both paths and draws nothing, so the later spike's factor agrees."""
+    from exact_spark.operators.inject import streaming_injection
+
+    minute = 60.0
+    settings = [
+        AnomalySetting("spike", 0.0, 500 * minute, magnitude=9.0,
+                       columns=["no_such_column"]),
+        AnomalySetting("spike", 100 * minute, 100 * minute, magnitude=4.0,
+                       columns=["v1"]),
+        AnomalySetting("lowered", 150 * minute, 100 * minute, columns=["v1", "v2"],
+                       mean=2.0, data_range=1.5),
+        AnomalySetting("step", 180 * minute, 120 * minute, magnitude=2.0,
+                       columns=["v2"], mean=0.75, data_range=3.0),
+        AnomalySetting("offline", 300 * minute, 50 * minute, columns=["v1"]),
+        AnomalySetting("custom", 50 * minute, 350 * minute, magnitude=1.5),
+    ]
+    start = START + 60
+    batch = _collect(inject_anomalies(base, settings, start))
+    stream = _collect(streaming_injection(base, settings, start))
+    assert sum(r["injected_anomaly"] for r in batch.values()) > 300
+    assert stream.keys() == batch.keys()
+    for k, r in stream.items():
+        for c in ("v1", "v2", "label", "injected_anomaly", "is_anomaly"):
+            assert r[c] == batch[k][c], (k, c, r[c], batch[k][c])

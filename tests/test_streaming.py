@@ -61,6 +61,18 @@ def test_run_stream_end_to_end(spark, csv_path, tmp_path):
     assert result["compaction"]["files_after"] <= result["compaction"]["files_before"]
 
 
+def test_failed_stream_job_releases_cached_frames(spark, csv_path, tmp_path):
+    # the model lookup fails after the job has cached its canonical frame
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    catalog = JobCatalog(spark, str(tmp_path / "wh"))
+    job = BatchJob(job_name="leak", filepath=csv_path, time_col="t",
+                   label_col="lab", model="no_such_model")
+    with pytest.raises(KeyError):
+        run_stream(spark, catalog, job, str(tmp_path / "work"), chunks=2)
+    assert persistent().size() == before
+
+
 def test_interarrival_and_windowed_counts(spark, csv_path, tmp_path):
     from exact_spark.sources.ingest import canonicalize, read_file
 

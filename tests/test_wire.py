@@ -384,3 +384,90 @@ def test_slow_request_does_not_block_others(server, monkeypatch):
         release.set()
         t.join(60)
     assert slow == [{"models": models}]
+
+
+def _wait_until(cond, timeout: float = 15.0) -> bool:
+    deadline = time.time() + timeout
+    while not cond() and time.time() < deadline:
+        time.sleep(0.2)
+    return cond()
+
+
+def test_job_prefix_selects_stream_or_batch_table(server, spark, tmp_path):
+    """get-columns and cancel-job act on the table the client's prefix
+    names: job_stream_x is the stream job's table (and its staged source
+    and checkpoint dir), never job_batch_x."""
+    api = server.api
+    df = spark.range(1, 4).select(
+        F.col("id"),
+        F.timestamp_seconds(F.lit(1700000000) + F.col("id") * 60).alias("timestamp"),
+        (F.col("id") * 1.5).alias("v1"),
+        F.lit(0).alias("label"),
+        F.lit(False).alias("injected_anomaly"),
+        F.lit(False).alias("is_anomaly"),
+    )
+    api.catalog.create_table("job_batch_x", df)
+    api.catalog.create_table("job_stream_x", df.withColumn("v_stream", F.col("v1")))
+    work = tmp_path / "out" / "stream_x"
+    (work / "checkpoint").mkdir(parents=True)
+
+    cols = _request(server, {"METHOD": "get-columns", "name": "job_stream_x"})["columns"]
+    assert "v_stream" in cols
+    _request(server, {"METHOD": "cancel-job", "job_name": "job_stream_x"}, response=False)
+    jobs = lambda: _request(server, {"METHOD": "get-all-jobs"})["jobs"]  # noqa: E731
+    assert _wait_until(lambda: "job_stream_x" not in jobs() and not work.exists())
+    assert "job_batch_x" in jobs()
+
+
+def test_job_names_are_validated(server, tmp_path):
+    """run-stream and cancel-job reject a name outside JOB_NAME_RE, as
+    run-batch does: the failure is recorded and no table is created."""
+    from exact_spark.plans.batch import BatchJob
+
+    with pytest.raises(ValueError):
+        server.api.run_stream(BatchJob(job_name="a/b", filepath="unused.csv"))
+
+    csv = "ts,v\n" + "\n".join(f"{1700000000 + i * 60},{10.0 + i % 9}" for i in range(40))
+    (tmp_path / "datasets" / "named.csv").write_text(csv)
+    _request(server, {
+        "METHOD": "run-stream", "model": "threshold", "dataset": "named.csv",
+        "name": "a/b", "chunks": 2, "time_column": "ts", "label_column": None,
+    }, response=False)
+    assert _wait_until(lambda: "a/b" in server.job_threads)
+    server.job_threads["a/b"].join(120)
+    assert not server.job_threads["a/b"].is_alive()
+    assert server.job_errors["a/b"].startswith("ValueError"), server.job_errors
+    assert not (tmp_path / "wh" / "job_stream_a").exists()
+
+    # through the output dir this name would reach the wiredemo table
+    got = _request(server, {"METHOD": "cancel-job", "job_name": "../wh/job_batch_wiredemo"})
+    assert "invalid job name" in got["error"]
+    assert "job_batch_wiredemo" in _request(server, {"METHOD": "get-all-jobs"})["jobs"]
+
+
+def test_get_running_reports_each_jobs_kind(server, monkeypatch):
+    release = threading.Event()
+    started = {"batch": threading.Event(), "stream": threading.Event()}
+
+    def blocking(kind):
+        def run(job, **kwargs):
+            started[kind].set()
+            release.wait(30)
+        return run
+
+    monkeypatch.setattr(server.api, "run_batch", blocking("batch"))
+    monkeypatch.setattr(server.api, "run_stream", blocking("stream"))
+    try:
+        for kind in ("batch", "stream"):
+            _request(server, {"METHOD": f"run-{kind}", "dataset": "none.csv",
+                              "name": f"job_{kind}_k{kind}"}, response=False)
+            assert started[kind].wait(10)
+        running = _request(server, {"METHOD": "get-running"})["running"]
+    finally:
+        release.set()
+        for t in list(server.job_threads.values()):
+            t.join(30)
+    assert sorted(running, key=lambda r: r["name"]) == [
+        {"name": "kbatch", "type": "batch"},
+        {"name": "kstream", "type": "stream"},
+    ]
