@@ -130,10 +130,10 @@ def _fold_transitive(fn, parts: list, seen: set) -> None:
     by global name inside exact_spark — helper FUNCTIONS (their sources,
     recursively) and module-level CONSTANTS (their reprs) — to ``parts``.
 
-    This closes the residual class ADVICE r09 pointed at: a salt that
-    digests only the explicitly-passed helpers misses a Spark-side edit
-    to a helper the builder calls (sim_knn_graph's content lives in
-    sim_neardup_lsh; the pair builders' lives in _lsh_bands/_shingled/
+    Invariant: an edit to any helper the builder reaches re-salts it. A
+    salt that digests only the explicitly-passed helpers misses a
+    Spark-side edit to a helper the builder calls (sim_knn_graph's
+    content lives in sim_neardup_lsh; the pair builders' lives in _lsh_bands/_shingled/
     _self_pairs), so a warm artifact could serve stale content until a
     content-equality pin happened to run. Walking ``__code__.co_names``
     (including nested code objects — lambdas, comprehensions) makes the
@@ -177,16 +177,16 @@ def _fold_transitive(fn, parts: list, seen: set) -> None:
 def builder_salt(*query_names: str, helpers: tuple = ()) -> str:
     """Short digest of the registered builder spec(s) behind an artifact,
     folded into the artifact tag so a BUILDER CODE change re-fingerprints
-    the artifact automatically (ADVICE r08: keying only on the corpus
-    fingerprint lets a warm artifact silently serve a stale pair table
-    after the builder is edited — the consumers' content-equality pins
-    only catch that in an environment where the stale artifact survives
-    into a test run). The digest covers BOTH the registered oracle SQL
+    the artifact automatically (keying only on the corpus fingerprint
+    lets a warm artifact silently serve a stale pair table after the
+    builder is edited — the consumers' content-equality pins only catch
+    that in an environment where the stale artifact survives into a test
+    run). The digest covers BOTH the registered oracle SQL
     (which interpolates every semantic parameter: thresholds, band
     counts, hash families) AND the Spark builder's function source — a
     Spark-side-only change (e.g. the gram-hash keying, which the oracle
     deliberately spells differently) must also re-fingerprint, and the
-    SQL alone cannot see it. The walk is TRANSITIVE (ADVICE r09): every
+    SQL alone cannot see it. The walk is TRANSITIVE: every
     exact_spark function the builder reaches by name joins the digest,
     plus module-level constants, so thin registered wrappers no longer
     hide their content-bearing helpers; explicit ``helpers`` remain for
@@ -212,14 +212,14 @@ _SALT_RE = None  # compiled lazily; module-level so tests can reach it
 # Stale-salt: "no current-code path can be reading an old-salt artifact"
 # holds only WITHIN one code version — a concurrent process still running
 # the pre-edit code can be mid-read of its old-salt dir when a new-code
-# process GCs it (ADVICE r10). The age gate bounds that cross-version race
+# process GCs it. The age gate bounds that cross-version race
 # to processes that outlive the gate: a dir built within the last hour is
 # left alone (its pre-edit builder is plausibly still alive), older ones
 # are reclaimed on the next cache miss.
 _GC_STALE_SALT_MIN_AGE_S = 3600.0
-# Expired-fingerprint sweep (VERDICT r10 item 7): artifacts of RETIRED
-# corpus snapshots (fp matches no current source) previously accumulated
-# until the host tmp reaper ran. Recency is tracked by a _SERVED stamp
+# Expired-fingerprint sweep: artifacts of RETIRED corpus snapshots (fp
+# matches no current source) must not accumulate until the host tmp
+# reaper runs. Recency is tracked by a _SERVED stamp
 # touched on every cache hit — build mtime alone is NOT disuse evidence
 # (a months-old artifact can be served daily) — and dirs unserved for a
 # day are reclaimed. Concurrently-live corpora (other scale factors, other
@@ -237,17 +237,16 @@ def _touch_served(base: pathlib.Path) -> None:
 
 def _gc_stale_salts(tag: str, fp: str) -> None:
     """Best-effort removal of COMPLETED sibling artifacts that differ from
-    ``tag`` only in the trailing builder-salt segment (ADVICE r09: every
-    builder edit mints a new salted tag, and without GC the orphaned
-    exact_spark_<prefix>_<oldsalt>_<fp> dirs accumulate in /tmp across
-    rounds). Runs only on a cache miss for the CURRENT salt, and only
-    touches dirs with the same prefix + same corpus fingerprint + a
-    different 8-hex salt + age beyond _GC_STALE_SALT_MIN_AGE_S — within
-    one code version the old salt is unreachable, and the age gate covers
-    the cross-version window where a long-lived pre-edit process could
-    still be reading its own salt (ADVICE r10). Same-salt concurrent
-    builds are untouched. Incomplete dirs (no _SUCCESS) are left for
-    materialize's own crashed-build handling."""
+    ``tag`` only in the trailing builder-salt segment (every builder edit
+    mints a new salted tag, and without GC the orphaned
+    exact_spark_<prefix>_<oldsalt>_<fp> dirs accumulate in the temp dir).
+    Runs only on a cache miss for the CURRENT salt, and only touches dirs
+    with the same prefix + same corpus fingerprint + a different 8-hex
+    salt + age beyond _GC_STALE_SALT_MIN_AGE_S — within one code version
+    the old salt is unreachable, and the age gate covers the cross-version
+    window where a long-lived pre-edit process could still be reading its
+    own salt. Same-salt concurrent builds are untouched. Incomplete dirs
+    (no _SUCCESS) are left for materialize's own crashed-build handling."""
     import re
     import time
 
@@ -278,7 +277,7 @@ def _gc_stale_salts(tag: str, fp: str) -> None:
 def _gc_expired_fingerprints(current_dir_name: str) -> None:
     """Best-effort sweep of COMPLETED artifacts that have not been SERVED
     within _GC_EXPIRED_FP_MAX_IDLE_S — the retired-corpus-snapshot class
-    the stale-salt GC (same fp only) could not reach (VERDICT r10 item 7).
+    the stale-salt GC (same fp only) cannot reach.
     Runs only on a cache miss (rare), never touches the artifact being
     built, and uses the last-served stamp (falling back to _SUCCESS mtime
     for pre-stamp dirs) so actively-served corpora of ANY fingerprint are

@@ -142,6 +142,8 @@ class EngineAPI:
 
     def run_batch(self, job: BatchJob) -> dict:
         self._job_dir(job.job_name, stream=False)  # checks the name run_batch writes under
+        if self.catalog.table_exists(self.catalog.table_name(job.job_name)):
+            raise ValueError(f"job {job.job_name!r} already has a table")  # before any Spark work
         return run_batch(self.spark, self.catalog, job, str(self.output_dir))
 
     def run_stream(self, job: BatchJob, speedup: float = 1000.0, chunks: int = 20) -> dict:

@@ -2,13 +2,15 @@
 
 Mirrors Backend/execute_calls.py:384-907 stage-for-stage, Spark-first:
 
-1. ingest + canonicalize + inject (S1-S6, P1-P5, A1-A10) -> job table
-2. read back from epoch 0 (S7)
-3. prepare: P9 split, P6 feature selection, P7 train-fitted imputation
-4. train (M* via factory; unsupervised get features only,
+1. ingest + canonicalize + inject (S1-S6, P1-P5, A1-A10), cached
+2. prepare: P9 split, P6 feature selection, P7 train-fitted imputation
+3. train (M* via factory; unsupervised get features only,
    execute_calls.py:36-40,594-631)
-5. detect on test and all rows; S8 flag writeback as one MERGE-join
-6. evaluate G1/G2 on both frames
+4. detect on all rows
+5. evaluate G1/G2 on all rows and on the test slice
+6. write the job table (S4) once, injected rows with final flags: S7's
+   read-back and S8's flag flip are folded in. A table appears only when
+   complete; a failed or cancelled job leaves none.
 7. run summary JSON (execute_calls.py:45-79,870-903 key set) with
    per-stage execution_time_* keys (execute_calls.py:404-405,891-895)
 """
@@ -57,8 +59,6 @@ def _json_default(o):
         return o.tolist()
     if isinstance(o, (_dt.datetime, _dt.date)):
         return o.isoformat()
-    if isinstance(o, pathlib.Path):
-        return str(o)
     return str(o)
 
 
@@ -134,6 +134,13 @@ def job_input(spark: SparkSession, job: BatchJob, release: ExitStack) -> tuple[D
     return canon, start_epoch
 
 
+def flag_detections(scored: DataFrame) -> DataFrame:
+    """Stored rows with a detector's flags merged in: ``is_anomaly |=
+    predicted == 1``, the detector's ``score`` and ``predicted`` dropped."""
+    is_anomaly = F.col("is_anomaly") | (F.col("predicted") == 1)
+    return scored.withColumn("is_anomaly", is_anomaly).drop("score", "predicted")
+
+
 def run_batch(
     spark: SparkSession,
     catalog: JobCatalog,
@@ -142,54 +149,46 @@ def run_batch(
 ) -> dict:
     t_total = time.perf_counter()
     table = catalog.table_name(job.job_name)
+    # cancel-job deletes this dir: the table is written only while it exists
+    job_dir = pathlib.Path(output_dir) / job.job_name
+    job_dir.mkdir(parents=True, exist_ok=True)
     # every frame the job caches is released on every exit path, a failed
     # job included: an engine process outlives its jobs
     with ExitStack() as release:
         # 1. simulate/ingest --------------------------------------------------
-        # the canonical frame's consumers here: the start-epoch agg,
-        # inject's selection pass and its join, inject's step/lowered stats
-        # aggregates, the create_table write. Released once the table is
-        # written.
+        # canon feeds the start-epoch agg and inject's selection pass, join
+        # and stats aggregates; released once the injected frame is cached
         t0 = time.perf_counter()
         canon, start_epoch = job_input(spark, job, release)
-        injected = inject_anomalies(canon, job.anomaly_settings, start_epoch, seed=job.seed)
-        catalog.create_table(table, injected)
-        canon.unpersist()
-        t_sim = time.perf_counter() - t0
-
-        # 2. read back (S7 from epoch 0) -------------------------------------
-        df = catalog.read_data(table).cache()
+        df = inject_anomalies(canon, job.anomaly_settings, start_epoch, seed=job.seed).cache()
         release.callback(df.unpersist)
         n_rows = df.count()
+        canon.unpersist()
         assert "id" in df.columns  # PK presence (execute_calls.py:509-510)
+        t_sim = time.perf_counter() - t0
 
-        # 3. prepare ----------------------------------------------------------
+        # 2. prepare ----------------------------------------------------------
         feats = feature_columns(df)
         cut = int(0.85 * n_rows)  # P9 (execute_calls.py:333-346)
         train = df.filter(F.col("id") <= cut)
-        test = df.filter(F.col("id") > cut)
         # P7: train-fitted mean imputation (fixing the reference's per-slice leakage)
         means = train.agg(*[F.avg(c).alias(c) for c in feats]).collect()[0].asDict()
         fill = {c: (means[c] if means[c] is not None else 0.0) for c in feats}
-        train, test, df_all = train.fillna(fill), test.fillna(fill), df.fillna(fill)
+        train, df_all = train.fillna(fill), df.fillna(fill)
         df_all = df_all.withColumn("label", F.col("label").cast("int"))
 
-        # 4. train ------------------------------------------------------------
+        # 3. train ------------------------------------------------------------
         t0 = time.perf_counter()
         model = get_model(job.model, **job.model_params)
         model.run(train, feats)  # unsupervised models read features only
         t_train = time.perf_counter() - t0
 
-        # 5. detect -----------------------------------------------------------
+        # 4. detect -----------------------------------------------------------
         t0 = time.perf_counter()
         det_all = model.detect(df_all, feats).cache()
         release.callback(det_all.unpersist)
-        pred_ids = det_all.filter(F.col("predicted") == 1).select("id")
 
-        # 6. evaluate BEFORE the writeback: update_anomalies swaps the table
-        # directory the cached frames' lineage points at, so any lost cache
-        # block would recompute from a deleted path. Forcing the aggregate
-        # here fully materializes everything we still need.
+        # 5. evaluate ---------------------------------------------------------
         joined = det_all.join(df_all.select("id", "label"), "id")
         t_eval0 = time.perf_counter()
         metrics_all, metrics_test = evaluate_classification_split(joined, F.col("id") > cut)
@@ -198,11 +197,16 @@ def run_batch(
         # which also includes injected ground-truth rows
         n_flagged = metrics_all["tp"] + metrics_all["fp"]
 
-        # 7. S8 flag writeback (MERGE-style partition-scoped rewrite) ---------
-        catalog.update_anomalies(table, pred_ids)
-        # t_detect keeps its documented detect+writeback meaning: the
-        # evaluation interval (which must run pre-swap, see above) is carved
-        # out and reported under its own key
+        # 6. the table's one write: the un-imputed rows, final flags ---------
+        if not job_dir.exists():
+            raise RuntimeError(f"job {job.job_name!r} was cancelled")
+        if catalog.create_table(table, flag_detections(df.join(det_all, "id"))) is None:
+            raise ValueError(f"table {table} already exists")
+        if not job_dir.exists():  # the cancel landed during the write
+            catalog.drop_table(table)
+            raise RuntimeError(f"job {job.job_name!r} was cancelled")
+        # t_detect keeps its documented detect+writeback meaning, the table
+        # write included; the evaluation interval has its own key
         t_detect = time.perf_counter() - t0 - t_eval
 
         summary = {
@@ -224,7 +228,7 @@ def run_batch(
             "execution_time_total_seconds": round(time.perf_counter() - t_total, 3),
             "timestamp": _dt.datetime.now(_dt.timezone.utc),
         }
-        # 8. X7 visual artifact: the job page's detection timeline as native
+        # 7. X7 visual artifact: the job page's detection timeline as native
         # SVG (job_page_callbacks.py:1000's plot; matplotlib/plotly absent —
         # XML is not). The polyline goes through the M4 visual envelope so
         # the driver collects <= 4 points per screen bucket at ANY table

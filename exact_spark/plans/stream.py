@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from exact_spark.ml.models import get_model
 from exact_spark.operators.inject import streaming_injection
-from exact_spark.plans.batch import BatchJob, evaluate_classification, job_input
+from exact_spark.plans.batch import BatchJob, evaluate_classification, flag_detections, job_input
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import feature_columns
 from exact_spark.streaming.replay import (
@@ -62,9 +62,7 @@ def run_stream(
     injected = streaming_injection(stream, job.anomaly_settings, start_epoch, seed=job.seed)
 
     def sink(scored, batch_id: int) -> None:
-        out = scored.withColumn(
-            "is_anomaly", F.col("is_anomaly") | (F.col("predicted") == 1)
-        ).drop("score", "predicted")
+        out = flag_detections(scored)
         if catalog.table_exists(table):
             catalog.insert_data(table, out)
         else:

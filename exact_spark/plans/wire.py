@@ -43,9 +43,10 @@ Concurrency contract:
   module-level lock. The override is session-wide while it is held, so a
   request planned meanwhile runs its shuffles at that partition count.
 - Tables are plain parquet with no snapshot isolation: a ``get-data`` that
-  races a ``cancel-job`` or a writeback's partition swap may answer with a
-  JSON error instead of rows (the caveat on ``JobCatalog.compact_table``);
-  the client retries.
+  races a ``cancel-job`` or a stream table's compaction may answer with a
+  JSON error instead of rows (``JobCatalog.compact_table``'s caveat); the
+  client retries. A batch table is written once, with its final flags;
+  until then ``get-all-jobs`` omits it and ``get-data`` errors.
 """
 
 from __future__ import annotations
@@ -81,21 +82,19 @@ def _job_ref(name: str) -> tuple[str, bool]:
 def _parse_settings(inj_params) -> list:
     from exact_spark.operators.inject import AnomalySetting
 
-    out = []
-    for p in inj_params or []:
-        out.append(
-            AnomalySetting(
-                anomaly_type=p["anomaly_type"],
-                timestamp=float(p.get("timestamp", 0.0)),
-                duration=float(p.get("duration", 0.0)),
-                magnitude=float(p.get("magnitude", 1.0)),
-                percentage=float(p.get("percentage", 100.0)),
-                columns=p.get("columns"),
-                mean=p.get("mean"),
-                data_range=p.get("data_range"),
-            )
+    return [
+        AnomalySetting(
+            anomaly_type=p["anomaly_type"],
+            timestamp=float(p.get("timestamp", 0.0)),
+            duration=float(p.get("duration", 0.0)),
+            magnitude=float(p.get("magnitude", 1.0)),
+            percentage=float(p.get("percentage", 100.0)),
+            columns=p.get("columns"),
+            mean=p.get("mean"),
+            data_range=p.get("data_range"),
         )
-    return out
+        for p in inj_params or []
+    ]
 
 
 class _Connection(socketserver.BaseRequestHandler):
@@ -166,12 +165,9 @@ class EngineServer:
             self._server.server_close()
 
     def _run_job(self, name: str, fn, *args, **kwargs) -> None:
-        """Worker-thread entry: record failures on the server instead of
-        letting the thread die unhandled. A CANCELLED job fails by design
-        (cancel-job drops its table while the job flow still runs — the
-        reference's engine likewise lets the worker error out and logs it,
-        engine.py:250-255); the error lands in ``job_errors`` where
-        get-running/tests can see it."""
+        """Worker-thread entry: a failure lands in ``job_errors`` instead of
+        killing the thread unhandled. A cancelled batch job fails by design
+        (engine.py:250-255): it raises and publishes no table."""
         try:
             fn(*args, **kwargs)
         except Exception as exc:  # noqa: BLE001 — boundary: worker thread top
@@ -182,8 +178,8 @@ class EngineServer:
         t = threading.Thread(target=self._run_job, args=(job.job_name, fn, job),
                              kwargs=kwargs, daemon=True)
         self.job_kinds[job.job_name] = kind
+        t.start()  # before publishing: a caller may join any listed thread
         self.job_threads[job.job_name] = t
-        t.start()
 
     # -- dispatch (engine.py:158-404) ----------------------------------------
     def _job_from_request(self, data: dict) -> BatchJob:

@@ -9,7 +9,10 @@ time-range reads).
 
 Flag writeback (S8) replaces the reference's one-row-at-a-time UPDATE loop
 (timescaledb_api.py:238-274) with a set-oriented join + atomic directory
-swap — the plain-parquet equivalent of a Delta MERGE.
+swap — the plain-parquet equivalent of a Delta MERGE. Jobs do not use it:
+they write final flags at create (a batch job writes its table once, after
+detection; the stream sink appends scored rows). S8 is the operator the
+``catalog_lifecycle`` query shows.
 """
 
 from __future__ import annotations
@@ -101,6 +104,9 @@ class JobCatalog:
         no matching id are never read in full and never rewritten — at scale
         a 0.1% flag update touches ~0.1% of the table, not 100% (the Delta/
         Iceberg MERGE equivalent on plain parquet).
+
+        No job calls it: jobs write their final flags at create. It is the
+        S8 operator ``catalog_lifecycle`` shows.
         """
         path = self._path(table_name)
         # recover from a previous crashed run before Spark lists the table:

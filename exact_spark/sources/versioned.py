@@ -16,8 +16,8 @@ commit — the Delta/Iceberg discipline, re-expressed minimally:
   commits a manifest pointing at the new set. Version N stays byte-stable
   and readable until retention vacuums it — ``read(version=N)`` is time
   travel, and a long-running reader pinned to N is unaffected by
-  concurrent commits (the race ADVICE r03 flagged for the glob-based
-  ``table_exists`` cannot exist here).
+  concurrent commits (a glob-based ``table_exists`` can see a table whose
+  first write has not committed; that race cannot exist here).
 - **Optimistic concurrency.** A commit writes ``_v/v{N}.json.tmp`` and
   atomically renames to ``v{N}.json``; two racing writers both targeting N
   resolve by the rename failing for one (os.rename to an existing name is

@@ -49,9 +49,9 @@ _DEMO_STATE_PARTITIONS = 4
 
 
 def _work_dir(prefix: str) -> pathlib.Path:
-    """Per-run scratch dir for a bounded demo's checkpoint (VERDICT r11
-    item 5). Checkpoints here are EPHEMERAL by construction — each run
-    makes a fresh dir and removes it in its ``finally`` (a reused
+    """Per-run scratch dir for a bounded demo's checkpoint. Checkpoints
+    here are EPHEMERAL by construction — each run makes a fresh dir and
+    removes it in its ``finally`` (a reused
     checkpoint would mark the offsets committed and the replay would be a
     silent no-op) — so fsyncing the offset/commit/state files to disk buys
     zero durability while costing ~1-3 s of commit latency per demo

@@ -1,5 +1,7 @@
 """End-to-end §7.2 slice: ingest CSV -> inject spike -> train -> detect ->
-flag MERGE -> metrics -> logfile JSON -> get-data read."""
+metrics -> one table write with the final flags -> logfile JSON -> get-data
+read; and the decisions that one write states: a batch table appears only
+when complete, and a failed, cancelled or duplicate job publishes none."""
 
 from __future__ import annotations
 
@@ -7,22 +9,30 @@ import json
 import math
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from exact_spark.operators.inject import AnomalySetting
+from exact_spark.plans import batch as batch_mod
 from exact_spark.plans.api import EngineAPI
-from exact_spark.plans.batch import BatchJob
+from exact_spark.plans.batch import BatchJob, run_batch
+from exact_spark.sources.catalog import JobCatalog
+
+
+def _write_series(path, n: int, missing: int | None = None) -> str:
+    """A one-feature sine series, one row a minute; row ``missing`` has no
+    ``v`` value."""
+    lines = ["t,v,lab"]
+    for i in range(n):
+        v = "" if i == missing else 10.0 + math.sin(i / 20.0)
+        lines.append(f"{1700000000 + i * 60},{v},0")
+    path.write_text("\n".join(lines) + "\n")
+    return str(path)
 
 
 @pytest.fixture(scope="module")
 def csv_path(tmp_path_factory):
-    p = tmp_path_factory.mktemp("e2e") / "series.csv"
-    lines = ["t,v,lab"]
-    for i in range(1000):
-        v = 10.0 + math.sin(i / 20.0)
-        lines.append(f"{1700000000 + i * 60},{v},0")
-    p.write_text("\n".join(lines) + "\n")
-    return str(p)
+    return _write_series(tmp_path_factory.mktemp("e2e") / "series.csv", 1000)
 
 
 @pytest.fixture(scope="module")
@@ -102,3 +112,121 @@ def test_failed_job_releases_cached_frames(spark, api, csv_path):
                                label_col="lab", model="no_such_model"))
     assert persistent().size() == before
     api.cancel_job("leak")
+
+
+def _job(name: str, path: str, **kw) -> BatchJob:
+    return BatchJob(job_name=name, filepath=path, time_col="t", label_col="lab", **kw)
+
+
+def _wrap_model(monkeypatch, run=None, detect=None):
+    """Route ``run_batch``'s models through hooks: ``run(train, feats)``
+    before training, ``detect(det)`` on the detector's output."""
+    raw_get_model = batch_mod.get_model
+
+    def get_model(name, **params):
+        model = raw_get_model(name, **params)
+        raw_run, raw_detect = model.run, model.detect
+
+        def hooked_run(train, feats):
+            if run:
+                run(train, feats)
+            return raw_run(train, feats)
+
+        def hooked_detect(df, feats):
+            det = raw_detect(df, feats)
+            if detect:
+                detect(det)
+            return det
+
+        model.run, model.detect = hooked_run, hooked_detect
+        return model
+
+    monkeypatch.setattr(batch_mod, "get_model", get_model)
+
+
+def test_table_appears_only_when_complete(api, csv_path, monkeypatch):
+    def mid_job(train, feats):
+        assert "job_batch_midjob" not in api.get_all_jobs()
+        with pytest.raises(AnalysisException):
+            api.get_data("midjob")
+
+    _wrap_model(monkeypatch, run=mid_job)
+    summary = api.run_batch(_job("midjob", csv_path))
+    assert "job_batch_midjob" in api.get_all_jobs()
+    assert len(api.get_data("midjob")["data"]) == summary["rows"]
+    api.cancel_job("midjob")
+
+
+def test_failed_job_leaves_no_table(api, csv_path):
+    with pytest.raises(KeyError):
+        api.run_batch(_job("broken", csv_path, model="no_such_model"))
+    assert "job_batch_broken" not in api.get_all_jobs()
+    assert not (api.catalog.warehouse / "job_batch_broken").exists()
+    api.cancel_job("broken")
+
+
+@pytest.mark.parametrize("stage", ["inject", "train"])
+def test_cancelled_job_raises_and_leaves_no_table(api, csv_path, monkeypatch, stage):
+    name = f"cancel_{stage}"
+    if stage == "inject":
+        raw_inject = batch_mod.inject_anomalies
+
+        def inject(*args, **kwargs):
+            api.cancel_job(name)
+            return raw_inject(*args, **kwargs)
+
+        monkeypatch.setattr(batch_mod, "inject_anomalies", inject)
+    else:
+        _wrap_model(monkeypatch, run=lambda train, feats: api.cancel_job(name))
+    with pytest.raises(Exception):
+        api.run_batch(_job(name, csv_path))
+    assert f"job_batch_{name}" not in api.get_all_jobs()
+    assert not (api.catalog.warehouse / f"job_batch_{name}").exists()
+
+
+def test_stored_rows_are_injected_rows_with_final_flags(api, tmp_path, monkeypatch):
+    path = _write_series(tmp_path / "gappy.csv", 400, missing=37)
+    # lowered values stay under the detector's P95 threshold: the injected
+    # and the predicted rows differ, so both sides of the OR show
+    lowered = AnomalySetting(anomaly_type="lowered", timestamp=200 * 60, duration=40 * 60,
+                             percentage=100.0, columns=["v"])
+    predicted = {}
+    with monkeypatch.context() as m:
+        def forbidden(*args, **kwargs):
+            raise AssertionError("run_batch reads back or rewrites its table")
+
+        m.setattr(JobCatalog, "read_data", forbidden)
+        m.setattr(JobCatalog, "update_anomalies", forbidden)
+        _wrap_model(m, detect=lambda det: predicted.update(
+            (r["id"], r["predicted"]) for r in det.collect()))
+        summary = api.run_batch(_job("stored", path, anomaly_settings=[lowered]))
+
+    stored = api.catalog.read_data(api.catalog.table_name("stored")).collect()
+    assert len(stored) == summary["rows"] == 400
+    assert [r["id"] for r in stored if r["v"] is None] == [38]
+    for r in stored:
+        assert r["is_anomaly"] == (r["injected_anomaly"] or predicted[r["id"]] == 1), r
+    assert any(r["injected_anomaly"] and not predicted[r["id"]] for r in stored)
+    assert any(predicted[r["id"]] and not r["injected_anomaly"] for r in stored)
+    api.cancel_job("stored")
+
+
+def test_duplicate_job_name_fails_fast(spark, api, tmp_path, monkeypatch):
+    first = _write_series(tmp_path / "first.csv", 200)
+    second = _write_series(tmp_path / "second.csv", 300)
+    assert api.run_batch(_job("dup", first))["rows"] == 200
+    table = api.catalog.table_name("dup")
+    before = sorted(api.catalog.read_data(table).collect())
+
+    def never(*args, **kwargs):
+        raise AssertionError("a duplicate job reached ingest")
+
+    with monkeypatch.context() as m:
+        m.setattr(batch_mod, "read_file", never)
+        with pytest.raises(ValueError):
+            api.run_batch(_job("dup", second))
+    # a same-name job that passed that check loses at its table write
+    with pytest.raises(ValueError):
+        run_batch(spark, api.catalog, _job("dup", second), str(api.output_dir))
+    assert sorted(api.catalog.read_data(table).collect()) == before
+    api.cancel_job("dup")

@@ -471,3 +471,18 @@ def test_get_running_reports_each_jobs_kind(server, monkeypatch):
         {"name": "kbatch", "type": "batch"},
         {"name": "kstream", "type": "stream"},
     ]
+
+
+def test_duplicate_run_batch_lands_in_job_errors(server, tmp_path):
+    """A run-batch under a name whose table exists fails before any Spark
+    work: the error reaches job_errors and the table is unchanged."""
+    csv = "ts,v\n" + "\n".join(f"{1700000000 + i * 60},{10.0 + i % 9}" for i in range(40))
+    (tmp_path / "datasets" / "dup.csv").write_text(csv)
+    before = server.api.get_data("wiredemo")
+    _request(server, {
+        "METHOD": "run-batch", "model": "threshold", "dataset": "dup.csv",
+        "name": "job_batch_wiredemo", "time_column": "ts", "label_column": None,
+    }, response=False)
+    assert _wait_until(lambda: "wiredemo" in server.job_errors, timeout=60), server.job_errors
+    assert server.job_errors["wiredemo"].startswith("ValueError"), server.job_errors
+    assert server.api.get_data("wiredemo") == before
