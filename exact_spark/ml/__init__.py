@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from exact_spark.ml.models import align_predictions, get_model
+from exact_spark.operators.metrics import confusion_sums
 from exact_spark.operators.timeseries import canonical_events
 from exact_spark.registry import register
 
@@ -27,15 +29,8 @@ def _event_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _confusion(scored: DataFrame) -> DataFrame:
     """G1 counts over (label, predicted) — the e2e result shape."""
-    tp = F.sum(F.when((F.col("predicted") == 1) & (F.col("label") == 1), 1).otherwise(0))
-    tn = F.sum(F.when((F.col("predicted") == 0) & (F.col("label") == 0), 1).otherwise(0))
-    fp = F.sum(F.when((F.col("predicted") == 1) & (F.col("label") == 0), 1).otherwise(0))
-    fn = F.sum(F.when((F.col("predicted") == 0) & (F.col("label") == 1), 1).otherwise(0))
     return scored.agg(
-        tp.cast("long").alias("tp"),
-        tn.cast("long").alias("tn"),
-        fp.cast("long").alias("fp"),
-        fn.cast("long").alias("fn"),
+        *(c.alias(k) for k, c in confusion_sums("predicted", "label").items()),
         F.count(F.lit(1)).cast("long").alias("n_rows"),
     )
 
@@ -44,16 +39,10 @@ def _detector_e2e_on(df: DataFrame, cut: int, model_name: str) -> DataFrame:
     """§7.2 slice with a DetectorModel over a pre-cached feature frame:
     85% positional train split (P9), train, distributed detect on all
     rows, P13-align by id join, G1."""
-    from exact_spark.ml.models import get_model
-
     feats = ["value", "hour"]
     model = get_model(model_name)
     model.run(df.filter(F.col("id") <= cut), feats)
-    det = model.detect(df, feats).select("id", "predicted")
-    scored = df.select("id", "label").join(det, "id", "left").select(
-        "label", F.coalesce(F.col("predicted"), F.lit(0)).alias("predicted")
-    )
-    return _confusion(scored)
+    return _confusion(align_predictions(df, model.detect(df, feats)))
 
 
 def _cached_features(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
@@ -135,8 +124,6 @@ def ml_supervised_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             # class counts into XGBoost (XGBoost.py:83-92) — a calibrated
             # logloss model on a weak 20%-positive signal otherwise
             # (correctly) never crosses P=0.5
-            from exact_spark.ml.models import get_model
-
             counts = (
                 df.filter(F.col("id") <= cut)
                 .groupBy("label").count().collect()
@@ -145,11 +132,8 @@ def ml_supervised_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             spw = by.get(0, 1) / max(by.get(1, 1), 1)
             model = get_model(name, scale_pos_weight=spw)
             model.run(df.filter(F.col("id") <= cut), ["value", "hour"])
-            det = model.detect(df, ["value", "hour"]).select("id", "predicted")
-            scored = df.select("id", "label").join(det, "id", "left").select(
-                "label", F.coalesce(F.col("predicted"), F.lit(0)).alias("predicted")
-            )
-            row = _confusion(scored).collect()[0]
+            det = model.detect(df, ["value", "hour"])
+            row = _confusion(align_predictions(df, det)).collect()[0]
         else:
             row = _detector_e2e_on(df, cut, name).collect()[0]
         return {"model": name, **row.asDict()}
@@ -208,7 +192,6 @@ def ml_unsupervised_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_cv_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.ml.cv import cross_validate
-    from exact_spark.ml.models import get_model
 
     # bound the splitter DEMO: the contract under test is the stratified
     # deal + per-fold train/eval loop, not fit volume — 8k rows exercise it
@@ -329,8 +312,6 @@ _SEQ_L = 5  # sequence length (reference default time_steps=10, lstm.py:101)
 def ml_sequence_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from exact_spark.ml.models import get_model
-
     df = _event_features(spark, sf_dir).cache()
     n = df.count()
     cut = int(0.85 * n)
@@ -355,13 +336,10 @@ def ml_sequence_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     model = get_model("rnn_autoencoder", epochs=10)
     model.run(flat.filter(F.col("id") <= cut).repartition(min(par, 8)), cols)
-    det = model.detect(flat.repartition(par), cols).select("id", "predicted")
+    det = model.detect(flat.repartition(par), cols)
 
     # P13: one result per window END id; align back to every row
-    scored = df.select("id", "label").join(det, "id", "left").select(
-        "label", F.coalesce(F.col("predicted"), F.lit(0)).alias("predicted")
-    )
-    return _confusion(scored)
+    return _confusion(align_predictions(df, det))
 
 
 @register(
@@ -378,7 +356,6 @@ def ml_sequence_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def xai_methods_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.ml.explain import METHODS, run_explanations
-    from exact_spark.ml.models import get_model
     from exact_spark.operators.inject import AnomalySetting, inject_anomalies
 
     df = _event_features(spark, sf_dir).select(
@@ -495,8 +472,6 @@ _ENSEMBLE = ("threshold", "isolation_forest", "pca_autoencoder")
 def ml_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
-    from exact_spark.ml.models import get_model
-
     df, cut = _cached_features(spark, sf_dir)
     feats = ["value", "hour"]
     train = df.filter(F.col("id") <= cut)
@@ -522,16 +497,11 @@ def ml_ensemble_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all four confusion matrices in ONE aggregate pass (a per-model
     # _confusion loop would run four actions over the same frame)
     members = list(_ENSEMBLE) + ["ensemble"]
-    aggs = []
-    for name in members:
-        p = F.col(f"p_{name}")
-        lbl = F.col("label")
-        aggs += [
-            F.sum(F.when((p == 1) & (lbl == 1), 1).otherwise(0)).cast("long").alias(f"tp_{name}"),
-            F.sum(F.when((p == 0) & (lbl == 0), 1).otherwise(0)).cast("long").alias(f"tn_{name}"),
-            F.sum(F.when((p == 1) & (lbl == 0), 1).otherwise(0)).cast("long").alias(f"fp_{name}"),
-            F.sum(F.when((p == 0) & (lbl == 1), 1).otherwise(0)).cast("long").alias(f"fn_{name}"),
-        ]
+    aggs = [
+        c.alias(f"{k}_{name}")
+        for name in members
+        for k, c in confusion_sums(f"p_{name}", "label").items()
+    ]
     aggs.append(F.count(F.lit(1)).cast("long").alias("n_rows"))
     try:
         r = scored.agg(*aggs).collect()[0]

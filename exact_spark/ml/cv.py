@@ -14,6 +14,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from exact_spark.ml.models import align_predictions
+from exact_spark.operators.metrics import evaluate_classification
+
 FOLD_COL = "__fold"
 
 
@@ -63,29 +66,10 @@ def cross_validate(
         test = folded.filter(F.col(FOLD_COL) == fold)
         model = model_factory()
         model.run(train, feature_cols, label_col)
-        det = model.detect(test, feature_cols).select("id", "predicted")
-        scored = test.select("id", label_col).join(det, "id", "left").select(
-            F.col(label_col).alias("label"),
-            F.coalesce(F.col("predicted"), F.lit(0)).alias("predicted"),
-        )
-        agg = scored.agg(
-            F.sum(F.when((F.col("predicted") == 1) & (F.col("label") == 1), 1).otherwise(0)).alias("tp"),
-            F.sum(F.when((F.col("predicted") == 0) & (F.col("label") == 0), 1).otherwise(0)).alias("tn"),
-            F.sum(F.when((F.col("predicted") == 1) & (F.col("label") == 0), 1).otherwise(0)).alias("fp"),
-            F.sum(F.when((F.col("predicted") == 0) & (F.col("label") == 1), 1).otherwise(0)).alias("fn"),
-        ).collect()[0]
-        tp, tn, fp, fn = agg["tp"], agg["tn"], agg["fp"], agg["fn"]
-        n = tp + tn + fp + fn
-        prec = tp / (tp + fp) if tp + fp else 0.0
-        rec = tp / (tp + fn) if tp + fn else 0.0
-        return {
-            "fold": fold,
-            "tp": tp, "tn": tn, "fp": fp, "fn": fn,
-            "accuracy": round((tp + tn) / n, 4) if n else 0.0,
-            "precision": round(prec, 4),
-            "recall": round(rec, 4),
-            "f1": round(2 * prec * rec / (prec + rec), 4) if prec + rec else 0.0,
-        }
+        scored = align_predictions(test, model.detect(test, feature_cols), label_col)
+        [m] = evaluate_classification(scored)
+        keep = ("tp", "tn", "fp", "fn", "accuracy", "precision", "recall")
+        return {"fold": fold, **{k: m[k] for k in keep}, "f1": m["f1_score"]}
 
     with ThreadPoolExecutor(k) as ex:
         out = list(ex.map(one_fold, range(k)))

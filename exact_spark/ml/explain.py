@@ -465,7 +465,7 @@ def render_force_plots(
     bounded to the first ``max_instance_pages`` instances (in id order —
     the reference emits only instance 1 plus the all-instances page, so
     emitting one file per instance of a large explain batch would be a
-    superset that multiplies small artifacts; ADVICE r07); EVERY instance
+    superset that multiplies small artifacts); EVERY instance
     still gets its strip on the all-instances page. Returns the written
     paths, all-instances page last."""
     from exact_spark.ml.visualize import html_force_page, svg_force_strip

@@ -74,10 +74,19 @@ def _score_map_in_pandas(df: DataFrame, feature_cols: list[str], score_fn, thr: 
     return df.select("id", *feature_cols).mapInPandas(batches, schema=schema)
 
 
+def align_predictions(df: DataFrame, det: DataFrame, label_col: str = "label") -> DataFrame:
+    """P13 (execute_calls.py:653-690): ``(label, predicted)`` for every row
+    of ``df``. ``det`` is a detector's ``(id, ..., predicted)`` output; a row
+    it did not score, such as a sequence model's warm-up rows, counts as
+    predicted 0."""
+    return df.select("id", label_col).join(det.select("id", "predicted"), "id", "left").select(
+        F.col(label_col).alias("label"),
+        F.coalesce(F.col("predicted"), F.lit(0)).alias("predicted"),
+    )
+
+
 class DetectorModel:
     """ModelInterface (model_interface.py:3-13)."""
-
-    sequence_length: int = 1  # drives P13 alignment for sequence models
 
     def run(self, train: DataFrame, feature_cols: list[str], label_col: str = "label") -> None:
         raise NotImplementedError

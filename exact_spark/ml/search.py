@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from exact_spark.ml.cv import FOLD_COL, stratified_kfold
-from exact_spark.ml.models import get_model
+from exact_spark.ml.models import align_predictions, get_model
+from exact_spark.operators.metrics import evaluate_classification
 
 #: Default grids over the reference's param dimensions, translated to the
 #: MLlib names (XGBoost.py:83-92; decision_tree.py search dims).
@@ -114,30 +115,13 @@ def param_search(
         # deterministic, so the rows are byte-identical to the serial loop
         model = get_model(algo, seed=seed, params=combo)
         model.run(train, feature_cols, label_col)
-        det = model.detect(heldout, feature_cols).select("id", "predicted")
-        agg = (
-            heldout.select("id", label_col)
-            .join(det, "id", "left")
-            .select(
-                F.col(label_col).alias("label"),
-                F.coalesce(F.col("predicted"), F.lit(0)).alias("predicted"),
-            )
-            .agg(
-                F.sum(F.when((F.col("predicted") == 1) & (F.col("label") == 1), 1).otherwise(0)).alias("tp"),
-                F.sum(F.when((F.col("predicted") == 1) & (F.col("label") == 0), 1).otherwise(0)).alias("fp"),
-                F.sum(F.when((F.col("predicted") == 0) & (F.col("label") == 1), 1).otherwise(0)).alias("fn"),
-            )
-            .collect()[0]
-        )
-        tp, fp, fn = agg["tp"], agg["fp"], agg["fn"]
-        prec = tp / (tp + fp) if tp + fp else 0.0
-        rec = tp / (tp + fn) if tp + fn else 0.0
-        f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
+        scored = align_predictions(heldout, model.detect(heldout, feature_cols), label_col)
+        [m] = evaluate_classification(scored)
         return {
             "params": json.dumps(combo, sort_keys=True),
-            "f1": round(f1, 4),
-            "precision": round(prec, 4),
-            "recall": round(rec, 4),
+            "f1": m["f1_score"],
+            "precision": m["precision"],
+            "recall": m["recall"],
             "selected": False,
         }
 

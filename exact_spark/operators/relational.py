@@ -1505,8 +1505,8 @@ def rel_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = li.groupBy("l_partkey").agg(F.sum(val_fx).alias("val_fx"))
     # total revenue and part count as windows over the per-part aggregate
     # (one row per distinct part — orders of magnitude smaller than the
-    # lineitem the broadcast-rejoin total branch re-scanned; VERDICT r10
-    # sweep). At extreme part cardinality the single-partition window
+    # lineitem a broadcast re-joined total branch would rescan). At
+    # extreme part cardinality the single-partition window
     # would widen to a two-pass tree aggregate, same as text packing's
     # distributed prefix sum.
     from pyspark.sql.window import Window as _W

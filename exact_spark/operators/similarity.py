@@ -3755,9 +3755,10 @@ def sim_diversity_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cap censuses ("no silent caps", VERDICT r06 item 4) — the embedding-side
-# companions of dedup.hot_shingle_census et al.; same _cap_census kernel,
-# same contract (tests/test_cap_diagnostics.py: nonzero when the cap binds).
+# Cap censuses (no cap binds silently: each reports how often it bound) —
+# the embedding-side companions of dedup.hot_shingle_census et al.; same
+# _cap_census kernel, same contract (tests/test_cap_diagnostics.py: nonzero
+# when the cap binds).
 
 
 def emb_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:

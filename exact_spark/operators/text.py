@@ -638,10 +638,10 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = io.load(spark, sf_dir, "documents", spread=True)
     # ADAPTIVE bucket width: the driver holds one partial per bucket, so
     # the width widens with the corpus to keep at most _PACK_MAX_PARTIALS
-    # entries in the offset map. The doc-count probe used to be an EAGER
-    # collect — a whole blocking driver job before pass 1 (VERDICT r11
-    # item 7; the §52 lazy-broadcast pattern) — and now rides pass 1's job
-    # as a broadcast single-row branch: a column-pruned max over the dense
+    # entries in the offset map. The doc-count probe is not an EAGER
+    # collect, which would be a whole blocking driver job before pass 1
+    # (the §52 lazy-broadcast pattern); it rides pass 1's job as a
+    # broadcast single-row branch: a column-pruned max over the dense
     # id, integer-exact ceil ((nd + m - 1) DIV m == -(-nd // m)). Nothing
     # caches it, so the max runs once in EACH job over ``base``: twice per
     # query (pass 1's collect and the returned frame's action), each a

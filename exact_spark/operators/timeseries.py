@@ -1463,8 +1463,8 @@ def ts_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as _W
 
     # support's global total as a window over the census frame — one
-    # lineage (the broadcast-rejoin shape re-scanned the event sequence
-    # for the total branch; VERDICT r10 sweep)
+    # lineage, so the event sequence is scanned once (a broadcast re-join
+    # of a separate total would scan it again)
     return (
         census.withColumn(
             "n_total",

@@ -7,7 +7,8 @@ Mirrors Backend/execute_calls.py:384-907 stage-for-stage, Spark-first:
 3. train (M* via factory; unsupervised get features only,
    execute_calls.py:36-40,594-631)
 4. detect on all rows
-5. evaluate G1/G2 on all rows and on the test slice
+5. evaluate G1/G2 on all rows and on the test slice in one aggregate
+   pass (``operators.metrics.evaluate_classification``, the shared kernel)
 6. write the job table (S4) once, injected rows with final flags: S7's
    read-back and S8's flag flip are folded in. A table appears only when
    complete; a failed or cancelled job leaves none.
@@ -26,11 +27,12 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.ml.models import UNSUPERVISED, get_model
 from exact_spark.operators.inject import AnomalySetting, inject_anomalies
+from exact_spark.operators.metrics import evaluate_classification
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import canonicalize, feature_columns, read_file
 
@@ -69,58 +71,6 @@ def save_run_summary(summary: dict, job_name: str, output_dir: str) -> str:
     path = out / "logfile"
     path.write_text(json.dumps(summary, default=_json_default) + "\n")
     return str(path)
-
-
-_CONFUSION = {"tp": (1, 1), "tn": (0, 0), "fp": (1, 0), "fn": (0, 1)}  # (predicted, actual)
-
-
-def _confusion_sums(
-    actual: str, predicted: str, where: Column | None = None, prefix: str = ""
-) -> list[Column]:
-    """G1 confusion counts as aggregate columns, over the rows ``where`` holds."""
-    sums = []
-    for name, (p, a) in _CONFUSION.items():
-        hit = (F.col(predicted) == p) & (F.col(actual) == a)
-        if where is not None:
-            hit = hit & where
-        sums.append(F.sum(F.when(hit, 1).otherwise(0)).alias(prefix + name))
-    return sums
-
-
-def _classification_metrics(row, prefix: str = "") -> dict:
-    """G2 from the confusion counts ``_confusion_sums`` aggregated."""
-    tp, tn, fp, fn = (row[prefix + k] or 0 for k in _CONFUSION)
-    total = tp + tn + fp + fn
-    prec = tp / (tp + fp) if tp + fp else 0.0
-    rec = tp / (tp + fn) if tp + fn else 0.0
-    return {
-        "tp": tp,
-        "tn": tn,
-        "fp": fp,
-        "fn": fn,
-        "accuracy": round((tp + tn) / total, 4) if total else 0.0,
-        "precision": round(prec, 4),
-        "recall": round(rec, 4),
-        "f1_score": round(2 * prec * rec / (prec + rec), 4) if prec + rec else 0.0,
-        "specificity": round(tn / (tn + fp), 4) if tn + fp else 0.0,
-    }
-
-
-def evaluate_classification(df: DataFrame, actual: str = "label", predicted: str = "predicted") -> dict:
-    """G1+G2 in one aggregate pass (execute_calls.py:354-381,811-839)."""
-    return _classification_metrics(df.agg(*_confusion_sums(actual, predicted)).collect()[0])
-
-
-def evaluate_classification_split(
-    df: DataFrame, test: Column, actual: str = "label", predicted: str = "predicted"
-) -> tuple[dict, dict]:
-    """G1+G2 over all rows and over the rows ``test`` holds, in one
-    aggregate pass."""
-    row = df.agg(
-        *_confusion_sums(actual, predicted),
-        *_confusion_sums(actual, predicted, test, "test_"),
-    ).collect()[0]
-    return _classification_metrics(row), _classification_metrics(row, "test_")
 
 
 def job_input(spark: SparkSession, job: BatchJob, release: ExitStack) -> tuple[DataFrame, float]:
@@ -191,7 +141,7 @@ def run_batch(
         # 5. evaluate ---------------------------------------------------------
         joined = det_all.join(df_all.select("id", "label"), "id")
         t_eval0 = time.perf_counter()
-        metrics_all, metrics_test = evaluate_classification_split(joined, F.col("id") > cut)
+        metrics_all, metrics_test = evaluate_classification(joined, F.col("id") > cut)
         t_eval = time.perf_counter() - t_eval0
         # what the DETECTOR flagged — not the table's total is_anomaly count,
         # which also includes injected ground-truth rows

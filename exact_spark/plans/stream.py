@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from exact_spark.ml.models import get_model
 from exact_spark.operators.inject import streaming_injection
-from exact_spark.plans.batch import BatchJob, evaluate_classification, flag_detections, job_input
+from exact_spark.operators.metrics import evaluate_classification
+from exact_spark.plans.batch import BatchJob, flag_detections, job_input
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import feature_columns
 from exact_spark.streaming.replay import (
@@ -81,7 +82,7 @@ def run_stream(
         "id", F.col("label").cast("int").alias("label"),
         F.col("is_anomaly").cast("int").alias("predicted"),
     )
-    metrics = evaluate_classification(det, actual="label", predicted="predicted")
+    [metrics] = evaluate_classification(det)
     return {
         "job_name": job.job_name,
         "table_name": table,

@@ -16,7 +16,9 @@ Protocol parity, method by method:
   with ``sendall`` — the client's read-until-EOF loop reassembles it.
 - ``run-batch`` / ``run-stream`` -> fire-and-forget: the job runs on a
   daemon thread through ``EngineAPI.run_batch`` / ``run_stream``, no
-  response bytes (engine.py:161-255).
+  response bytes (engine.py:161-255). One live job per name: a request
+  under the name of a running job starts nothing, and its refusal lands
+  in ``job_errors``.
 - ``get-data`` / ``get-columns`` / ``cancel-job``: a ``job_stream_`` name
   means the stream job's table, any other the batch job's.
 - ``get-models`` / ``get-xai-methods`` / ``get-injection-methods`` /
@@ -142,6 +144,9 @@ class EngineServer:
         # job-name -> "ExcType: msg" for fire-and-forget jobs that failed;
         # surfaced instead of letting a worker thread die unhandled
         self.job_errors: dict[str, str] = {}
+        # connections run on their own threads: checking that a name has no
+        # live job and registering its new one happen under this lock
+        self._jobs_lock = threading.Lock()
 
     # -- lifecycle -----------------------------------------------------------
     def start(self) -> tuple[str, int]:
@@ -174,12 +179,22 @@ class EngineServer:
             self.job_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
 
     def _start_job(self, kind: str, job: BatchJob, fn, **kwargs) -> None:
-        """Run ``fn(job, **kwargs)`` on a daemon thread that outlives the connection."""
-        t = threading.Thread(target=self._run_job, args=(job.job_name, fn, job),
-                             kwargs=kwargs, daemon=True)
-        self.job_kinds[job.job_name] = kind
-        t.start()  # before publishing: a caller may join any listed thread
-        self.job_threads[job.job_name] = t
+        """Run ``fn(job, **kwargs)`` on a daemon thread that outlives the
+        connection. One live job per name: while a job runs, another request
+        under its name starts nothing and records the refusal in
+        ``job_errors``; a job that starts clears its name's stale error."""
+        name = job.job_name
+        with self._jobs_lock:
+            running = self.job_threads.get(name)
+            if running is not None and running.is_alive():
+                self.job_errors[name] = f"ValueError: job {name!r} is already running"
+                return
+            self.job_errors.pop(name, None)
+            t = threading.Thread(target=self._run_job, args=(name, fn, job),
+                                 kwargs=kwargs, daemon=True)
+            self.job_kinds[name] = kind
+            t.start()  # before publishing: a caller may join any listed thread
+            self.job_threads[name] = t
 
     # -- dispatch (engine.py:158-404) ----------------------------------------
     def _job_from_request(self, data: dict) -> BatchJob:

@@ -12,10 +12,12 @@ has exactly three call sites, which together cover every way in:
 - ``EngineAPI.__init__`` tunes the session the control plane serves on
   (batch jobs, streams, get-data, run-sql).
 
-The policy: AQE on (runtime coalescing, skew-join splitting, dynamic join
-strategy), Arrow for pandas exchange, a UTC session zone (all EXACT
+The policy: Arrow for pandas exchange, a UTC session zone (all EXACT
 semantics are UTC; SURVEY §1.3), and a raised broadcast threshold, since
 dimension tables and flag-writeback id sides are tiny next to fact tables.
+AQE (runtime coalescing, skew-join splitting, dynamic join strategy) is
+Spark's default and is not set here; ``DEFAULT_CONF`` holds only values
+that differ from Spark's defaults.
 """
 
 from __future__ import annotations
@@ -25,14 +27,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CONF = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    "spark.sql.parquet.filterPushdown": "true",
     # Let the planner pick shuffled-hash over sort-merge when its size
     # conditions hold: it skips both sort passes (results are unaffected;
     # rel_order_priority_smj pins sort-merge with an explicit hint). The
@@ -86,7 +83,7 @@ def get_spark(
     return tune_session(builder.getOrCreate())
 
 
-#: applicationIds already tuned. Each tuning is about a dozen py4j
+#: applicationIds already tuned. Each tuning is a handful of py4j
 #: ``conf.set`` round-trips, and a registered query tunes on every call, so
 #: a repeat call on a tuned session costs one set lookup instead. The key
 #: is the one ``io._SCAN_MEMO`` uses.

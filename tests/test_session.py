@@ -31,3 +31,25 @@ def test_registered_query_tunes_any_session(spark, monkeypatch):
     finally:
         REGISTRY.pop(name, None)
         spark.conf.set(_ZONE, "UTC")
+
+
+def test_default_conf_overrides_only_non_defaults(spark):
+    """Every DEFAULT_CONF entry changes what a fresh session reads: an
+    entry equal to Spark's default sets nothing. The session zone is
+    exempt, as its default is the host's zone."""
+    fresh = spark.newSession()
+
+    def read(k: str) -> str:
+        v = fresh.conf.get(k)
+        # byte-size confs read back with a "b" suffix when left at default
+        return v[:-1] if v.endswith("b") and v[:-1].isdigit() else v
+
+    no_ops = []
+    for k, v in session.DEFAULT_CONF.items():
+        if k == _ZONE:
+            continue
+        default = read(k)
+        fresh.conf.set(k, v)
+        if read(k) == default:
+            no_ops.append(k)
+    assert no_ops == []

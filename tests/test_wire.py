@@ -486,3 +486,96 @@ def test_duplicate_run_batch_lands_in_job_errors(server, tmp_path):
     assert _wait_until(lambda: "wiredemo" in server.job_errors, timeout=60), server.job_errors
     assert server.job_errors["wiredemo"].startswith("ValueError"), server.job_errors
     assert server.api.get_data("wiredemo") == before
+
+
+def test_second_run_batch_while_running_starts_nothing(server, tmp_path, monkeypatch):
+    """A run-batch under the name of a job still running is refused: the
+    first job keeps its job_threads entry and completes with its table."""
+    from exact_spark.plans import batch
+
+    entered, release = threading.Event(), threading.Event()
+    raw_get_model = batch.get_model
+
+    def slow_get_model(name, **params):
+        entered.set()
+        release.wait(60)
+        return raw_get_model(name, **params)
+
+    monkeypatch.setattr(batch, "get_model", slow_get_model)
+    csv = "ts,v\n" + "\n".join(f"{1700000000 + i * 60},{10.0 + i % 9}" for i in range(40))
+    (tmp_path / "datasets" / "twice.csv").write_text(csv)
+    req = {
+        "METHOD": "run-batch", "model": "threshold", "dataset": "twice.csv",
+        "name": "job_batch_twice", "time_column": "ts", "label_column": None,
+    }
+    try:
+        _request(server, req, response=False)
+        assert entered.wait(60) and _wait_until(lambda: "twice" in server.job_threads)
+        first = server.job_threads["twice"]
+        _request(server, req, response=False)
+        assert _wait_until(lambda: "twice" in server.job_errors), server.job_errors
+        assert server.job_errors["twice"] == "ValueError: job 'twice' is already running"
+        assert server.job_threads["twice"] is first
+    finally:
+        release.set()
+    first.join(120)
+    assert not first.is_alive()
+    assert server.api.catalog.table_exists(server.api.catalog.table_name("twice"))
+    assert len(server.api.get_data("twice")["data"]) == 40
+
+
+def test_successful_job_clears_its_names_stale_error(server, tmp_path):
+    """A failed job's job_errors entry does not outlive a later successful
+    job of the same name."""
+    req = {
+        "METHOD": "run-batch", "model": "threshold", "dataset": "later.csv",
+        "name": "job_batch_later", "time_column": "ts", "label_column": None,
+    }
+    _request(server, req, response=False)  # the dataset does not exist yet
+    assert _wait_until(lambda: "later" in server.job_errors, timeout=60), server.job_errors
+    failed = server.job_threads["later"]
+    failed.join(60)
+
+    csv = "ts,v\n" + "\n".join(f"{1700000000 + i * 60},{10.0 + i % 9}" for i in range(40))
+    (tmp_path / "datasets" / "later.csv").write_text(csv)
+    _request(server, req, response=False)
+    assert _wait_until(lambda: server.job_threads["later"] is not failed)
+    server.job_threads["later"].join(120)
+    assert server.api.catalog.table_exists("job_batch_later")
+    assert "later" not in server.job_errors, server.job_errors
+
+
+def test_concurrent_starts_of_one_name_run_one_job():
+    """Connections run on their own threads: however many start the same
+    name at once, one job runs and the others are refused."""
+    import sys
+
+    from exact_spark.plans.batch import BatchJob
+
+    srv = EngineServer(api=None)
+    release = threading.Event()
+    started: list[str] = []
+
+    def fn(job):
+        started.append(job.job_name)
+        release.wait(30)
+
+    job = BatchJob(job_name="same", filepath="unused.csv")
+    callers = [
+        threading.Thread(target=srv._start_job, args=("batch", job, fn)) for _ in range(16)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in callers:
+            t.start()
+        for t in callers:
+            t.join(30)
+    finally:
+        sys.setswitchinterval(interval)
+        release.set()
+    srv.job_threads["same"].join(30)
+    assert not any(t.is_alive() for t in callers)
+    assert not srv.job_threads["same"].is_alive()
+    assert started == ["same"]
+    assert srv.job_errors["same"] == "ValueError: job 'same' is already running"
