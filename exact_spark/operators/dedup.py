@@ -1068,14 +1068,15 @@ def text_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The composed curation manifest, materialized ONCE per corpus (VERDICT r11
-# item 1). text_curation_manifest composes the full trio fresh — a quality
-# tokenization pass, the language-mix window, and the decontamination gram
-# pass — and corpus_release_manifest (plus the whole release layer derived
-# from it) used to re-expand that lineage per run: the single most
-# expensive honest multi-scan left in the registry (documents x5 in its r11
-# plan). The registered text_curation_manifest query remains the honest
-# fresh builder; consumers serve from the artifact.
+# The composed curation manifest, materialized ONCE per corpus so no
+# consumer re-expands its lineage. text_curation_manifest composes the
+# full trio fresh — a quality tokenization pass, the language-mix window,
+# and the decontamination gram pass — and corpus_release_manifest (plus
+# the whole release layer derived from it) used to re-expand that lineage
+# per run: the single most expensive honest multi-scan left in the
+# registry (documents x5 in its r11 plan). The registered
+# text_curation_manifest query remains the honest fresh builder;
+# consumers serve from the artifact.
 artifacts.declare(
     "curman",
     "documents.parquet",
@@ -2163,7 +2164,7 @@ def dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cap censuses ("no silent caps", VERDICT r06 item 4). Every degenerate-
+# Cap censuses: no cap drops mass unreported. Every degenerate-
 # bucket guard in the dedup/similarity family silently excludes groups above
 # its cap; these one-aggregate diagnostics report the dropped mass on the
 # EXACT grouping key the operator caps (shared key-construction helpers, so
@@ -2329,7 +2330,7 @@ def _substring_span_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal duplicated-substring spans per doc: (doc_id, s, e), 1-based
     inclusive character positions.
 
-    Scale shape (VERDICT r08 item 1): the L-gram position table is a ~L×
+    Scale shape: the L-gram position table is a ~L×
     row inflation of the corpus, and BOTH of its exchanges — the dup-gram
     groupBy and the position-marking join back — are keyed on a
     fixed-width 128-bit gram hash (two independent xxhash64 halves, the
@@ -2670,7 +2671,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("method")).alias("ms"))
         .cache()
     )
-    # ADVICE r08: anchor the counts on a LITERAL method list so a method
+    # anchor the counts on a LITERAL method list so a method
     # that finds zero pairs still appears with n=0 — the matrix keeps its
     # fixed C(4,2)=6-row shape instead of silently shrinking
     meths = spark.createDataFrame(
@@ -3163,7 +3164,7 @@ def _global_total(*cols: tuple[str, str]):
     different column sets ReuseExchange could not collapse them: the
     committed plans showed the underlying artifact scanned (and for
     corpus_release_tokens, the shipped corpus TOKENIZED) twice for one
-    sign-off number (VERDICT r10 'what's wrong' #1). A window over the
+    sign-off number. A window over the
     tiny per-group frame keeps ONE lineage — the single-partition
     exchange it adds moves only the grouped rows (one per source)."""
     return {
@@ -3216,7 +3217,7 @@ def _span_attribution_sql() -> str:
     "for lengths, one map-side-combinable groupBy on source, and the "
     "share's global total as a window over the tiny per-source frame "
     "(ONE lineage — the prior broadcast-rejoin shape scanned the "
-    "artifact twice; VERDICT r10) — no pairwise work.",
+    "artifact twice) — no pairwise work.",
 )
 def dedup_span_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = (
@@ -3282,7 +3283,7 @@ def _decon_scrub_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the consp artifact serves both) and the in-row reassembly fold
     (_SUB_REASSEMBLE), so removal semantics still cannot drift — the
     manifest's own scrub accounting comes from dedup_substring_spans
-    (ADVICE r10: the earlier docstring overclaimed a shared frame)."""
+    (this frame is NOT shared with the manifest)."""
     spans = artifacts.table("consp", spark, sf_dir)
     agg = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("sp"),
@@ -3445,7 +3446,7 @@ def _release_manifest_sql() -> str:
     "(text_curation_manifest: quality x language-mix x benchmark "
     "decontamination), dedup survivorship (dedup_components artifact; "
     "exact-dup keepers carried separately for the funnel rollup), the "
-    "eval-source exclusion (ADVICE r10: the benchmark source src0 "
+    "eval-source exclusion (the benchmark source src0 "
     "participates in dedup/contamination structure — its duplicates and "
     "grams are real — but SHIPS NOWHERE, honoring decontaminate_scrub's "
     "contract; eval_source_keep carries the flag), and "
@@ -3494,7 +3495,7 @@ def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum(F.col("e") - F.col("s") + 1).cast("long").alias("dup_chars"))
     )
-    # served from the per-corpus artifact (VERDICT r11 item 1): the fresh
+    # served from the per-corpus artifact, one documents scan: the fresh
     # trio re-tokenized documents three ways INSIDE this query's plan —
     # the curation decision is a per-corpus derived structure, built once
     # (attributed to text_curation_manifest, the honest fresh builder)
@@ -3594,7 +3595,7 @@ def _contam_attribution_sql() -> str:
     "map-side-combinable groupBy on source, and the share's global total "
     "as a window over the tiny per-source frame — ONE artifact scan in "
     "the plan (the prior broadcast-rejoin shape re-expanded the lineage "
-    "and scanned it twice; VERDICT r10) — no pairwise work.",
+    "and scanned it twice) — no pairwise work.",
 )
 def decontaminate_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = (
@@ -3804,7 +3805,7 @@ def _release_funnel_sql() -> str:
     "survivor set of the composed corpus_release_manifest spec — the "
     "same AND-precedence its drop_stage attributes — and the TERMINAL "
     "row is measured from the composed corpus_release_dataset spec "
-    "(ADVICE r10: the manifest's final_len accounts only substring-"
+    "(the manifest's final_len accounts only substring-"
     "dedup removal; the shipped file also excises residual "
     "contamination spans, so sign-off chars here EQUAL "
     "corpus_release_tokens' shipped_chars by construction — pinned in "
@@ -3837,7 +3838,7 @@ def corpus_release_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(f"c{i}")
         )
     k = len(_RELEASE_STAGES)
-    # terminal row measured from the shipped-dataset ARTIFACT (ADVICE r10:
+    # terminal row measured from the shipped-dataset ARTIFACT (the
     # manifest final_len omits the residual contamination excision, so the
     # sign-off chars must come from the file that actually ships — the
     # same source corpus_release_tokens reads); the 1-row x 1-row combine
@@ -3990,7 +3991,7 @@ def _release_attribution_sql() -> str:
     "measured from the shipped file itself, including residual "
     "contamination excision, is corpus_release_tokens' shipped_chars; "
     "keeping this query a zero-join single-artifact scan is the "
-    "documented trade (ADVICE r10). Plan shape at 100 TB: ONE scan of the "
+    "documented trade. Plan shape at 100 TB: ONE scan of the "
     "per-corpus manifest artifact, then ONE map-side-combinable "
     "groupBy on source computing every stage count as a conditional "
     "sum — no corpus pass, no joins at all.",
@@ -4186,7 +4187,7 @@ def _survivor_policy_sql() -> str:
 @register(
     "dedup_survivor_policy",
     sql=_survivor_policy_sql(),  # composes components + profile specs
-    doc="Quality-aware survivor selection (VERDICT r10 item 1): per "
+    doc="Quality-aware survivor selection: per "
     "duplicate group, the survivor the ARGMAX-QUALITY policy keeps "
     "(text_profile.quality_score, tie-break min doc_id; empty-token "
     "docs score 0.0) next to the min-doc_id survivor every dedup stage "
@@ -4440,7 +4441,7 @@ def _contam_bench_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN tot t USING (benchmark)
     LEFT JOIN top p USING (benchmark)
     """,
-    doc="Per-benchmark decontamination attribution (VERDICT r10 item 2) — "
+    doc="Per-benchmark decontamination attribution — "
     "the GPT-3/PaLM appendix table: for each benchmark (the eval "
     "source's per-language slices stand in for individual benchmarks), "
     "how many training docs carry verbatim 40-gram overlap with THAT "
@@ -4551,7 +4552,7 @@ def _release_packed_sql() -> str:
 @register(
     "corpus_release_packed",
     sql=_release_packed_sql(),  # composes the release-dataset spec
-    doc="The release -> trainer handoff (VERDICT r10 item 6): the shipped "
+    doc="The release -> trainer handoff: the shipped "
     "dataset packed into fixed-budget training sequences "
     "(text_pack_sequences' concat-and-chunk layout, its _PACK_BUDGET "
     "context length, its shared deterministic tokenizer), packed PER "
@@ -4697,7 +4698,7 @@ def _release_diff_frame(cur: DataFrame, prev: DataFrame) -> DataFrame:
 @register(
     "corpus_release_diff",
     sql=_release_diff_sql(),  # the manifest spec over two snapshots
-    doc="Release-to-release diff (VERDICT r10 item 5): the manifest spec "
+    doc="Release-to-release diff: the manifest spec "
     "computed over the PREVIOUS release snapshot (the corpus minus the "
     "latest crawl batch) and the current corpus, committed as v1/v2 of "
     "a snapshot-versioned table (sources/versioned.py) and full-outer "

@@ -6,7 +6,8 @@ Mirrors Backend/execute_calls.py:384-907 stage-for-stage, Spark-first:
 2. prepare: P9 split, P6 feature selection, P7 train-fitted imputation
 3. train (M* via factory; unsupervised get features only,
    execute_calls.py:36-40,594-631)
-4. detect on all rows
+4. detect on all rows into one cached ``scored`` frame, the stored
+   (un-imputed) rows with ``score`` and ``predicted``; steps 5-7 read it
 5. evaluate G1/G2 on all rows and on the test slice in one aggregate
    pass (``operators.metrics.evaluate_classification``, the shared kernel)
 6. write the job table (S4) once, injected rows with final flags: S7's
@@ -14,6 +15,7 @@ Mirrors Backend/execute_calls.py:384-907 stage-for-stage, Spark-first:
    complete; a failed or cancelled job leaves none.
 7. run summary JSON (execute_calls.py:45-79,870-903 key set) with
    per-stage execution_time_* keys (execute_calls.py:404-405,891-895)
+   and the detection timeline SVG
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from exact_spark.ml.models import UNSUPERVISED, get_model
+from exact_spark.ml.models import get_model
 from exact_spark.operators.inject import AnomalySetting, inject_anomalies
 from exact_spark.operators.metrics import evaluate_classification
 from exact_spark.sources.catalog import JobCatalog
@@ -112,7 +114,8 @@ def run_batch(
         canon, start_epoch = job_input(spark, job, release)
         df = inject_anomalies(canon, job.anomaly_settings, start_epoch, seed=job.seed).cache()
         release.callback(df.unpersist)
-        n_rows = df.count()
+        ep = F.col("timestamp").cast("double")
+        n_rows, end_epoch = df.agg(F.count("*"), F.max(ep)).collect()[0]
         canon.unpersist()
         assert "id" in df.columns  # PK presence (execute_calls.py:509-510)
         t_sim = time.perf_counter() - t0
@@ -124,25 +127,23 @@ def run_batch(
         # P7: train-fitted mean imputation (fixing the reference's per-slice leakage)
         means = train.agg(*[F.avg(c).alias(c) for c in feats]).collect()[0].asDict()
         fill = {c: (means[c] if means[c] is not None else 0.0) for c in feats}
-        train, df_all = train.fillna(fill), df.fillna(fill)
-        df_all = df_all.withColumn("label", F.col("label").cast("int"))
 
         # 3. train ------------------------------------------------------------
         t0 = time.perf_counter()
         model = get_model(job.model, **job.model_params)
-        model.run(train, feats)  # unsupervised models read features only
+        model.run(train.fillna(fill), feats)  # unsupervised models read features only
         t_train = time.perf_counter() - t0
 
-        # 4. detect -----------------------------------------------------------
+        # 4. detect: the one frame steps 5-7 read ---------------------------
         t0 = time.perf_counter()
-        det_all = model.detect(df_all, feats).cache()
-        release.callback(det_all.unpersist)
+        scored = df.join(model.detect(df.fillna(fill), feats), "id").cache()
+        release.callback(scored.unpersist)
 
         # 5. evaluate ---------------------------------------------------------
-        joined = det_all.join(df_all.select("id", "label"), "id")
         t_eval0 = time.perf_counter()
-        metrics_all, metrics_test = evaluate_classification(joined, F.col("id") > cut)
+        metrics_all, metrics_test = evaluate_classification(scored, F.col("id") > cut)
         t_eval = time.perf_counter() - t_eval0
+        df.unpersist()  # scored's buffers are loaded: Spark keeps its cache
         # what the DETECTOR flagged — not the table's total is_anomaly count,
         # which also includes injected ground-truth rows
         n_flagged = metrics_all["tp"] + metrics_all["fp"]
@@ -150,7 +151,7 @@ def run_batch(
         # 6. the table's one write: the un-imputed rows, final flags ---------
         if not job_dir.exists():
             raise RuntimeError(f"job {job.job_name!r} was cancelled")
-        if catalog.create_table(table, flag_detections(df.join(det_all, "id"))) is None:
+        if catalog.create_table(table, flag_detections(scored)) is None:
             raise ValueError(f"table {table} already exists")
         if not job_dir.exists():  # the cancel landed during the write
             catalog.drop_table(table)
@@ -186,7 +187,7 @@ def run_batch(
         # markers carry the reference's 500-marker cap
         # (job_page_callbacks.py:1038).
         summary["timeline_svg"] = _write_timeline_svg(
-            df_all, det_all, feats[0], job.job_name, output_dir
+            scored.fillna(fill), (start_epoch, end_epoch), feats[0], job.job_name, output_dir
         )
         summary["logfile"] = save_run_summary(summary, job.job_name, output_dir)
     return summary
@@ -197,21 +198,19 @@ _TL_MARKER_CAP = 500  # anomaly marker constant (job_page_callbacks.py:1038)
 
 
 def _write_timeline_svg(
-    df_all, det_all, value_col: str, job_name: str, output_dir: str
+    scored, span: tuple[float, float], value_col: str, job_name: str, output_dir: str
 ) -> str:
     from exact_spark.ml.visualize import svg_timeseries
 
     ep = F.col("timestamp").cast("double")
-    b = df_all.agg(F.min(ep).alias("t0"), F.max(ep).alias("t1"))
+    tv = [ep.alias("t"), F.col(value_col).cast("double").alias("v")]
+    t0, t1 = F.lit(span[0]), F.lit(span[1])  # the series' first and last epoch second
     bucket = F.least(
         F.lit(_TL_BUCKETS - 1).cast("long"),
-        F.floor((ep - F.col("t0")) / (F.col("t1") - F.col("t0") + 1e-9) * _TL_BUCKETS).cast(
-            "long"
-        ),
+        F.floor((ep - t0) / (t1 - t0 + 1e-9) * _TL_BUCKETS).cast("long"),
     )
     m4 = (
-        df_all.crossJoin(F.broadcast(b))
-        .select(ep.alias("t"), F.col(value_col).cast("double").alias("v"), bucket.alias("b"))
+        scored.select(*tv, bucket.alias("b"))
         .groupBy("b")
         .agg(
             F.min_by("t", "t").alias("t_first"),
@@ -237,10 +236,10 @@ def _write_timeline_svg(
     points.sort()
     marks = [
         (float(r["t"]), float(r["v"]))
-        for r in det_all.filter(F.col("predicted") == 1)
-        .join(df_all.select("id", ep.alias("t"), F.col(value_col).cast("double").alias("v")), "id")
+        for r in scored.filter(F.col("predicted") == 1)
         .orderBy("id")
         .limit(_TL_MARKER_CAP)
+        .select(*tv)
         .collect()
     ]
     svg = svg_timeseries(f"{job_name} — {value_col} with detections", points, marks)

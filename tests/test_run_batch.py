@@ -12,6 +12,7 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from exact_spark.ml import visualize
 from exact_spark.operators.inject import AnomalySetting
 from exact_spark.plans import batch as batch_mod
 from exact_spark.plans.api import EngineAPI
@@ -103,13 +104,19 @@ def test_job_name_validation(api, csv_path):
         api.run_batch(BatchJob(job_name="Bad Name!", filepath=csv_path))
 
 
-def test_failed_job_releases_cached_frames(spark, api, csv_path):
-    # the model lookup fails after the job has cached its frames
+@pytest.mark.parametrize("model", ["no_such_model", "threshold"])
+def test_failed_job_releases_cached_frames(spark, api, csv_path, model):
+    # the lookup of no_such_model fails after the job has cached its
+    # frames; a successful job releases them all too
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
-    with pytest.raises(KeyError):
-        api.run_batch(BatchJob(job_name="leak", filepath=csv_path, time_col="t",
-                               label_col="lab", model="no_such_model"))
+    job = BatchJob(job_name="leak", filepath=csv_path, time_col="t", label_col="lab",
+                   model=model)
+    if model == "threshold":
+        api.run_batch(job)
+    else:
+        with pytest.raises(KeyError):
+            api.run_batch(job)
     assert persistent().size() == before
     api.cancel_job("leak")
 
@@ -230,3 +237,72 @@ def test_duplicate_job_name_fails_fast(spark, api, tmp_path, monkeypatch):
         run_batch(spark, api.catalog, _job("dup", second), str(api.output_dir))
     assert sorted(api.catalog.read_data(table).collect()) == before
     api.cancel_job("dup")
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a logical plan; a cached relation is a leaf, its
+    inner plan not walked."""
+    kids = plan.children()
+    return [plan.nodeName()] + [n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))]
+
+
+@pytest.mark.parametrize("label_col", ["lab", None])
+def test_evaluation_and_table_write_read_one_cached_frame(api, csv_path, monkeypatch, label_col):
+    # the frames evaluation and the table write read are projections of one
+    # cached frame: no join runs above it, in either
+    nodes, dtypes = {}, {}
+    raw_evaluate, raw_create = batch_mod.evaluate_classification, JobCatalog.create_table
+
+    def evaluate(df, *slices, **kw):
+        nodes["evaluate"] = _plan_nodes(df._jdf.queryExecution().withCachedData())
+        dtypes.update(df.dtypes)
+        return raw_evaluate(df, *slices, **kw)
+
+    def create_table(self, table, df):
+        nodes["create_table"] = _plan_nodes(df._jdf.queryExecution().withCachedData())
+        return raw_create(self, table, df)
+
+    monkeypatch.setattr(batch_mod, "evaluate_classification", evaluate)
+    monkeypatch.setattr(JobCatalog, "create_table", create_table)
+    spike = AnomalySetting(anomaly_type="spike", timestamp=100 * 60, duration=50 * 60,
+                           magnitude=5.0, percentage=50.0, columns=["v"])
+    name = f"onejoin_{label_col or 'unlabelled'}"
+    api.run_batch(BatchJob(job_name=name, filepath=csv_path, time_col="t",
+                           label_col=label_col, anomaly_settings=[spike]))
+    for reader, names in nodes.items():
+        assert "InMemoryRelation" in names, (reader, names)
+        assert "Join" not in names, (reader, names)
+    assert set(nodes) == {"evaluate", "create_table"}
+    # canonicalize and injection type the label int: evaluation casts nothing
+    assert dtypes["label"] == "int"
+    api.cancel_job(name)
+
+
+@pytest.mark.parametrize(
+    "n, missing, params, capped",
+    [(400, 37, {}, False), (1000, None, {"percentile": 0.1}, True)],
+    ids=["gappy", "over_marker_cap"],
+)
+def test_detection_timeline(api, tmp_path, monkeypatch, n, missing, params, capped):
+    path = _write_series(tmp_path / "timeline.csv", n, missing=missing)
+    drawn = {}
+    raw_svg = visualize.svg_timeseries
+
+    def svg_timeseries(title, points, anomalies=None):
+        drawn.update(points=points, marks=anomalies)
+        return raw_svg(title, points, anomalies)
+
+    monkeypatch.setattr(visualize, "svg_timeseries", svg_timeseries)
+    summary = api.run_batch(_job("timeline", path, model_params=params))
+    with open(summary["timeline_svg"]) as f:
+        svg = f.read()
+
+    flagged = summary["anomalies_flagged"]
+    assert (flagged > 500) == capped
+    assert svg.count("<circle") == len(drawn["marks"]) == min(flagged, 500)
+    first, last = 1700000000, 1700000000 + (n - 1) * 60
+    xs = [t for t, _ in drawn["points"]]
+    assert min(xs) == first and max(xs) == last
+    assert all(first <= t <= last for t, _ in drawn["marks"])
+    assert "nan" not in svg
+    api.cancel_job("timeline")
