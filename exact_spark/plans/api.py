@@ -140,14 +140,21 @@ class EngineAPI:
             raise ValueError(f"invalid job name {job_name!r}")
         return self.output_dir / (f"stream_{job_name}" if stream else job_name)
 
+    def _new_job_dir(self, job_name: str, stream: bool) -> pathlib.Path:
+        """``_job_dir`` of a job about to run. A name that already has a
+        table is rejected before any Spark work: a second job under it
+        would append to or collide with the first one's rows."""
+        out = self._job_dir(job_name, stream)
+        if self.catalog.table_exists(self.catalog.table_name(job_name, stream)):
+            raise ValueError(f"job {job_name!r} already has a table")
+        return out
+
     def run_batch(self, job: BatchJob) -> dict:
-        self._job_dir(job.job_name, stream=False)  # checks the name run_batch writes under
-        if self.catalog.table_exists(self.catalog.table_name(job.job_name)):
-            raise ValueError(f"job {job.job_name!r} already has a table")  # before any Spark work
+        self._new_job_dir(job.job_name, stream=False)
         return run_batch(self.spark, self.catalog, job, str(self.output_dir))
 
     def run_stream(self, job: BatchJob, speedup: float = 1000.0, chunks: int = 20) -> dict:
-        work = self._job_dir(job.job_name, stream=True)
+        work = self._new_job_dir(job.job_name, stream=True)
         return run_stream(self.spark, self.catalog, job, str(work),
                           speedup=speedup, chunks=chunks)
 

@@ -75,15 +75,17 @@ def save_run_summary(summary: dict, job_name: str, output_dir: str) -> str:
     return str(path)
 
 
-def job_input(spark: SparkSession, job: BatchJob, release: ExitStack) -> tuple[DataFrame, float]:
-    """Batch and stream jobs' ingest: ``(canonical frame, start epoch)``.
-    The frame is cached, as every job reads it several times, and
-    ``release`` unpersists it on every exit path."""
+def job_input(spark: SparkSession, job: BatchJob, release: ExitStack) -> tuple:
+    """Batch and stream jobs' ingest: ``(canonical frame, first epoch
+    second, last epoch second, row count)``. The frame is cached, as every
+    job reads it several times, and ``release`` unpersists it on every
+    exit path."""
     raw = read_file(spark, job.filepath)
     canon = canonicalize(raw, time_col=job.time_col, label_col=job.label_col).cache()
     release.callback(canon.unpersist)
-    start_epoch = canon.agg(F.min(F.col("timestamp").cast("double"))).collect()[0][0]
-    return canon, start_epoch
+    ep = F.col("timestamp").cast("double")
+    start_epoch, end_epoch, n_rows = canon.agg(F.min(ep), F.max(ep), F.count("*")).collect()[0]
+    return canon, start_epoch, end_epoch, n_rows
 
 
 def flag_detections(scored: DataFrame) -> DataFrame:
@@ -108,30 +110,29 @@ def run_batch(
     # job included: an engine process outlives its jobs
     with ExitStack() as release:
         # 1. simulate/ingest --------------------------------------------------
-        # canon feeds the start-epoch agg and inject's selection pass, join
-        # and stats aggregates; released once the injected frame is cached
+        # canon feeds inject's selection pass, join and stats aggregates.
+        # Injection keeps every row and timestamp: canon's span and count are df's
         t0 = time.perf_counter()
-        canon, start_epoch = job_input(spark, job, release)
+        canon, start_epoch, end_epoch, n_rows = job_input(spark, job, release)
         df = inject_anomalies(canon, job.anomaly_settings, start_epoch, seed=job.seed).cache()
         release.callback(df.unpersist)
-        ep = F.col("timestamp").cast("double")
-        n_rows, end_epoch = df.agg(F.count("*"), F.max(ep)).collect()[0]
-        canon.unpersist()
         assert "id" in df.columns  # PK presence (execute_calls.py:509-510)
-        t_sim = time.perf_counter() - t0
 
         # 2. prepare ----------------------------------------------------------
         feats = feature_columns(df)
         cut = int(0.85 * n_rows)  # P9 (execute_calls.py:333-346)
-        train = df.filter(F.col("id") <= cut)
-        # P7: train-fitted mean imputation (fixing the reference's per-slice leakage)
-        means = train.agg(*[F.avg(c).alias(c) for c in feats]).collect()[0].asDict()
+        in_train = F.col("id") <= cut
+        # P7: train-fitted mean imputation (fixing the reference's per-slice
+        # leakage). This aggregate materializes df: simulation time includes it
+        means = df.agg(*[F.avg(F.when(in_train, F.col(c))).alias(c) for c in feats]).collect()[0]
         fill = {c: (means[c] if means[c] is not None else 0.0) for c in feats}
+        canon.unpersist()
+        t_sim = time.perf_counter() - t0
 
         # 3. train ------------------------------------------------------------
         t0 = time.perf_counter()
         model = get_model(job.model, **job.model_params)
-        model.run(train.fillna(fill), feats)  # unsupervised models read features only
+        model.run(df.filter(in_train).fillna(fill), feats)  # unsupervised: features only
         t_train = time.perf_counter() - t0
 
         # 4. detect: the one frame steps 5-7 read ---------------------------

@@ -3,23 +3,27 @@
 engine.py:207-255 + execute_calls.py:910-970, rebuilt working: stage the
 canonicalized file as a time-ordered chunked stream source, pre-train the
 model on the raw file (T3's contract), replay with inline injection (T2),
-score each micro-batch and append to the ``job_stream_`` table.
+score each micro-batch and append it to the ``job_stream_`` table.
 
-The job core is shared with ``run_batch``: ingest (``batch.job_input``)
-and the per-setting injection transform (``operators.inject``).
+The job core is shared with ``run_batch``: ingest (``batch.job_input``),
+the injection transform (``operators.inject``) and the evaluation kernel
+(``operators.metrics``), applied as the sink writes each micro-batch: the
+table is never read back. A failed job leaves the rows written so far,
+not its staged source or checkpoint.
 """
 
 from __future__ import annotations
 
 import pathlib
+import shutil
 from contextlib import ExitStack
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.ml.models import get_model
 from exact_spark.operators.inject import streaming_injection
-from exact_spark.operators.metrics import evaluate_classification
+from exact_spark.operators.metrics import classification_metrics, confusion_sums
 from exact_spark.plans.batch import BatchJob, flag_detections, job_input
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import feature_columns
@@ -41,54 +45,57 @@ def run_stream(
     chunks: int = 20,
     timeout_s: float = 120.0,
 ) -> dict:
-    work = pathlib.Path(work_dir)
     table = catalog.table_name(job.job_name, stream=True)
-    src_dir = str(work / "source")
-    ckpt_dir = str(work / "checkpoint")
-
-    with ExitStack() as release:
-        # the canonical frame's consumers here: the start-epoch agg, the
-        # staging write (T1), the replay-rate agg, the model fit
-        canon, start_epoch = job_input(spark, job, release)
-        stage_stream_source(canon, src_dir, chunks=chunks)
-        rate = replay_rate(canon, speedup)
-
-        # pre-train on the raw (un-injected) file — T3 (execute_calls.py:952-956)
-        feats = feature_columns(canon)
-        model = get_model(job.model, **job.model_params)
-        model.run(canon, feats)
-
-    # replay -> inline injection -> foreachBatch scoring -> append table
-    stream = read_replay_stream(spark, src_dir, files_per_trigger=1)
-    injected = streaming_injection(stream, job.anomaly_settings, start_epoch, seed=job.seed)
+    src_dir, ckpt_dir = (str(pathlib.Path(work_dir) / d) for d in ("source", "checkpoint"))
+    # batch id -> [tp, tn, fp, fn, rows]: a replayed micro-batch overwrites
+    # its entry instead of adding to it
+    sums: dict[int, list[int]] = {}
 
     def sink(scored, batch_id: int) -> None:
-        out = flag_detections(scored)
+        # the G1 cells and row count are observed on the table write: the
+        # micro-batch is detected and read once, in one Spark action
+        seen = Observation(f"{table}:{batch_id}")
+        cells = {**confusion_sums("predicted", "label"), "rows": F.count("*")}
+        out = flag_detections(scored.observe(seen, *(c.alias(k) for k, c in cells.items())))
         if catalog.table_exists(table):
             catalog.insert_data(table, out)
         else:
             catalog.create_table(table, out)
+        got = seen.get
+        sums[batch_id] = [got[k] or 0 for k in cells]
 
-    query = score_stream(injected, model, feats, sink, ckpt_dir, available_now=True)
-    status = await_stream(query, timeout_s=timeout_s)
+    with ExitStack() as release:
+        for scratch in (src_dir, ckpt_dir):  # removed last, after the query stops
+            release.callback(shutil.rmtree, scratch, ignore_errors=True)
+        # canon feeds the span aggregate, the staging write (T1) and the fit
+        canon, start_epoch, end_epoch, n_rows = job_input(spark, job, release)
+        stage_stream_source(canon, src_dir, chunks=chunks)
+        # pre-train on the raw (un-injected) file — T3 (execute_calls.py:952-956)
+        feats = feature_columns(canon)
+        model = get_model(job.model, **job.model_params)
+        model.run(canon, feats)
+        canon.unpersist()
 
+        # replay -> inline injection -> foreachBatch scoring -> append table
+        stream = read_replay_stream(spark, src_dir)
+        injected = streaming_injection(stream, job.anomaly_settings, start_epoch, seed=job.seed)
+        query = score_stream(injected, model, feats, sink, ckpt_dir)
+        release.callback(query.stop)
+        status = await_stream(query, timeout_s=timeout_s)
+
+    *cells, rows = [sum(c) for c in zip(*sums.values())] or [0] * 5
+    if rows != n_rows:
+        raise RuntimeError(f"stream job {job.job_name!r} scored {rows} of {n_rows} rows")
     # each micro-batch appended its own file set; bin-pack before handing
     # the table to readers (the maintenance pass a streaming table needs
     # continuously at scale, run once here since the replay is bounded)
     compaction = catalog.compact_table(table)
-
-    stored = catalog.read_data(table)
-    det = stored.select(
-        "id", F.col("label").cast("int").alias("label"),
-        F.col("is_anomaly").cast("int").alias("predicted"),
-    )
-    [metrics] = evaluate_classification(det)
     return {
         "job_name": job.job_name,
         "table_name": table,
-        "rows": stored.count(),
-        "replay_rows_per_second": rate,
+        "rows": rows,
+        "replay_rows_per_second": replay_rate(start_epoch, end_epoch, n_rows, speedup),
         "stream_status": status,
         "compaction": compaction,
-        "metrics_all": metrics,
+        "metrics_all": classification_metrics(*cells),
     }

@@ -5,10 +5,9 @@ the intended semantics rebuilt Spark-first:
 
 - T1 paced replay: the reference sleeps ``mean_interarrival / speedup``
   between single-row inserts (simulator.py:185-217). Here the file is
-  staged as a parquet stream source and read with a bounded trigger; the
-  pacing contract (rows/sec = speedup / mean_interarrival) is exposed by
-  ``replay_rate`` and applied via ``maxFilesPerTrigger``-chunked staging or
-  a rate-source join.
+  staged as time-ordered parquet chunks and read one chunk per trigger;
+  the pacing contract (rows/sec = speedup / mean_interarrival) is
+  reported by ``replay_rate`` from the series' span and row count.
 - T2 inline injection: ``operators.inject.streaming_injection`` applies
   the batch injectors' own per-setting transform (seeded draws, A4-A8
   value expressions, A9 flags) inside the streaming select. The one
@@ -19,9 +18,11 @@ the intended semantics rebuilt Spark-first:
   come from the setting's overrides only.
 - T3 detection: the reference re-reads and re-scores the WHOLE table every
   second (execute_calls.py:941-970). Here ``foreachBatch`` scores only the
-  new micro-batch with the pre-trained broadcast model and appends —
-  strictly better, identical row-local semantics.
-- T4 status via StreamingQuery.status/lastProgress.
+  new micro-batch with the pre-trained broadcast model; the job's sink
+  appends it and counts its confusion cells on that write, so the job
+  evaluates its detector without reading its table back.
+- T4 status via StreamingQuery.lastProgress; a failed or timed-out query
+  raises.
 - T5 (extension beyond the reference): watermarked tumbling-window
   aggregation for late data.
 """
@@ -34,24 +35,14 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from exact_spark.functions import epoch_seconds_any
 
-
-def mean_interarrival_seconds(df: DataFrame, ts_col: str = "timestamp") -> float:
-    """G4 (simulator.py:185-203): mean gap between consecutive rows."""
-    ep = epoch_seconds_any(df, ts_col)
-    row = df.agg(
-        ((F.max(ep) - F.min(ep)) / F.greatest(F.count(F.lit(1)) - 1, F.lit(1))).alias("dt")
-    ).collect()[0]
-    return float(row["dt"] or 0.0)
-
-
-def replay_rate(df: DataFrame, speedup: float, ts_col: str = "timestamp") -> float:
-    """Rows/second for the paced replay: speedup / mean_interarrival."""
-    dt = mean_interarrival_seconds(df, ts_col)
-    if dt <= 0:
+def replay_rate(t0: float, t1: float, n_rows: int, speedup: float) -> float:
+    """Rows/second for the paced replay of a series of ``n_rows`` rows
+    from epoch second ``t0`` to ``t1``: speedup / mean inter-arrival (G4,
+    simulator.py:185-203)."""
+    if n_rows < 2 or t1 <= t0:
         return 1000.0
-    return speedup / dt
+    return speedup / ((t1 - t0) / (n_rows - 1))
 
 
 def stage_stream_source(df: DataFrame, path: str, chunks: int) -> None:
@@ -60,17 +51,12 @@ def stage_stream_source(df: DataFrame, path: str, chunks: int) -> None:
     df.repartitionByRange(chunks, "timestamp").write.mode("overwrite").parquet(path)
 
 
-def read_replay_stream(
-    spark: SparkSession, path: str, files_per_trigger: int = 1
-) -> DataFrame:
+def read_replay_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The staged source as a stream, one time-slice file per trigger (T1)."""
     from exact_spark import io as _io
 
     schema = _io.read_parquet_memo(spark, path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(path)
-    )
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
 
 
 def score_stream(
@@ -79,11 +65,10 @@ def score_stream(
     feature_cols: list[str],
     sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """T3: foreachBatch scoring with the pre-trained broadcast model; the
-    sink receives (scored_batch, batch_id) — append/MERGE into the
-    job_stream_ table lives there."""
+    """T3: foreachBatch scoring with the pre-trained broadcast model, run
+    to the end of the staged source (availableNow). The sink receives each
+    non-empty micro-batch, ``score`` and ``predicted`` joined on, and its id."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -92,14 +77,13 @@ def score_stream(
         scored = batch_df.join(det.select("id", "score", "predicted"), "id")
         sink(scored, batch_id)
 
-    writer = (
+    return (
         stream_df.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_counts(
@@ -151,10 +135,17 @@ def deduplicated_stream(
 
 
 def await_stream(query, timeout_s: float = 60.0) -> dict:
-    """T4: wait for completion (availableNow) and return final status."""
-    deadline = time.time() + timeout_s
-    while query.isActive and time.time() < deadline:
+    """T4: wait for the bounded query to finish and return its final
+    status. A failed query raises its error; one still running after
+    ``timeout_s`` is stopped and raises ``TimeoutError``."""
+    deadline = time.monotonic() + timeout_s
+    while query.isActive and time.monotonic() < deadline:
         time.sleep(0.2)
+    if query.isActive:
+        query.stop()
+        raise TimeoutError(f"stream query {query.name or query.id} ran past {timeout_s}s")
+    if (err := query.exception()) is not None:
+        raise err
     return {"isActive": query.isActive, "lastProgress": query.lastProgress}
 
 

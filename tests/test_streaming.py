@@ -6,14 +6,18 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from exact_spark.ml.models import DetectorModel
 from exact_spark.operators.inject import AnomalySetting
-from exact_spark.plans.batch import BatchJob
+from exact_spark.plans import batch as batch_mod
+from exact_spark.plans import stream as stream_mod
+from exact_spark.plans.api import EngineAPI
+from exact_spark.plans.batch import BatchJob, run_batch
 from exact_spark.plans.stream import run_stream
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.streaming.replay import (
-    mean_interarrival_seconds,
     replay_rate,
     stateful_session_counts,
     windowed_counts,
@@ -30,10 +34,11 @@ def csv_path(tmp_path_factory):
     return str(p)
 
 
-def test_run_stream_end_to_end(spark, csv_path, tmp_path):
-    catalog = JobCatalog(spark, str(tmp_path / "wh"))
-    job = BatchJob(
-        job_name="s1",
+def _custom_job(name: str, csv_path: str) -> BatchJob:
+    """The 600-row series with one 100% ``custom`` setting: rows 400-459
+    are injected and labelled."""
+    return BatchJob(
+        job_name=name,
         filepath=csv_path,
         time_col="t",
         label_col="lab",
@@ -43,7 +48,12 @@ def test_run_stream_end_to_end(spark, csv_path, tmp_path):
         ],
         model="threshold",
     )
-    result = run_stream(spark, catalog, job, str(tmp_path / "work"), chunks=6)
+
+
+def test_run_stream_end_to_end(spark, csv_path, tmp_path):
+    catalog = JobCatalog(spark, str(tmp_path / "wh"))
+    work = tmp_path / "work"
+    result = run_stream(spark, catalog, _custom_job("s1", csv_path), str(work), chunks=6)
     assert result["rows"] == 600
     assert result["table_name"] == "job_stream_s1"
     assert result["stream_status"]["isActive"] is False
@@ -54,11 +64,88 @@ def test_run_stream_end_to_end(spark, csv_path, tmp_path):
     # replay pacing contract: 60s inter-arrival, speedup 1000 -> ~16.7 rows/s
     assert abs(result["replay_rows_per_second"] - 1000.0 / 60.0) < 0.1
 
-    # stored stream table has flags persisted
+    # the stored flags are injected OR predicted; every labelled row here
+    # is an injected one, so the flagged rows are the union tp + fp + fn
     flagged = catalog.read_data("job_stream_s1").filter(F.col("is_anomaly"))
-    assert flagged.count() == m["tp"] + m["fp"]
+    assert flagged.count() == m["tp"] + m["fp"] + m["fn"]
     # per-micro-batch appends were bin-packed before handing to readers
     assert result["compaction"]["files_after"] <= result["compaction"]["files_before"]
+    # the staged source and the checkpoint are scratch
+    assert not (work / "source").exists() and not (work / "checkpoint").exists()
+
+
+class _Detector(DetectorModel):
+    """Test detector: flags ``flag``; ``fail`` makes ``detect`` raise and
+    ``drop`` makes it score only the even ids."""
+
+    def __init__(self, flag: int = 0, fail: bool = False, drop: bool = False):
+        self.flag, self.fail, self.drop = flag, fail, drop
+
+    def run(self, train, feature_cols, label_col="label"):
+        pass
+
+    def detect(self, df, feature_cols):
+        if self.fail:
+            raise RuntimeError("detector down")
+        if self.drop:
+            df = df.filter(F.col("id") % 2 == 0)
+        return df.select("id", F.lit(0.0).alias("score"), F.lit(self.flag).alias("predicted"))
+
+
+def _patch_model(monkeypatch, **kw):
+    for mod in (batch_mod, stream_mod):
+        monkeypatch.setattr(mod, "get_model", lambda name, **params: _Detector(**kw))
+
+
+@pytest.mark.parametrize("flag", [0, 1], ids=["never_flags", "always_flags"])
+def test_stream_and_batch_evaluate_the_detector_alike(spark, csv_path, tmp_path,
+                                                      monkeypatch, flag):
+    """Both job kinds score the detector, not the injected flags: at 100%
+    injection, where their injections agree, a constant detector gives
+    both the same metrics; one that never flags detects nothing."""
+    _patch_model(monkeypatch, flag=flag)
+    catalog = JobCatalog(spark, str(tmp_path / "wh"))
+    job = _custom_job("parity", csv_path)
+    batch = run_batch(spark, catalog, job, str(tmp_path / "out"))["metrics_all"]
+    stream = run_stream(spark, catalog, job, str(tmp_path / "work"), chunks=3)["metrics_all"]
+    assert stream == batch
+    if flag:
+        assert (batch["tp"], batch["fp"], batch["fn"]) == (60, 540, 0)
+    else:
+        assert batch["tp"] == 0 and batch["recall"] == 0
+        assert batch["fn"] == 60
+
+
+@pytest.mark.parametrize(
+    "detector,timeout_s,error,match",
+    [({"fail": True}, 120.0, StreamingQueryException, "detector down"),
+     ({"drop": True}, 120.0, RuntimeError, "scored 300 of 600 rows"),
+     ({}, 0.0, TimeoutError, "ran past")],
+    ids=["detect_raises", "rows_lost", "timeout"],
+)
+def test_failed_stream_job_raises_and_stops(spark, csv_path, tmp_path, monkeypatch,
+                                            detector, timeout_s, error, match):
+    """A stream job whose query fails, loses rows or runs past its timeout
+    raises; no query is left running and its scratch is removed."""
+    _patch_model(monkeypatch, **detector)
+    catalog = JobCatalog(spark, str(tmp_path / "wh"))
+    work = tmp_path / "work"
+    with pytest.raises(error, match=match):
+        run_stream(spark, catalog, _custom_job("bad", csv_path), str(work),
+                   chunks=2, timeout_s=timeout_s)
+    assert spark.streams.active == []
+    assert not (work / "source").exists() and not (work / "checkpoint").exists()
+
+
+def test_duplicate_stream_job_name_fails_fast(spark, csv_path, tmp_path):
+    """A second stream job under a finished job's name is rejected before
+    any Spark work, instead of appending its rows to the first one's table."""
+    api = EngineAPI(spark, str(tmp_path / "wh"), str(tmp_path / "out"))
+    job = _custom_job("twice", csv_path)
+    api.run_stream(job, chunks=2)
+    with pytest.raises(ValueError, match="already has a table"):
+        api.run_stream(job, chunks=2)
+    assert api.catalog.read_data("job_stream_twice").count() == 600
 
 
 def test_failed_stream_job_releases_cached_frames(spark, csv_path, tmp_path):
@@ -76,15 +163,20 @@ def test_failed_stream_job_releases_cached_frames(spark, csv_path, tmp_path):
 
 
 def test_interarrival_and_windowed_counts(spark, csv_path, tmp_path):
-    from exact_spark.sources.ingest import canonicalize, read_file
+    from contextlib import ExitStack
 
-    canon = canonicalize(read_file(spark, csv_path), time_col="t", label_col="lab")
-    assert abs(mean_interarrival_seconds(canon) - 60.0) < 1e-6
-    assert abs(replay_rate(canon, speedup=60.0) - 1.0) < 1e-9
+    from exact_spark.plans.batch import job_input
+
+    src = str(tmp_path / "winsrc")
+    with ExitStack() as release:
+        canon, t0, t1, n_rows = job_input(spark, _custom_job("win", csv_path), release)
+        canon.write.parquet(src)
+    assert (t1 - t0, n_rows) == (599 * 60.0, 600)
+    # 60 s mean inter-arrival
+    assert abs(replay_rate(t0, t1, n_rows, speedup=60.0) - 1.0) < 1e-9
+    assert replay_rate(t0, t0, 1, speedup=60.0) == 1000.0  # no gap to pace by
 
     # T5: watermarked windowed agg over a replay stream
-    src = str(tmp_path / "winsrc")
-    canon.write.parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     agg = windowed_counts(stream, window="60 minutes", watermark="120 minutes")
