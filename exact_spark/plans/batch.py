@@ -3,9 +3,9 @@
 Mirrors Backend/execute_calls.py:384-907 stage-for-stage, Spark-first:
 
 1. ingest + canonicalize + inject (S1-S6, P1-P5, A1-A10), cached
-2. prepare: P9 split, P6 feature selection, P7 train-fitted imputation
-3. train (M* via factory; unsupervised get features only,
-   execute_calls.py:36-40,594-631)
+2. prepare: P9 split, P6 feature selection, P7 imputation (``train_fill``)
+3. train (``train_detector``: M* via factory; unsupervised get features
+   only, execute_calls.py:36-40,594-631)
 4. detect on all rows into one cached ``scored`` frame, the stored
    (un-imputed) rows with ``score`` and ``predicted``; steps 5-7 read it
 5. evaluate G1/G2 on all rows and on the test slice in one aggregate
@@ -16,6 +16,10 @@ Mirrors Backend/execute_calls.py:384-907 stage-for-stage, Spark-first:
 7. run summary JSON (execute_calls.py:45-79,870-903 key set) with
    per-stage execution_time_* keys (execute_calls.py:404-405,891-895)
    and the detection timeline SVG
+
+Degenerate inputs: a job whose input has fewer than 2 rows raises
+``ValueError`` naming the job and its row count, before any injection,
+staging or training (its train slice would be empty).
 """
 
 from __future__ import annotations
@@ -26,10 +30,10 @@ import pathlib
 import time
 from contextlib import ExitStack
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from exact_spark.ml.models import get_model
@@ -79,13 +83,34 @@ def job_input(spark: SparkSession, job: BatchJob, release: ExitStack) -> tuple:
     """Batch and stream jobs' ingest: ``(canonical frame, first epoch
     second, last epoch second, row count)``. The frame is cached, as every
     job reads it several times, and ``release`` unpersists it on every
-    exit path."""
+    exit path. Fewer than 2 rows raise ``ValueError``."""
     raw = read_file(spark, job.filepath)
     canon = canonicalize(raw, time_col=job.time_col, label_col=job.label_col).cache()
     release.callback(canon.unpersist)
     ep = F.col("timestamp").cast("double")
     start_epoch, end_epoch, n_rows = canon.agg(F.min(ep), F.max(ep), F.count("*")).collect()[0]
+    if n_rows < 2:
+        raise ValueError(f"job {job.job_name!r} has {n_rows} rows; a job needs at least 2")
     return canon, start_epoch, end_epoch, n_rows
+
+
+def train_fill(df: DataFrame, feats: list[str], in_train: Column) -> dict[str, float]:
+    """P7: each feature's mean over the ``in_train`` rows, 0.0 for one with
+    none (train-fitted, fixing the reference's per-slice leakage)."""
+    means = df.agg(*[F.avg(F.when(in_train, F.col(c))).alias(c) for c in feats]).collect()[0]
+    return {c: (means[c] if means[c] is not None else 0.0) for c in feats}
+
+
+def train_detector(job: BatchJob, train: DataFrame, feats: list[str], fill: dict) -> Callable:
+    """``job``'s model, trained on ``train`` imputed with ``fill``, as a scorer: a
+    frame's stored rows joined to ``score`` and ``predicted`` from its imputed rows."""
+    model = get_model(job.model, **job.model_params)
+
+    def impute(frame: DataFrame) -> DataFrame:
+        return frame.fillna(fill)
+
+    model.run(impute(train), feats)
+    return lambda frame: frame.join(model.detect(impute(frame), feats), "id")
 
 
 def flag_detections(scored: DataFrame) -> DataFrame:
@@ -122,22 +147,19 @@ def run_batch(
         feats = feature_columns(df)
         cut = int(0.85 * n_rows)  # P9 (execute_calls.py:333-346)
         in_train = F.col("id") <= cut
-        # P7: train-fitted mean imputation (fixing the reference's per-slice
-        # leakage). This aggregate materializes df: simulation time includes it
-        means = df.agg(*[F.avg(F.when(in_train, F.col(c))).alias(c) for c in feats]).collect()[0]
-        fill = {c: (means[c] if means[c] is not None else 0.0) for c in feats}
+        # the fill's aggregate materializes df: simulation time includes it
+        fill = train_fill(df, feats, in_train)
         canon.unpersist()
         t_sim = time.perf_counter() - t0
 
         # 3. train ------------------------------------------------------------
         t0 = time.perf_counter()
-        model = get_model(job.model, **job.model_params)
-        model.run(df.filter(in_train).fillna(fill), feats)  # unsupervised: features only
+        score = train_detector(job, df.filter(in_train), feats, fill)
         t_train = time.perf_counter() - t0
 
         # 4. detect: the one frame steps 5-7 read ---------------------------
         t0 = time.perf_counter()
-        scored = df.join(model.detect(df.fillna(fill), feats), "id").cache()
+        scored = score(df).cache()
         release.callback(scored.unpersist)
 
         # 5. evaluate ---------------------------------------------------------

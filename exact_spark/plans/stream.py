@@ -6,7 +6,8 @@ model on the raw file (T3's contract), replay with inline injection (T2),
 score each micro-batch and append it to the ``job_stream_`` table.
 
 The job core is shared with ``run_batch``: ingest (``batch.job_input``),
-the injection transform (``operators.inject``) and the evaluation kernel
+the injection transform (``operators.inject``), the detector step
+(``batch.train_fill``, ``batch.train_detector``) and the evaluation kernel
 (``operators.metrics``), applied as the sink writes each micro-batch: the
 table is never read back. A failed job leaves the rows written so far,
 not its staged source or checkpoint.
@@ -18,20 +19,18 @@ import pathlib
 import shutil
 from contextlib import ExitStack
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from exact_spark.ml.models import get_model
 from exact_spark.operators.inject import streaming_injection
 from exact_spark.operators.metrics import classification_metrics, confusion_sums
-from exact_spark.plans.batch import BatchJob, flag_detections, job_input
+from exact_spark.plans import batch
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import feature_columns
 from exact_spark.streaming.replay import (
     await_stream,
     read_replay_stream,
     replay_rate,
-    score_stream,
     stage_stream_source,
 )
 
@@ -39,7 +38,7 @@ from exact_spark.streaming.replay import (
 def run_stream(
     spark: SparkSession,
     catalog: JobCatalog,
-    job: BatchJob,
+    job: batch.BatchJob,
     work_dir: str,
     speedup: float = 1000.0,
     chunks: int = 20,
@@ -51,35 +50,41 @@ def run_stream(
     # its entry instead of adding to it
     sums: dict[int, list[int]] = {}
 
-    def sink(scored, batch_id: int) -> None:
-        # the G1 cells and row count are observed on the table write: the
-        # micro-batch is detected and read once, in one Spark action
-        seen = Observation(f"{table}:{batch_id}")
-        cells = {**confusion_sums("predicted", "label"), "rows": F.count("*")}
-        out = flag_detections(scored.observe(seen, *(c.alias(k) for k, c in cells.items())))
-        if catalog.table_exists(table):
-            catalog.insert_data(table, out)
-        else:
-            catalog.create_table(table, out)
-        got = seen.get
-        sums[batch_id] = [got[k] or 0 for k in cells]
-
     with ExitStack() as release:
         for scratch in (src_dir, ckpt_dir):  # removed last, after the query stops
             release.callback(shutil.rmtree, scratch, ignore_errors=True)
-        # canon feeds the span aggregate, the staging write (T1) and the fit
-        canon, start_epoch, end_epoch, n_rows = job_input(spark, job, release)
+        # canon feeds the span aggregate, the staging write (T1), the fill and the fit
+        canon, start_epoch, end_epoch, n_rows = batch.job_input(spark, job, release)
         stage_stream_source(canon, src_dir, chunks=chunks)
-        # pre-train on the raw (un-injected) file — T3 (execute_calls.py:952-956)
+        # T3: pre-train on the raw file, every row a train row (execute_calls.py:952-956)
         feats = feature_columns(canon)
-        model = get_model(job.model, **job.model_params)
-        model.run(canon, feats)
+        fill = batch.train_fill(canon, feats, F.lit(True))
+        score = batch.train_detector(job, canon, feats, fill)
         canon.unpersist()
 
-        # replay -> inline injection -> foreachBatch scoring -> append table
+        def sink(micro_batch: DataFrame, batch_id: int) -> None:
+            # the G1 cells and row count are observed on the table write: the
+            # micro-batch is detected and read once, in one Spark action
+            seen = Observation(f"{table}:{batch_id}")
+            cells = {**confusion_sums("predicted", "label"), "rows": F.count("*")}
+            observed = score(micro_batch).observe(seen, *(c.alias(k) for k, c in cells.items()))
+            out = batch.flag_detections(observed)
+            if catalog.table_exists(table):
+                catalog.insert_data(table, out)
+            else:
+                catalog.create_table(table, out)
+            got = seen.get
+            sums[batch_id] = [got[k] or 0 for k in cells]
+
+        # T3: replay -> inline injection -> foreachBatch scoring -> append table
         stream = read_replay_stream(spark, src_dir)
         injected = streaming_injection(stream, job.anomaly_settings, start_epoch, seed=job.seed)
-        query = score_stream(injected, model, feats, sink, ckpt_dir)
+        query = (
+            injected.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
         release.callback(query.stop)
         status = await_stream(query, timeout_s=timeout_s)
 

@@ -17,10 +17,10 @@ the intended semantics rebuilt Spark-first:
   independent; equal to the batch selection at 100%). Step/lowered stats
   come from the setting's overrides only.
 - T3 detection: the reference re-reads and re-scores the WHOLE table every
-  second (execute_calls.py:941-970). Here ``foreachBatch`` scores only the
-  new micro-batch with the pre-trained broadcast model; the job's sink
-  appends it and counts its confusion cells on that write, so the job
-  evaluates its detector without reading its table back.
+  second (execute_calls.py:941-970). Here ``plans.stream.run_stream``'s
+  ``foreachBatch`` sink scores only the new micro-batch, imputed, with the
+  batch job's detector step, then appends it and counts its confusion
+  cells on that write: the job never reads its table back.
 - T4 status via StreamingQuery.lastProgress; a failed or timed-out query
   raises.
 - T5 (extension beyond the reference): watermarked tumbling-window
@@ -30,7 +30,6 @@ the intended semantics rebuilt Spark-first:
 from __future__ import annotations
 
 import time
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,33 +56,6 @@ def read_replay_stream(spark: SparkSession, path: str) -> DataFrame:
 
     schema = _io.read_parquet_memo(spark, path).schema
     return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
-
-
-def score_stream(
-    stream_df: DataFrame,
-    model,
-    feature_cols: list[str],
-    sink: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-):
-    """T3: foreachBatch scoring with the pre-trained broadcast model, run
-    to the end of the staged source (availableNow). The sink receives each
-    non-empty micro-batch, ``score`` and ``predicted`` joined on, and its id."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        det = model.detect(batch_df, feature_cols)
-        scored = batch_df.join(det.select("id", "score", "predicted"), "id")
-        sink(scored, batch_id)
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def windowed_counts(
@@ -270,9 +242,9 @@ def streaming_zscore_detector(
     mean/variance via Welford's algorithm in ``applyInPandasWithState``,
     flagging |z| > threshold against the state BEFORE the event updates it.
 
-    This is the adaptive complement to ``score_stream``'s pre-trained
-    static model: no training pass, the baseline tracks each key forever,
-    and state is O(1) per key (count, mean, M2) — the only viable shape
+    This is the adaptive complement to ``plans.stream.run_stream``'s
+    pre-trained static model: no training pass, the baseline tracks each
+    key forever, and state is O(1) per key (count, mean, M2) — the only viable shape
     for an unbounded keyed stream. Event-time correctness: within a
     micro-batch events are folded in event-time order, so a replay of the
     same stream produces identical flags regardless of batch boundaries

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from exact_spark.ml.models import DetectorModel
 from exact_spark.operators.inject import AnomalySetting
 from exact_spark.plans import batch as batch_mod
-from exact_spark.plans import stream as stream_mod
 from exact_spark.plans.api import EngineAPI
 from exact_spark.plans.batch import BatchJob, run_batch
 from exact_spark.plans.stream import run_stream
@@ -24,14 +23,28 @@ from exact_spark.streaming.replay import (
 )
 
 
+def _write_series(path, n: int, blank=lambda i: False) -> str:
+    """An ``n``-row ``t,v,lab`` sine series, one row a minute; ``v`` is
+    blank where ``blank(i)``."""
+    lines = ["t,v,lab"]
+    for i in range(n):
+        v = "" if blank(i) else f"{10 + math.sin(i / 15.0):.6f}"
+        lines.append(f"{1700000000 + i * 60},{v},0")
+    path.write_text("\n".join(lines) + "\n")
+    return str(path)
+
+
 @pytest.fixture(scope="module")
 def csv_path(tmp_path_factory):
-    p = tmp_path_factory.mktemp("stream") / "series.csv"
-    lines = ["t,v,lab"]
-    for i in range(600):
-        lines.append(f"{1700000000 + i * 60},{10 + math.sin(i / 15.0):.6f},0")
-    p.write_text("\n".join(lines) + "\n")
-    return str(p)
+    return _write_series(tmp_path_factory.mktemp("stream") / "series.csv", 600)
+
+
+@pytest.fixture(scope="module")
+def gappy_path(tmp_path_factory):
+    """The 600-row series with 12 blank values, 2 of them (rows 407 and
+    457) in ``_custom_job``'s injected rows."""
+    return _write_series(tmp_path_factory.mktemp("gappy") / "series.csv", 600,
+                         blank=lambda i: i % 50 == 7)
 
 
 def _custom_job(name: str, csv_path: str) -> BatchJob:
@@ -93,8 +106,8 @@ class _Detector(DetectorModel):
 
 
 def _patch_model(monkeypatch, **kw):
-    for mod in (batch_mod, stream_mod):
-        monkeypatch.setattr(mod, "get_model", lambda name, **params: _Detector(**kw))
+    # both job kinds take their model from plans.batch
+    monkeypatch.setattr(batch_mod, "get_model", lambda name, **params: _Detector(**kw))
 
 
 @pytest.mark.parametrize("flag", [0, 1], ids=["never_flags", "always_flags"])
@@ -160,6 +173,79 @@ def test_failed_stream_job_releases_cached_frames(spark, csv_path, tmp_path):
     with pytest.raises(KeyError):
         run_stream(spark, catalog, job, str(tmp_path / "work"), chunks=2)
     assert set(persistent()) <= before
+
+
+@pytest.mark.parametrize("kind", ["batch", "stream"])
+@pytest.mark.parametrize("n_rows", [0, 1], ids=["header_only", "one_row"])
+def test_fewer_than_two_rows_raise_before_any_work(spark, tmp_path, kind, n_rows):
+    """A job needs at least 2 rows: with fewer its train slice is empty.
+    Both job kinds raise before injection, staging or training, and leave
+    no table, no cached frame and no stream scratch."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent())
+    catalog = JobCatalog(spark, str(tmp_path / "wh"))
+    job = BatchJob(job_name="tiny", filepath=_write_series(tmp_path / "tiny.csv", n_rows),
+                   time_col="t", label_col="lab")
+    work = tmp_path / "work"
+    with pytest.raises(ValueError, match=f"job 'tiny' has {n_rows} rows"):
+        if kind == "batch":
+            run_batch(spark, catalog, job, str(tmp_path / "out"))
+        else:
+            run_stream(spark, catalog, job, str(work), chunks=2)
+    assert not catalog.table_exists(catalog.table_name("tiny", stream=kind == "stream"))
+    assert set(persistent()) <= before
+    assert not (work / "source").exists() and not (work / "checkpoint").exists()
+
+
+@pytest.mark.parametrize("model", ["threshold", "isolation_forest"])
+def test_both_job_kinds_score_imputed_rows_and_store_blanks(spark, gappy_path, tmp_path,
+                                                           model):
+    """Blank values are imputed with the train-fitted fill before training
+    and scoring in both job kinds, so every row gets a flag and a confusion
+    cell; neither table stores an imputed value."""
+    catalog = JobCatalog(spark, str(tmp_path / "wh"))
+    job = _custom_job("gappy", gappy_path)
+    job.model = model
+    batch = run_batch(spark, catalog, job, str(tmp_path / "out"))
+    stream = run_stream(spark, catalog, job, str(tmp_path / "work"), chunks=6)
+    for result in (batch, stream):
+        m = result["metrics_all"]
+        assert m["tp"] + m["tn"] + m["fp"] + m["fn"] == result["rows"] == 600
+        stored = catalog.read_data(result["table_name"])
+        assert stored.filter(F.col("is_anomaly").isNull()).count() == 0
+        assert stored.filter(F.col("v").isNull()).count() == 12
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    # the status tracker is fed by the listener bus: drain it before counting
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spark_jobs_per_job_pinned(spark, gappy_path, tmp_path):
+    """Spark jobs of one batch and one stream job (``threshold``, the
+    gappy series), counted by job group: the jobs a call runs on the
+    caller's thread are capped at their count when pinned (the same at
+    local[2] and local[4]); the stream query's own group, keyed by its run
+    id, holds exactly 2 jobs per micro-batch (the detector's broadcast and
+    the table write) plus 1 for the table's creation."""
+    sc = spark.sparkContext
+    catalog = JobCatalog(spark, str(tmp_path / "wh"))
+    job = _custom_job("pinned", gappy_path)
+    try:
+        sc.setJobGroup("pinned_batch", "pinned batch job")
+        run_batch(spark, catalog, job, str(tmp_path / "out"))
+        sc.setJobGroup("pinned_stream", "pinned stream job")
+        result = run_stream(spark, catalog, job, str(tmp_path / "work"), chunks=6)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert _jobs_in_group(spark, "pinned_batch") <= 29
+    assert _jobs_in_group(spark, "pinned_stream") <= 23
+    progress = result["stream_status"]["lastProgress"]
+    micro_batches = progress["batchId"] + 1
+    assert micro_batches == 6
+    assert _jobs_in_group(spark, progress["runId"]) == 2 * micro_batches + 1
 
 
 def test_interarrival_and_windowed_counts(spark, csv_path, tmp_path):
