@@ -40,8 +40,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    # Streaming-demo checkpoints are EPHEMERAL per-run scratch (each demo
-    # creates a fresh dir and deletes it in its finally — a reused
+    # Streaming-demo checkpoints are EPHEMERAL per-run scratch (the bounded
+    # runner creates a fresh dir per query and removes it — a reused
     # checkpoint would silently no-op the replay), so fsyncing their
     # offset/commit/state files to disk buys zero durability and costs
     # ~1-3 s of commit latency per demo (VERDICT r11 item 5). Point the
@@ -51,7 +51,7 @@ def main() -> None:
     if os.path.isdir("/dev/shm"):
         os.environ.setdefault("SPARK_GRAFT_CKPT_DIR", "/dev/shm/exact_spark_ckpt")
     # a crashed demo never reaches its cleanup; reclaim its leftovers
-    from exact_spark.streaming import sweep_stale_work_dirs
+    from exact_spark.streaming.replay import sweep_stale_work_dirs
 
     sweep_stale_work_dirs()
 

@@ -9,8 +9,9 @@ The job core is shared with ``run_batch``: ingest (``batch.job_input``),
 the injection transform (``operators.inject``), the detector step
 (``batch.train_fill``, ``batch.train_detector``) and the evaluation kernel
 (``operators.metrics``), applied as the sink writes each micro-batch: the
-table is never read back. A failed job leaves the rows written so far,
-not its staged source or checkpoint.
+table is never read back. The query runs through ``replay.run_bounded``.
+A failed job leaves the rows written so far, not its staged source or
+checkpoint.
 """
 
 from __future__ import annotations
@@ -28,9 +29,9 @@ from exact_spark.plans import batch
 from exact_spark.sources.catalog import JobCatalog
 from exact_spark.sources.ingest import feature_columns
 from exact_spark.streaming.replay import (
-    await_stream,
     read_replay_stream,
     replay_rate,
+    run_bounded,
     stage_stream_source,
 )
 
@@ -51,8 +52,7 @@ def run_stream(
     sums: dict[int, list[int]] = {}
 
     with ExitStack() as release:
-        for scratch in (src_dir, ckpt_dir):  # removed last, after the query stops
-            release.callback(shutil.rmtree, scratch, ignore_errors=True)
+        release.callback(shutil.rmtree, src_dir, ignore_errors=True)
         # canon feeds the span aggregate, the staging write (T1), the fill and the fit
         canon, start_epoch, end_epoch, n_rows = batch.job_input(spark, job, release)
         stage_stream_source(canon, src_dir, chunks=chunks)
@@ -79,14 +79,7 @@ def run_stream(
         # T3: replay -> inline injection -> foreachBatch scoring -> append table
         stream = read_replay_stream(spark, src_dir)
         injected = streaming_injection(stream, job.anomaly_settings, start_epoch, seed=job.seed)
-        query = (
-            injected.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        release.callback(query.stop)
-        status = await_stream(query, timeout_s=timeout_s)
+        status = run_bounded(injected, sink, checkpoint=ckpt_dir, timeout_s=timeout_s)
 
     *cells, rows = [sum(c) for c in zip(*sums.values())] or [0] * 5
     if rows != n_rows:

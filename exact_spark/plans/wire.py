@@ -41,9 +41,10 @@ Concurrency contract:
   outliving the connection that submitted them.
 - Session state a request changes is serialized: ``run-sql``'s temp views
   (``EngineAPI.run_sql``) and the streaming demos' shuffle-partition
-  override (``streaming._state_partitions``) each sit under one
-  module-level lock. The override is session-wide while it is held, so a
-  request planned meanwhile runs its shuffles at that partition count.
+  override (``replay._state_partitions``) each sit under one module-level
+  lock. The override is held only across a stateful query's start
+  (``replay.run_bounded``), which fixes the query's state-partition count;
+  only a request planned during that start runs its shuffles at it.
 - Tables are plain parquet with no snapshot isolation: a ``get-data`` that
   races a ``cancel-job`` or a stream table's compaction may answer with a
   JSON error instead of rows (``JobCatalog.compact_table``'s caveat); the

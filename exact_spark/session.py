@@ -99,7 +99,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     near-empty tasks, while on a cluster the count grows with the executors
     and AQE coalescing trims it per query. Idempotent, and applied once per
     application (memoized on applicationId); code that overrides a key
-    temporarily, like the streaming demos' partition override, restores it.
+    temporarily restores it, like the streaming demos' partition override,
+    which is held only across a stateful query's start.
     """
     try:
         app = spark.sparkContext.applicationId

@@ -1,9 +1,13 @@
 """Structured Streaming operators (SURVEY.md §2.9, T1-T5).
 
 ``replay`` holds the building blocks; ``stream_replay_e2e`` below is the
-driver-visible bounded end-to-end run.
+driver-visible bounded end-to-end run. Every bounded query, each demo here
+and ``plans.stream.run_stream``'s, opens its staged source with
+``replay.read_replay_stream`` and runs through ``replay.run_bounded``: one
+start, wait, stop and cleanup. A query that fails or runs past its
+timeout is stopped and raises, so no demo reads a partial result.
 
-A bounded availableNow replay is a DETERMINISTIC function of the source
+A bounded replay is a DETERMINISTIC function of the source
 table, so where the streaming semantics are themselves data-determined
 (dedup by key, stateless enrich join, watermark-finalized windows,
 gap sessions — custom AND built-in, stream-stream interval joins) the
@@ -18,12 +22,8 @@ fold) stay rows-only.
 
 from __future__ import annotations
 
-import contextlib
 import math
 import pathlib
-import shutil
-import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,88 +31,16 @@ from pyspark.sql import functions as F
 from exact_spark import io
 from exact_spark.functions import sql_fround
 from exact_spark.registry import register
-
-# State-store partition count for the BOUNDED streaming demos. A stateful
-# streaming query creates one state store (plus one Arrow Python worker for
-# applyInPandasWithState) per shuffle partition — a per-QUERY fixed cost
-# paid again for every fresh checkpoint dir, independent of data volume.
-# These demos replay a few-thousand-row slice over a few hundred keys, so
-# the session default (32) spends ~6-8s of pure store/worker spin-up per
-# run for parallelism the data cannot use (measured on stream_online_zscore:
-# cold micro-batch 9.2s at 32 partitions -> 4.2s at 4; warm 1.7s -> 1.4s).
-# At production scale the right number is sized to key cardinality x state
-# size — keep the session default there; this constant is the demo-scale
-# analog. Per-key folds (Welford, dedup, sessionization, windowed aggs,
-# equi-keyed interval joins) are partition-count invariant, so results
-# never change.
-_DEMO_STATE_PARTITIONS = 4
-
-
-def _work_dir(prefix: str) -> pathlib.Path:
-    """Per-run scratch dir for a bounded demo's checkpoint. Checkpoints
-    here are EPHEMERAL by construction — each run makes a fresh dir and
-    removes it in its ``finally`` (a reused
-    checkpoint would mark the offsets committed and the replay would be a
-    silent no-op) — so fsyncing the offset/commit/state files to disk buys
-    zero durability while costing ~1-3 s of commit latency per demo
-    (~25 s across the 10-query family). ``SPARK_GRAFT_CKPT_DIR`` points
-    the scratch at a faster filesystem (tmpfs in the bench); unset, the
-    default tempdir behavior is unchanged. On a real cluster, durable
-    checkpoints are the contract — leave the env unset there."""
-    import os
-    import tempfile
-
-    base = os.environ.get("SPARK_GRAFT_CKPT_DIR")
-    if base:
-        pathlib.Path(base).mkdir(parents=True, exist_ok=True)
-    return pathlib.Path(tempfile.mkdtemp(prefix=prefix, dir=base or None))
-
-
-# A bounded demo removes its scratch dir in its finally within seconds, so
-# a dir untouched for an hour is a crashed demo's leftover; younger dirs
-# may belong to a concurrent process and are left alone.
-_WORK_DIR_STALE_MIN_AGE_S = 3600.0
-
-
-def sweep_stale_work_dirs() -> None:
-    """Best-effort removal of ``exact_spark_*`` scratch dirs under
-    ``SPARK_GRAFT_CKPT_DIR`` whose mtime is older than
-    _WORK_DIR_STALE_MIN_AGE_S (the age-gated discipline of
-    artifacts._gc_expired_fingerprints). A tmpfs checkpoint base is RAM,
-    and no reaper clears it between runs."""
-    import os
-    import time
-
-    base = os.environ.get("SPARK_GRAFT_CKPT_DIR")
-    if not base:
-        return
-    now = time.time()
-    for d in pathlib.Path(base).glob("exact_spark_*"):
-        try:
-            age = now - d.stat().st_mtime
-        except OSError:
-            continue  # vanished concurrently
-        if age >= _WORK_DIR_STALE_MIN_AGE_S:
-            shutil.rmtree(d, ignore_errors=True)
-
-
-_STATE_PARTITIONS_LOCK = threading.RLock()
-
-
-@contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int = _DEMO_STATE_PARTITIONS):
-    """Temporarily size ``spark.sql.shuffle.partitions`` for a stateful
-    streaming query start (the partition count is baked into the state
-    store layout at first start). Restores the session value on exit.
-    Held under one lock: two threads interleaving save/set/restore would
-    leave the session at ``n`` for good."""
-    with _STATE_PARTITIONS_LOCK:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+from exact_spark.streaming.replay import (
+    _work_dir,
+    deduplicated_stream,
+    read_replay_stream,
+    run_bounded,
+    stage_stream_source,
+    stateful_session_counts,
+    streaming_zscore_detector,
+    windowed_counts,
+)
 
 
 def _staged_source(spark: SparkSession, sf_dir: str, tag: str, build_df, chunks: int = 2) -> str:
@@ -124,19 +52,12 @@ def _staged_source(spark: SparkSession, sf_dir: str, tag: str, build_df, chunks:
     slice. Checkpoints stay per-run (a reused checkpoint would mark the
     offsets committed and the replay would be a silent no-op); only the
     SOURCE is shared. Slices with identical parameters share one tag."""
-    import pathlib as _pl
-
     from exact_spark.artifacts import materialize
 
-    def build(staging: str) -> None:
-        df = build_df()
-        staged = (
-            df.repartitionByRange(chunks, "timestamp") if chunks > 1 else df.coalesce(1)
-        )
-        staged.write.parquet(staging)
-
     return materialize(
-        _pl.Path(sf_dir).resolve() / "events.parquet", "ssrc_" + tag, build
+        pathlib.Path(sf_dir).resolve() / "events.parquet",
+        "ssrc_" + tag,
+        lambda staging: stage_stream_source(build_df(), staging, chunks),
     )
 
 
@@ -160,7 +81,6 @@ def _bounded_events(
     demos: first ``days`` of the series, every ``user_mod``-th user, with a
     proper event-time column regardless of the parquet timestamp storage
     generation (dtype-driven epoch handling)."""
-    from exact_spark import io
     from exact_spark.functions import epoch_micros
 
     ev = io.load(spark, sf_dir, "events")
@@ -194,46 +114,25 @@ def _bounded_events(
     "boundaries; result is the per-user surviving-event count.",
 )
 def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from exact_spark.streaming.replay import deduplicated_stream
-
-    work = _work_dir("exact_spark_sdedup_")
-    try:
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "sdedup_d2_m5_c2",
-            lambda: (
-                lambda base: base.unionByName(
-                    base.filter(F.col("event_id") % 5 == 0)  # replayed arrivals
-                )
-            )(_bounded_events(spark, sf_dir, days=2.0, user_mod=5)),
-            chunks=2,
-        )
-        schema = io.read_parquet_memo(spark, src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        deduped = deduplicated_stream(stream, ["event_id"], watermark="30 minutes")
-        with _state_partitions(spark):
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName("sdedup_out")
-                .outputMode("append")
-                .option("checkpointLocation", str(work / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+    src = _staged_source(
+        spark,
+        sf_dir,
+        "sdedup_d2_m5_c2",
+        lambda: (
+            lambda base: base.unionByName(
+                base.filter(F.col("event_id") % 5 == 0)  # replayed arrivals
             )
-            q.awaitTermination(120)
-        out = spark.sql("SELECT * FROM sdedup_out")
-        return (
-            out.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_unique_events"))
-            .orderBy("user_id")
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        )(_bounded_events(spark, sf_dir, days=2.0, user_mod=5)),
+    )
+    deduped = deduplicated_stream(
+        read_replay_stream(spark, src), ["event_id"], watermark="30 minutes"
+    )
+    out = run_bounded(deduped, stateful=True)
+    return (
+        out.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_unique_events"))
+        .orderBy("user_id")
+    )
 
 
 @register(
@@ -279,48 +178,27 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark finality rule.",
 )
 def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from exact_spark.streaming.replay import stateful_session_counts
-
-    work = _work_dir("exact_spark_ssess_")
-    try:
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "ev_d3_m5_c2",
-            lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=5),
-            chunks=2,
-        )
-        schema = io.read_parquet_memo(spark, src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sessions = stateful_session_counts(
-            stream, gap_seconds=4 * 3600.0, watermark="2 hours", key_col="user_id"
-        )
-        with _state_partitions(spark):
-            q = (
-                sessions.writeStream.format("memory")
-                .queryName("ssess_out")
-                .outputMode("append")
-                .option("checkpointLocation", str(work / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        # bounds emit as float seconds from the pandas fold (~1e-7 s ulp
-        # error from the ns/1e9 path); round back to the exact integer
-        # micros the parquet stores so the hash compare is drift-free
-        return spark.sql(
-            "SELECT key, "
-            "CAST(FLOOR(session_start * 1000000.0 + 0.5) AS LONG) AS session_start_us, "
-            "CAST(FLOOR(session_end * 1000000.0 + 0.5) AS LONG) AS session_end_us, "
-            "n_events "
-            "FROM ssess_out ORDER BY key, session_start_us"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    src = _staged_source(
+        spark, sf_dir, "ev_d3_m5_c2", lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=5)
+    )
+    sessions = stateful_session_counts(
+        read_replay_stream(spark, src),
+        gap_seconds=4 * 3600.0,
+        watermark="2 hours",
+        key_col="user_id",
+    )
+    out = run_bounded(sessions, stateful=True)
+    # bounds emit as float seconds from the pandas fold (~1e-7 s ulp
+    # error from the ns/1e9 path); round back to the exact integer
+    # micros the parquet stores so the hash compare is drift-free
+    return spark.sql(
+        "SELECT key, "
+        "CAST(FLOOR(session_start * 1000000.0 + 0.5) AS LONG) AS session_start_us, "
+        "CAST(FLOOR(session_end * 1000000.0 + 0.5) AS LONG) AS session_end_us, "
+        "n_events "
+        "FROM {out} ORDER BY key, session_start_us",
+        out=out,
+    )
 
 
 @register(
@@ -333,43 +211,25 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Result is the per-user event/flag tally.",
 )
 def stream_online_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from exact_spark.streaming.replay import streaming_zscore_detector
-
-    work = _work_dir("exact_spark_szscore_")
-    try:
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "ev_d4_m5_c1",
-            lambda: _bounded_events(spark, sf_dir, days=4.0, user_mod=5),
-            chunks=1,
+    src = _staged_source(
+        spark,
+        sf_dir,
+        "ev_d4_m5_c1",
+        lambda: _bounded_events(spark, sf_dir, days=4.0, user_mod=5),
+        chunks=1,
+    )
+    scored = streaming_zscore_detector(
+        read_replay_stream(spark, src), threshold=2.5, min_obs=10, key_col="user_id"
+    )
+    out = run_bounded(scored, stateful=True)
+    return (
+        out.groupBy("key")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("is_anomaly").cast("long")).alias("n_flagged"),
         )
-        schema = io.read_parquet_memo(spark, src).schema
-        stream = spark.readStream.schema(schema).parquet(src)
-        scored = streaming_zscore_detector(
-            stream, threshold=2.5, min_obs=10, key_col="user_id"
-        )
-        with _state_partitions(spark):
-            q = (
-                scored.writeStream.format("memory")
-                .queryName("szscore_out")
-                .outputMode("append")
-                .option("checkpointLocation", str(work / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        out = spark.sql("SELECT * FROM szscore_out")
-        return (
-            out.groupBy("key")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("is_anomaly").cast("long")).alias("n_flagged"),
-            )
-            .orderBy("key")
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .orderBy("key")
+    )
 
 
 @register(
@@ -381,7 +241,7 @@ def stream_online_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(T2, row-local md5 percentage selection), score each micro-batch via "
     "foreachBatch with the broadcast model (only new rows — never the "
     "reference's full-table re-scan), append to the job_stream_ table, "
-    "evaluate. Bounded with availableNow.",
+    "evaluate. Bounded: the query stops once the staged source is read.",
 )
 def stream_replay_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.operators.inject import AnomalySetting
@@ -390,8 +250,7 @@ def stream_replay_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.plans.stream import run_stream
     from exact_spark.sources.catalog import JobCatalog
 
-    work = _work_dir("exact_spark_stream_")
-    try:
+    with _work_dir("exact_spark_stream_") as work:
         # stage the canonical series as the job's input file (the stream
         # path ingests files, simulator.py:133-219); bounded to the first
         # 4k ids — a demo replay, deterministic under the dense-id order
@@ -440,8 +299,6 @@ def stream_replay_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="table_name string, rows long, tp long, "
             "fp long, fn long, stream_finished boolean",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _user_cms_cells(df: DataFrame) -> DataFrame:
@@ -519,72 +376,53 @@ def _sql_cms_maintain() -> str:
 def stream_cms_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact_spark.operators.text import _CMS_ROWS, _cms_idx
 
-    work = _work_dir("exact_spark_scms_")
-    try:
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "ev_d3_m3_c3",
-            lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=3),
-            chunks=3,
-        )
-        schema = io.read_parquet_memo(spark, src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sketch: dict[tuple[int, int], int] = {}
-        n_batches = [0]
+    src = _staged_source(
+        spark,
+        sf_dir,
+        "ev_d3_m3_c3",
+        lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=3),
+        chunks=3,
+    )
+    sketch: dict[tuple[int, int], int] = {}
+    n_batches = [0]
 
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            n_batches[0] += 1
-            for row in _user_cms_cells(batch_df).collect():
-                k = (row["r"], row["idx"])
-                sketch[k] = sketch.get(k, 0) + row["c"]
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        n_batches[0] += 1
+        for row in _user_cms_cells(batch_df).collect():
+            k = (row["r"], row["idx"])
+            sketch[k] = sketch.get(k, 0) + row["c"]
 
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", str(work / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    run_bounded(read_replay_stream(spark, src), fold)
+    staged = io.read_parquet_memo(spark, src)
+    direct = {(r["r"], r["idx"]): r["c"] for r in _user_cms_cells(staged).collect()}
+    matches = int(direct == sketch)
+    # top-3 exact users: maintained-sketch estimate must cover truth
+    top = (
+        staged.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("true_c"))
+        .orderBy(F.col("true_c").desc(), "user_id")
+        .limit(3)
+        .collect()
+    )
+    import hashlib
 
-        staged = io.read_parquet_memo(spark, src)
-        direct = {
-            (r["r"], r["idx"]): r["c"] for r in _user_cms_cells(staged).collect()
-        }
-        matches = int(direct == sketch)
-        # top-3 exact users: maintained-sketch estimate must cover truth
-        top = (
-            staged.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("true_c"))
-            .orderBy(F.col("true_c").desc(), "user_id")
-            .limit(3)
-            .collect()
-        )
-        import hashlib
+    def est(uid: int) -> int:
+        vals = []
+        for r in range(_CMS_ROWS):
+            h = hashlib.md5(f"r{r}:{uid}".encode()).hexdigest()
+            vals.append(sketch.get((r, int(h[:2], 16)), 0))
+        return min(vals)
 
-        def est(uid: int) -> int:
-            vals = []
-            for r in range(_CMS_ROWS):
-                h = hashlib.md5(f"r{r}:{uid}".encode()).hexdigest()
-                vals.append(sketch.get((r, int(h[:2], 16)), 0))
-            return min(vals)
-
-        rows = [
-            ("n_batches", float(n_batches[0])),
-            ("n_cells", float(len(sketch))),
-            ("total_mass_per_row", float(sum(v for (r, _), v in sketch.items() if r == 0))),
-            ("matches_direct", float(matches)),
-        ] + [
-            (f"covers_user_{t['user_id']}", float(int(est(t["user_id"]) >= t["true_c"])))
-            for t in top
-        ]
-        return spark.createDataFrame(rows, "metric string, value double")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    rows = [
+        ("n_batches", float(n_batches[0])),
+        ("n_cells", float(len(sketch))),
+        ("total_mass_per_row", float(sum(v for (r, _), v in sketch.items() if r == 0))),
+        ("matches_direct", float(matches)),
+    ] + [
+        (f"covers_user_{t['user_id']}", float(int(est(t["user_id"]) >= t["true_c"])))
+        for t in top
+    ]
+    return spark.createDataFrame(rows, "metric string, value double")
 
 
 @register(
@@ -607,42 +445,21 @@ def stream_cms_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "windows regardless of stream length.",
 )
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from exact_spark.streaming.replay import windowed_counts
-
-    work = _work_dir("exact_spark_swin_")
-    try:
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "swin_d3_m5_c2",
-            lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=5).withColumn(
-                "is_anomaly", F.lit(False)
-            ),
-            chunks=2,
-        )
-        schema = io.read_parquet_memo(spark, src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        win = windowed_counts(stream, window="6 hours", watermark="30 minutes")
-        with _state_partitions(spark):
-            q = (
-                win.writeStream.format("memory")
-                .queryName("swin_out")
-                .outputMode("append")
-                .option("checkpointLocation", str(work / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        return spark.sql(
-            "SELECT CAST(window_start AS LONG) AS window_start_epoch, "
-            "n_events, n_anomalies FROM swin_out ORDER BY window_start"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    src = _staged_source(
+        spark,
+        sf_dir,
+        "swin_d3_m5_c2",
+        lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=5).withColumn(
+            "is_anomaly", F.lit(False)
+        ),
+    )
+    win = windowed_counts(read_replay_stream(spark, src), window="6 hours", watermark="30 minutes")
+    out = run_bounded(win, stateful=True)
+    return spark.sql(
+        "SELECT CAST(window_start AS LONG) AS window_start_epoch, "
+        "n_events, n_anomalies FROM {out} ORDER BY window_start",
+        out=out,
+    )
 
 
 @register(
@@ -671,50 +488,34 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the per-user event/flag tally.",
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = _work_dir("exact_spark_senrich_")
-    try:
-        base = _bounded_events(spark, sf_dir, days=4.0, user_mod=5)
-        # static dimension: per-user historical profile (fixed-point mean)
-        profile = base.groupBy(F.col("user_id").alias("p_user")).agg(
-            (
-                F.sum(F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long"))
-                / (F.lit(100.0) * F.count(F.lit(1)))
-            ).alias("hist_mean"),
-            F.count(F.lit(1)).alias("hist_n"),
-        )
-        slice_dir = _staged_source(
+    base = _bounded_events(spark, sf_dir, days=4.0, user_mod=5)
+    # static dimension: per-user historical profile (fixed-point mean)
+    profile = base.groupBy(F.col("user_id").alias("p_user")).agg(
+        (
+            F.sum(F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long"))
+            / (F.lit(100.0) * F.count(F.lit(1)))
+        ).alias("hist_mean"),
+        F.count(F.lit(1)).alias("hist_n"),
+    )
+    stream = read_replay_stream(
+        spark,
+        _staged_source(
             spark,
             sf_dir,
             "ev_d4_m5_c2",
             lambda: _bounded_events(spark, sf_dir, days=4.0, user_mod=5),
-            chunks=2,
-        )
-        schema = io.read_parquet_memo(spark, slice_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(slice_dir)
-        )
-        enriched = stream.join(
-            F.broadcast(profile), stream.user_id == F.col("p_user")
-        ).withColumn("flag", F.col("value") > 1.5 * F.col("hist_mean"))
-        with _state_partitions(spark):
-            q = (
-                enriched.writeStream.format("memory")
-                .queryName("senrich_out")
-                .outputMode("append")
-                .option("checkpointLocation", str(work / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        return spark.sql(
-            "SELECT user_id, count(*) AS n_events, "
-            "CAST(sum(CAST(flag AS INT)) AS BIGINT) AS n_flagged "
-            "FROM senrich_out GROUP BY user_id ORDER BY user_id"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
+    enriched = stream.join(
+        F.broadcast(profile), stream.user_id == F.col("p_user")
+    ).withColumn("flag", F.col("value") > 1.5 * F.col("hist_mean"))
+    out = run_bounded(enriched, stateful=True)
+    return spark.sql(
+        "SELECT user_id, count(*) AS n_events, "
+        "CAST(sum(CAST(flag AS INT)) AS BIGINT) AS n_flagged "
+        "FROM {out} GROUP BY user_id ORDER BY user_id",
+        out=out,
+    )
 
 
 @register(
@@ -782,94 +583,77 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bins = 20
-    work = _work_dir("exact_spark_sdrift_")
-    try:
-        base = _bounded_events(spark, sf_dir, days=3.0, user_mod=3)
-        # reference = day 1 (fit window), replay = the full slice
-        lo_ts = base.agg(F.min("timestamp")).collect()[0][0]
-        import datetime as _dt
+    base = _bounded_events(spark, sf_dir, days=3.0, user_mod=3)
+    # reference = day 1 (fit window), replay = the full slice
+    lo_ts = base.agg(F.min("timestamp")).collect()[0][0]
+    import datetime as _dt
 
-        day1_end = lo_ts + _dt.timedelta(days=1)
-        ref = base.filter(F.col("timestamp") < F.lit(day1_end))
-        span = ref.agg(F.min("value").alias("lo"), F.max("value").alias("hi")).collect()[0]
-        lo, hi = float(span["lo"]), float(span["hi"])
-        width = (hi - lo) / n_bins or 1.0
+    day1_end = lo_ts + _dt.timedelta(days=1)
+    ref = base.filter(F.col("timestamp") < F.lit(day1_end))
+    span = ref.agg(F.min("value").alias("lo"), F.max("value").alias("hi")).collect()[0]
+    lo, hi = float(span["lo"]), float(span["hi"])
+    width = (hi - lo) / n_bins or 1.0
 
-        def bin_col():
-            return F.least(
-                F.lit(n_bins - 1),
-                F.greatest(
-                    F.lit(0), F.floor((F.col("value") - F.lit(lo)) / F.lit(width)).cast("int")
-                ),
-            ).alias("bin")
+    def bin_col():
+        return F.least(
+            F.lit(n_bins - 1),
+            F.greatest(
+                F.lit(0), F.floor((F.col("value") - F.lit(lo)) / F.lit(width)).cast("int")
+            ),
+        ).alias("bin")
 
-        ref_counts = {
-            r["bin"]: r["c"]
-            for r in ref.groupBy(bin_col()).agg(F.count(F.lit(1)).alias("c")).collect()
-        }
+    ref_counts = {
+        r["bin"]: r["c"]
+        for r in ref.groupBy(bin_col()).agg(F.count(F.lit(1)).alias("c")).collect()
+    }
 
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "ev_d3_m3_c3",
-            lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=3),
-            chunks=3,
-        )
-        schema = io.read_parquet_memo(spark, src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        maintained: dict[int, int] = {}
-        n_batches = [0]
+    src = _staged_source(
+        spark,
+        sf_dir,
+        "ev_d3_m3_c3",
+        lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=3),
+        chunks=3,
+    )
+    maintained: dict[int, int] = {}
+    n_batches = [0]
 
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            n_batches[0] += 1
-            for r in batch_df.groupBy(bin_col()).agg(F.count(F.lit(1)).alias("c")).collect():
-                maintained[r["bin"]] = maintained.get(r["bin"], 0) + r["c"]
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        n_batches[0] += 1
+        for r in batch_df.groupBy(bin_col()).agg(F.count(F.lit(1)).alias("c")).collect():
+            maintained[r["bin"]] = maintained.get(r["bin"], 0) + r["c"]
 
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", str(work / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        direct = {
-            r["bin"]: r["c"]
-            for r in io.read_parquet_memo(spark, src)
-            .groupBy(bin_col())
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        matches = int(direct == maintained)
-        tot_ref = sum(ref_counts.values())
-        tot_cur = sum(maintained.values())
-        drift = 0.0
-        for b in range(n_bins):
-            p = ref_counts.get(b, 0) / tot_ref
-            qv = maintained.get(b, 0) / tot_cur
-            if p + qv > 0:
-                drift += (p - qv) * (p - qv) / (p + qv + 1e-9)
-        rows = [
-            ("n_batches", float(n_batches[0])),
-            ("n_bins_active", float(len(maintained))),
-            ("matches_direct", float(matches)),
-            # fround convention (floor(x*1e6+0.5)/1e6), NOT Python round():
-            # banker's rounding is not what the oracle's SQL computes
-            ("drift_vs_reference", math.floor(drift * 1e6 + 0.5) / 1e6),
-        ]
-        return spark.createDataFrame(rows, "metric string, value double")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    run_bounded(read_replay_stream(spark, src), fold)
+    direct = {
+        r["bin"]: r["c"]
+        for r in io.read_parquet_memo(spark, src)
+        .groupBy(bin_col())
+        .agg(F.count(F.lit(1)).alias("c"))
+        .collect()
+    }
+    matches = int(direct == maintained)
+    tot_ref = sum(ref_counts.values())
+    tot_cur = sum(maintained.values())
+    drift = 0.0
+    for b in range(n_bins):
+        p = ref_counts.get(b, 0) / tot_ref
+        qv = maintained.get(b, 0) / tot_cur
+        if p + qv > 0:
+            drift += (p - qv) * (p - qv) / (p + qv + 1e-9)
+    rows = [
+        ("n_batches", float(n_batches[0])),
+        ("n_bins_active", float(len(maintained))),
+        ("matches_direct", float(matches)),
+        # fround convention (floor(x*1e6+0.5)/1e6), NOT Python round():
+        # banker's rounding is not what the oracle's SQL computes
+        ("drift_vs_reference", math.floor(drift * 1e6 + 0.5) / 1e6),
+    ]
+    return spark.createDataFrame(rows, "metric string, value double")
 
 
 @register(
     "stream_stream_join",
     # the matched set is DATA-determined: an INNER interval join under
-    # availableNow over time-ordered chunks emits exactly the batch-join
+    # a bounded replay over time-ordered chunks emits exactly the batch-join
     # pairs (state eviction only drops a view once the watermark proves no
     # future purchase can reach back to it — views needed by chunk-2
     # purchases are at most 6h older than them and the chunk-1 watermark
@@ -910,69 +694,47 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     "purchase tally.",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = _work_dir("exact_spark_ssjoin_")
-    try:
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "ev_d3_m2t_c2",
-            lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=2, with_type=True),
-            chunks=2,
+    src = _staged_source(
+        spark,
+        sf_dir,
+        "ev_d3_m2t_c2",
+        lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=2, with_type=True),
+    )
+    views = (
+        read_replay_stream(spark, src)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_id"),
+            F.col("timestamp").alias("view_ts"),
         )
-        schema = io.read_parquet_memo(spark, src).schema
-
-        def reader():
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        views = (
-            reader()
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("timestamp").alias("view_ts"),
-            )
-            .withWatermark("view_ts", "1 hour")
+        .withWatermark("view_ts", "1 hour")
+    )
+    purchases = (
+        read_replay_stream(spark, src)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("timestamp").alias("purchase_ts"),
+            F.col("value").alias("amount"),
         )
-        purchases = (
-            reader()
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("timestamp").alias("purchase_ts"),
-                F.col("value").alias("amount"),
-            )
-            .withWatermark("purchase_ts", "1 hour")
-        )
-        joined = purchases.join(
-            views,
-            (F.col("p_user") == F.col("v_user"))
-            & (F.col("purchase_ts") >= F.col("view_ts"))
-            & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 6 HOURS")),
-        )
-        with _state_partitions(spark):
-            q = (
-                joined.writeStream.format("memory")
-                .queryName("ssjoin_out")
-                .outputMode("append")
-                .option("checkpointLocation", str(work / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        return spark.sql(
-            "SELECT p_user AS user_id, "
-            "count(DISTINCT purchase_id) AS n_attributed_purchases, "
-            "count(*) AS n_view_purchase_pairs "
-            "FROM ssjoin_out GROUP BY p_user ORDER BY p_user"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    joined = purchases.join(
+        views,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 6 HOURS")),
+    )
+    out = run_bounded(joined, stateful=True)
+    return spark.sql(
+        "SELECT p_user AS user_id, "
+        "count(DISTINCT purchase_id) AS n_attributed_purchases, "
+        "count(*) AS n_view_purchase_pairs "
+        "FROM {out} GROUP BY p_user ORDER BY p_user",
+        out=out,
+    )
 
 
 @register(
@@ -1021,43 +783,23 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is the closed-session table (user, bounds, event count).",
 )
 def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = _work_dir("exact_spark_sswn_")
-    try:
-        src = _staged_source(
-            spark,
-            sf_dir,
-            "ev_d3_m5_c2",
-            lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=5),
-            chunks=2,
+    src = _staged_source(
+        spark, sf_dir, "ev_d3_m5_c2", lambda: _bounded_events(spark, sf_dir, days=3.0, user_mod=5)
+    )
+    sess = (
+        read_replay_stream(spark, src)
+        .withWatermark("timestamp", "30 minutes")
+        .groupBy(
+            F.col("user_id"),
+            F.session_window("timestamp", "4 hours").alias("sw"),
         )
-        schema = io.read_parquet_memo(spark, src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sess = (
-            stream.withWatermark("timestamp", "30 minutes")
-            .groupBy(
-                F.col("user_id"),
-                F.session_window("timestamp", "4 hours").alias("sw"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        with _state_partitions(spark):
-            q = (
-                sess.writeStream.format("memory")
-                .queryName("sswn_out")
-                .outputMode("append")
-                .option("checkpointLocation", str(work / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        return spark.sql(
-            "SELECT user_id, CAST(sw.start AS LONG) AS session_start, "
-            "CAST(sw.end AS LONG) AS session_end, n_events "
-            "FROM sswn_out ORDER BY user_id, session_start"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    out = run_bounded(sess, stateful=True)
+    return spark.sql(
+        "SELECT user_id, CAST(sw.start AS LONG) AS session_start, "
+        "CAST(sw.end AS LONG) AS session_end, n_events "
+        "FROM {out} ORDER BY user_id, session_start",
+        out=out,
+    )
+

@@ -496,7 +496,7 @@ def test_state_partitions_restores_on_error(spark):
     later shuffle in the session)."""
     import pytest
 
-    from exact_spark.streaming import _state_partitions
+    from exact_spark.streaming.replay import _state_partitions
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     with pytest.raises(RuntimeError):
@@ -513,7 +513,7 @@ def test_state_partitions_restores_under_concurrency(spark):
     only a lock around save/set/restore keeps the value."""
     import threading
 
-    from exact_spark.streaming import _state_partitions
+    from exact_spark.streaming.replay import _state_partitions
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -698,27 +698,23 @@ def test_stream_stream_join_matches_across_chunks_near_horizon(
 
 
 def test_stream_ckpt_dir_env(monkeypatch, tmp_path):
-    """SPARK_GRAFT_CKPT_DIR points the streaming demos' per-run scratch
+    """SPARK_GRAFT_CKPT_DIR points the bounded queries' per-run scratch
     (checkpoint dirs) at a caller-chosen filesystem; unset, tempfile's
-    default is used unchanged."""
-    from exact_spark.streaming import _work_dir
-
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path / "ck"))
-    d = _work_dir("exact_spark_test_")
-    assert d.parent == tmp_path / "ck"
-    assert d.is_dir()
-
-    monkeypatch.delenv("SPARK_GRAFT_CKPT_DIR")
+    default is used unchanged. The dir is removed on exit."""
     import tempfile
 
-    d2 = _work_dir("exact_spark_test_")
-    try:
-        assert str(d2.parent) == tempfile.gettempdir()
-    finally:
-        import shutil
+    from exact_spark.streaming.replay import _work_dir
 
-        shutil.rmtree(d2, ignore_errors=True)
-        shutil.rmtree(d, ignore_errors=True)
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path / "ck"))
+    with _work_dir("exact_spark_test_") as d:
+        assert d.parent == tmp_path / "ck"
+        assert d.is_dir()
+    assert not d.exists()
+
+    monkeypatch.delenv("SPARK_GRAFT_CKPT_DIR")
+    with _work_dir("exact_spark_test_") as d2:
+        assert str(d2.parent) == tempfile.gettempdir()
+    assert not d2.exists()
 
 
 def test_sweep_stale_work_dirs_is_age_gated(monkeypatch, tmp_path):
@@ -728,7 +724,7 @@ def test_sweep_stale_work_dirs_is_age_gated(monkeypatch, tmp_path):
     import os
     import time
 
-    from exact_spark import streaming
+    from exact_spark.streaming import replay
 
     monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(tmp_path))
     stale, live, foreign = (
@@ -738,10 +734,105 @@ def test_sweep_stale_work_dirs_is_age_gated(monkeypatch, tmp_path):
     )
     for d in (stale, live, foreign):
         (d / "offsets").mkdir(parents=True)
-    old = time.time() - streaming._WORK_DIR_STALE_MIN_AGE_S - 60
+    old = time.time() - replay._WORK_DIR_STALE_MIN_AGE_S - 60
     for d in (stale, foreign):
         os.utime(d, (old, old))
 
-    streaming.sweep_stale_work_dirs()
+    replay.sweep_stale_work_dirs()
     assert not stale.exists()
     assert live.exists() and foreign.exists()
+
+
+def test_state_partitions_held_only_across_start(spark, sf_dir):
+    """A stateful demo sizes its state store only while its query starts:
+    the query keeps _DEMO_STATE_PARTITIONS state partitions, yet once it is
+    making progress a query planned on another thread reads the session's
+    own shuffle-partition count, not the demo's."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from exact_spark.registry import REGISTRY
+    from exact_spark.streaming.replay import _DEMO_STATE_PARTITIONS
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != str(_DEMO_STATE_PARTITIONS)
+    seen, store_partitions = [], set()
+    with ThreadPoolExecutor(1) as pool:
+        demo = pool.submit(REGISTRY["stream_windowed_counts"].fn, spark, sf_dir)
+        while not demo.done():
+            progress = [p for q in spark.streams.active if (p := q.lastProgress)]
+            if progress:
+                seen.append(spark.conf.get(key))
+                store_partitions |= {
+                    op["numShufflePartitions"] for p in progress for op in p["stateOperators"]
+                }
+            time.sleep(0.01)
+        assert demo.result(timeout=300).collect()
+    assert seen and set(seen) == {before}
+    assert store_partitions == {_DEMO_STATE_PARTITIONS}
+
+
+def test_demos_leave_nothing_behind_and_run_concurrently(spark, sf_dir):
+    """Two threads run the same stateful demo at once: each gets exactly
+    the rows of a serial run (per-run sink names and checkpoints), and
+    neither leaves a view or a running query in the session. The demos
+    run in a fresh session of the same application, tuned like the
+    shared one, so views that other tests left cannot hide a leak."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from exact_spark.registry import REGISTRY
+    from exact_spark.session import DEFAULT_CONF
+
+    fresh = spark.newSession()
+    for k, v in {**DEFAULT_CONF, "spark.sql.shuffle.partitions":
+                 spark.conf.get("spark.sql.shuffle.partitions")}.items():
+        fresh.conf.set(k, v)
+
+    def state():
+        return fresh.catalog.listTables(), fresh.streams.active
+
+    def run():
+        return REGISTRY["stream_windowed_counts"].fn(fresh, sf_dir).collect()
+
+    before = state()
+    serial = run()
+    assert serial
+    with ThreadPoolExecutor(2) as pool:
+        both = [f.result(timeout=300) for f in [pool.submit(run) for _ in range(2)]]
+    assert both == [serial, serial]
+    assert state() == before
+
+
+def _slow(batch_df, batch_id):
+    import time
+
+    time.sleep(2)
+
+
+def _boom(batch_df, batch_id):
+    raise RuntimeError("boom")
+
+
+@pytest.mark.parametrize(
+    "sink,timeout_s,error,match",
+    [(_slow, 0.5, TimeoutError, "ran past"),
+     (_boom, 120.0, StreamingQueryException, "boom")],
+    ids=["timeout", "sink_raises"],
+)
+def test_bounded_runner_failure_stops_and_cleans_up(spark, tmp_path, monkeypatch,
+                                                    sink, timeout_s, error, match):
+    """A bounded query that runs past its timeout or whose sink raises makes
+    the runner raise; no query is left running and no checkpoint is left."""
+    from exact_spark.streaming.replay import read_replay_stream, run_bounded, stage_stream_source
+
+    src = str(tmp_path / "src")
+    stage_stream_source(
+        spark.range(20).select(F.timestamp_seconds(F.col("id")).alias("timestamp")), src, 2
+    )
+    ckpt = tmp_path / "ck"
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", str(ckpt))
+    with pytest.raises(error, match=match):
+        run_bounded(read_replay_stream(spark, src), sink, timeout_s=timeout_s)
+    assert spark.streams.active == []
+    assert list(ckpt.iterdir()) == []
